@@ -1,6 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, UnaryExecNode, UnionExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledJoin}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -94,6 +97,22 @@ object Ivfadc {
     * skipped (and the extra |q|×nlist ranking pass with it). */
   val MaxPruneQueries = 256
 
+  /** Input splits of a planned code scan, read off the physical plan
+    * without running it: file scans report their split count, a union
+    * sums its children, a broadcast join counts its streamed side and a
+    * shuffled join (the oversized-tier fallback) its shuffle partitions.
+    * A leaf that is not a file scan (an in-memory relation) counts zero,
+    * so such a scan always takes the parallelism floor in [[search]]. */
+  private def scanSplits(p: SparkPlan): Int = p match {
+    case f: FileSourceScanExec => f.inputRDD.getNumPartitions
+    case u: UnionExec => u.children.map(scanSplits).sum
+    case j: BroadcastHashJoinExec =>
+      scanSplits(if (j.buildSide == BuildRight) j.left else j.right)
+    case j: ShuffledJoin => j.conf.numShufflePartitions
+    case u: UnaryExecNode => scanSplits(u.child)
+    case _ => 0
+  }
+
   /** Probe `nprobe` cells per query, ADC-score only those cells' codes,
     * keep top k per query by approximate distance.
     *
@@ -168,22 +187,19 @@ object Ivfadc {
       } else (withAdcTab(probes), encoded)
     // Scan-side parallelism FLOOR (guide §8: cheap bytes, expensive
     // compute). ADC scoring does |probes-in-cell| table-scores per code
-    // row, so byte-sized splits of a small-to-mid base under-parallelize
-    // the whole screen: the cell-layout write is AQE-coalesced into ~one
-    // file, and the 20× scale probe measured the entire scan+score+top-k
-    // stage as ONE 117 s task (8-vs-32-core ratio 0.99). Below the byte
-    // threshold, a round-robin repartition of the code rows (tiny bytes —
-    // ~12 B/vector) costs one code-sized shuffle and restores full-core
-    // scoring; above it the file layout already yields ≥ cores splits and
-    // a per-search corpus shuffle would be absurd, so the floor
-    // self-deactivates. Threshold scales with the session's core count;
-    // override via SPARK_GRAFT_SEARCH_SCAN_FLOOR_BYTES for deployments
-    // whose compute-per-byte profile differs.
-    val floorBytes = sys.env.get("SPARK_GRAFT_SEARCH_SCAN_FLOOR_BYTES").map(BigInt(_))
-      .getOrElse(BigInt(spark.sparkContext.defaultParallelism) * (64L << 20))
+    // row, so a scan with fewer splits than cores under-parallelizes the
+    // whole screen: the 20× scale probe measured an AQE-coalesced
+    // one-file layout's entire scan+score+top-k stage as ONE 117 s task
+    // (8-vs-32-core ratio 0.99). When the planned scan has fewer input
+    // splits than the session has cores, a round-robin repartition of
+    // the code rows (tiny bytes — ~12 B/vector) costs one code-sized
+    // shuffle and restores full-core scoring. The maintained indexes
+    // write their code layouts with at least that many files, so their
+    // serves skip the shuffle; the batch x30/x31 path, which encodes
+    // in-plan from a few corpus files, keeps it.
+    val par = spark.sparkContext.defaultParallelism
     val scanPar =
-      if (scanSide.queryExecution.optimizedPlan.stats.sizeInBytes < floorBytes)
-        scanSide.repartition(spark.sparkContext.defaultParallelism)
+      if (scanSplits(scanSide.queryExecution.sparkPlan) < par) scanSide.repartition(par)
       else scanSide
     val scored = scanPar.join(broadcast(joinSide), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))

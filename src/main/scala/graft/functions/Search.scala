@@ -134,22 +134,35 @@ object Search {
   }
 
   /** [[rrfFuse]] with query_id carried through: a BATCH of queries fuses
-    * in one plan — the join keys on (query_id, id) and the top-k window
-    * partitions by query_id, so rank lists can never interleave across
-    * queries and there are no per-query driver round-trips. Inputs:
-    * `(query_id, id, r_lex)` / `(query_id, id, r_dense)`, both per-query
-    * top-depth heaps. Output ordered (query_id, rrf desc, id); for one
-    * query it is row-identical to [[rrfFuse]]. */
+    * in one plan, and rank lists can never interleave across queries.
+    * Inputs: `(query_id, id, r_lex)` / `(query_id, id, r_dense)`, both
+    * per-query top-depth heaps with at most one row per (query_id, id).
+    *
+    * The outer join is a union of the two sides folded by (query_id,
+    * id) — the same rows as a full join, since each side holds a pair at
+    * most once. Unlike a full join, whose output partitioning Spark
+    * cannot name, the union keeps a partitioning both sides share: when
+    * both arrive hash-partitioned by query_id (the maintained hybrid
+    * path), the fold and the top-k window run without any exchange.
+    * Output: per-query top-k, sorted (rrf desc, id) within each query
+    * and grouped by query — NOT in global query_id order, which would
+    * cost a range exchange and its sampling job; for one query it is
+    * row-identical to [[rrfFuse]]. */
   def rrfFuseByQuery(lex: DataFrame, dense: DataFrame, k: Int): DataFrame = {
     val rrf = (r: Column) =>
       coalesce(lit(1.0) / (lit(RrfK) + r), lit(0.0))
-    lex.join(dense, Seq("query_id", "id"), "full")
+    val none = lit(null).cast("int")
+    lex.select(col("query_id"), col("id"), col("r_lex"), none.as("r_dense"))
+      .unionByName(dense.select(col("query_id"), col("id"), none.as("r_lex"),
+        col("r_dense")))
+      .groupBy(col("query_id"), col("id"))
+      .agg(max(col("r_lex")).as("r_lex"), max(col("r_dense")).as("r_dense"))
       .select(col("query_id"), col("id"), col("r_lex"), col("r_dense"),
         round(rrf(col("r_lex")) + rrf(col("r_dense")), 6).as("rrf"))
       .withColumn("_rk", row_number().over(
         Window.partitionBy("query_id").orderBy(col("rrf").desc, col("id"))))
       .filter(col("_rk") <= k).drop("_rk")
-      .orderBy(col("query_id"), col("rrf").desc, col("id"))
+      .sortWithinPartitions(col("query_id"), col("rrf").desc, col("id"))
   }
 
   /** Max docs retained per posting list. Oversized terms keep their df /

@@ -126,6 +126,8 @@ case class TopKPairs(
         s"$prettyName requires a bigint id, got ${idExpr.dataType.catalogString}")
     else if (kExpr.dataType != IntegerType || !kExpr.foldable)
       TypeCheckResult.TypeCheckFailure(s"$prettyName requires a literal int k")
+    else if (kExpr.eval() == null)
+      TypeCheckResult.TypeCheckFailure(s"$prettyName requires a non-null k, got NULL")
     else if (k <= 0)
       TypeCheckResult.TypeCheckFailure(s"$prettyName requires k > 0, got $k")
     else TypeCheckResult.TypeCheckSuccess

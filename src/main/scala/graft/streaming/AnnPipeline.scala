@@ -106,14 +106,40 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     * (ScaleProbe `scanprune`). Applied at every O(corpus)/O(base) base
     * write (seed, retrain shadow, major fold, shadow major) — the
     * explicitly-scheduled moments that can afford one exchange; deltas
-    * stay small and unclustered. */
+    * stay small and unclustered.
+    *
+    * The base and delta layouts are written with [[codeFiles]] files, so
+    * a serve scans at least one file per core and [[Ivfadc.search]] skips
+    * its per-search round-robin repartition of the codes. Left to AQE,
+    * the cell exchange coalesced a small base into ONE file; hashing the
+    * cell itself into a fixed count left partitions empty (at nlist 8
+    * over 4 partitions, cells 0-7 hash to partitions 3,3,2,3,2,2,1,3).
+    * So cell c is routed through [[cellKeys]]`(c mod codeFiles)`: every
+    * cell still lives in exactly one partition, and the cells spread
+    * evenly over all of them. */
   private def cellClustered(codes: DataFrame): DataFrame =
-    codes.repartition(col("cell")).sortWithinPartitions("cell")
+    codes.repartition(codeFiles,
+        element_at(typedlit(cellKeys), pmod(col("cell"), lit(codeFiles)) + 1))
+      .sortWithinPartitions("cell")
+  private def codeFiles: Int = s.sparkContext.defaultParallelism
+  /** `cellKeys(j)` is an int key that Spark's hash partitioning sends to
+    * partition j of [[codeFiles]] (it places key x at
+    * pmod(murmur3(x, seed 42), n)). Should that function ever change,
+    * the layout only loses its balance, never a row. */
+  private lazy val cellKeys: Seq[Int] = (0 until codeFiles).map(j =>
+    Iterator.from(0).find(x => Math.floorMod(
+      org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(x, 42), codeFiles) == j).get)
 
   // sorted-base file sizing: [[Pipelines.BaseFileRecords]] (measured:
   // the 10M-row A/B showed ZERO skip benefit without the bound — one
   // default-layout file is one row group spanning every cell)
   private def baseFileRecords = Pipelines.BaseFileRecords
+  // base and delta codes are read with the schema their writers produce
+  // instead of inferring it: parquet schema inference is one Spark job
+  // per read, paid on every search. vec_id is declared bigint; a layout
+  // written from int ids reads widened.
+  private def readCodes(dir: String): DataFrame =
+    s.read.schema("vec_id BIGINT, cell INT, codes ARRAY<INT>").parquet(dir)
   private def stagingDir = s"$indexRoot/codes_staging"
   // the shadow retrain's build target: never served (prefix is not
   // codes_v), overwritten by the next retrain if a prepare crashes
@@ -551,7 +577,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
           .select("vec_id", "cell", "codes", "_tier", "_b"))
       else None
     (stagedLive.toSeq ++
-      tier.map(kd => s.read.parquet(dcodesDir(kd))
+      tier.map(kd => readCodes(dcodesDir(kd))
         .withColumn("_tier", lit(kd + 1L)).withColumn("_b", lit(0L))
         .select("vec_id", "cell", "codes", "_tier", "_b")))
       .reduceOption(_ unionByName _)
@@ -711,7 +737,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
               .filter(col("_graft_model_v") === lit(modelVersion.toLong))
               .withColumn("_tier", lit(Long.MaxValue))
               .withColumnRenamed("_graft_batch", "_b")
-              .select("vec_id", "cell", "codes", "_tier", "_b")))
+              .select("vec_id", "cell", "codes", "_tier", "_b")), codeFiles)
             .write.mode("overwrite").parquet(dcodesDir(newFloor))
         }
         fs.delete(new org.apache.hadoop.fs.Path(stagingDir), true)
@@ -839,7 +865,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     // no-base-shuffle topology (see flush's major branch — same shape,
     // tier only, no staged side) ----------
     val deltaSide = resolveNewest(
-      tier0.map(kd => s.read.parquet(dcodesDir(kd))
+      tier0.map(kd => readCodes(dcodesDir(kd))
           .withColumn("_tier", lit(kd + 1L)).withColumn("_b", lit(0L))
           .select("vec_id", "cell", "codes", "_tier", "_b"))
         .reduce(_ unionByName _))
@@ -848,7 +874,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
       if (tierD.oversized) { deltaFallbacks.incrementAndGet(); dIds }
       else broadcast(dIds)
     cellClustered(
-      s.read.parquet(codesDir(v0))
+      readCodes(codesDir(v0))
         .join(hinted, Seq("vec_id"), "left_anti")
         .unionByName(deltaSide.filter(col("cell") >= 0)))
       .write.mode("overwrite").option("maxRecordsPerFile", baseFileRecords).parquet(shadowDir)
@@ -1140,7 +1166,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
         if (deferMajor ||
             (maxDeltas > 0 && tier.size < maxDeltas && !tierFull.oversized)) {
           val kd = tier.lastOption.map(_ + 1).getOrElse(deltaFloor)
-          Pipelines.sizedForWrite(resolveNewest(staged))
+          Pipelines.sizedForWrite(resolveNewest(staged), codeFiles)
             .write.mode("overwrite").parquet(dcodesDir(kd))
         } else {
           // a tier past the broadcast bound forces the major EARLY (the
@@ -1168,7 +1194,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
           // anti-join removes their base rows, the cell >= 0 filter their
           // tombstone rows.
           val deltaSide = resolveNewest(
-            tier.map(kd => s.read.parquet(dcodesDir(kd))
+            tier.map(kd => readCodes(dcodesDir(kd))
                 .withColumn("_tier", lit(kd + 1L)).withColumn("_b", lit(0L))
                 .select("vec_id", "cell", "codes", "_tier", "_b"))
               .foldLeft(staged.select("vec_id", "cell", "codes", "_tier", "_b"))(
@@ -1180,7 +1206,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
               deltaFallbacks.incrementAndGet(); dIds
             } else broadcast(dIds)
           cellClustered(
-            s.read.parquet(codesDir(version))
+            readCodes(codesDir(version))
               .join(hinted, Seq("vec_id"), "left_anti")
               .unionByName(deltaSide.filter(col("cell") >= 0)))
             .write.mode("overwrite").option("maxRecordsPerFile", baseFileRecords).parquet(codesDir(version + 1))
@@ -1235,15 +1261,15 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   def currentCodes: DataFrame = currentCodesAt(captureSnap())
   private def currentCodesAt(sn: Snap): DataFrame = {
     val tier = listDeltaTier(sn.floor)
-    if (tier.isEmpty) s.read.parquet(codesDir(sn.v))
+    if (tier.isEmpty) readCodes(codesDir(sn.v))
     else {
       // each delta dir is already one-row-per-vec_id (resolved at its
       // flush), so the cross-delta fold is only needed when re-ingests
       // span windows — a single live delta serves with ZERO shuffle
       val dResolved =
-        if (tier.versions.size == 1) s.read.parquet(dcodesDir(tier.versions.head))
+        if (tier.versions.size == 1) readCodes(dcodesDir(tier.versions.head))
         else resolveNewest(
-          tier.versions.map(kd => s.read.parquet(dcodesDir(kd))
+          tier.versions.map(kd => readCodes(dcodesDir(kd))
               .withColumn("_tier", lit(kd + 1L)).withColumn("_b", lit(0L)))
             .reduce(_ unionByName _))
       // the anti-join id set keeps TOMBSTONE winners (they must mask the
@@ -1253,7 +1279,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
       val hinted =
         if (tier.oversized) { deltaFallbacks.incrementAndGet(); dIds }
         else broadcast(dIds)
-      s.read.parquet(codesDir(sn.v))
+      readCodes(codesDir(sn.v))
         .join(hinted, Seq("vec_id"), "left_anti")
         .unionByName(dResolved.filter(col("cell") >= 0))
     }

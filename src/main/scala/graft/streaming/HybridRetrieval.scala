@@ -8,45 +8,53 @@ import org.apache.spark.sql.functions._
   * reciprocal-rank fusion (Cormack et al. 2009) with both source
   * rankings read from stored indexes instead of per-session builds:
   *
-  *  - lexical: [[MaintainedTextIndex.search]] over the stored postings
+  *  - lexical: [[MaintainedTextIndex.rankMany]] over the stored postings
   *    (term-pruned scan, x32-exact BM25 arithmetic);
-  *  - dense: [[MaintainedAnnIndex.searchRerank]] over the stored PQ
-  *    codes (ADC shortlist + exact re-rank against the caller's raw
-  *    vectors).
+  *  - dense: [[MaintainedAnnIndex.search]] /
+  *    [[MaintainedAnnIndex.searchRerank]] over the stored PQ codes (ADC
+  *    shortlist, optionally with an exact re-rank against the caller's
+  *    raw vectors).
   *
-  * Both rankings are top-`depth` heaps — control-plane sized — so the
-  * fusion itself ([[graft.functions.Search.rrfFuse]], the identical x41
-  * arithmetic) is broadcast work; the corpus cost is exactly one
-  * term-pruned postings scan plus one ADC code scan, neither of which
-  * re-reads raw text or re-encodes vectors. This is the serving-path
-  * composition a production retrieval stack runs per query, which is
-  * why it must come from the maintained artifacts: at 100 TB nobody
-  * re-tokenizes the corpus or retrains a quantizer to answer a query. */
+  * Both rankings and the fusion run on ONE hash partitioning by
+  * query_id. The exchanges left in a batch serve are: the lexical side's
+  * hash exchange on query_id (every posting of the batch's terms, once),
+  * the dense top-k's exchange on query_id (O(queries·depth) rows after
+  * the map-side trim), and the dense probe ranking's small exchange over
+  * queries × centroids. The rank windows, the fusion fold
+  * ([[graft.functions.Search.rrfFuseByQuery]], the identical x41
+  * arithmetic) and the fused top-k reuse that partitioning. The corpus
+  * cost is one term-pruned postings scan plus one ADC code scan, neither
+  * of which re-reads raw text or re-encodes vectors. This is the
+  * serving-path composition a production retrieval stack runs per
+  * query, which is why it must come from the maintained artifacts: at
+  * 100 TB nobody re-tokenizes the corpus or retrains a quantizer to
+  * answer a query. */
 object HybridRetrieval {
 
   /** The lexical ranking every entry point fuses: per-query BM25
     * top-depth from the stored postings ([[MaintainedTextIndex
-    * .searchMany]] — ONE term-pruned scan for the whole batch), ranked
-    * by (bm25 desc, doc_id) within each query_id — the x41 lex
-    * transform with the rank window PARTITIONED BY QUERY, so a batch of
-    * queries can never interleave rank lists. */
+    * .rankMany]] — ONE term-pruned scan for the whole batch), ranked by
+    * (bm25 desc, doc_id) within each query_id — the x41 lex transform
+    * with the rank window PARTITIONED BY QUERY, so a batch of queries can
+    * never interleave rank lists. rankMany's output is already
+    * hash-partitioned by query_id, so this window adds no exchange. */
   private def lexRankedMany(text: MaintainedTextIndex, queries: DataFrame,
                             depth: Int,
                             knownTerms: Option[Seq[String]] = None): DataFrame =
-    text.searchMany(queries.select(col("query_id"), col("terms")), depth,
+    text.rankMany(queries.select(col("query_id"), col("terms")), depth,
       knownTerms)
       .select(col("query_id"), col("doc_id").as("id"),
         row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("bm25").desc, col("doc_id"))).as("r_lex"))
+          .orderBy(round(col("raw"), 4).desc, col("doc_id"))).as("r_lex"))
 
   /** RRF top-k for a BATCH of queries in ONE plan — the batch-serving
     * form: `queries` is `(query_id, terms array<string>, embedding)`;
     * each query's terms drive its lexical ranking and its embedding the
     * dense ADC+re-rank ranking (both rank windows partitioned by
     * query_id), fused per query by the x41 arithmetic. Output
-    * `(query_id, id, r_lex, r_dense, rrf)`, per-query top-k — ≡ a
-    * [[searchRrf]] loop (RoundThirteenSpec parity), with no per-query
-    * driver round-trips. */
+    * `(query_id, id, r_lex, r_dense, rrf)`, per-query top-k sorted
+    * (rrf desc, id) within each query — ≡ a [[searchRrf]] loop
+    * (RoundThirteenSpec parity), with no per-query driver round-trips. */
   def searchRrfMany(text: MaintainedTextIndex, ann: MaintainedAnnIndex,
                     corpus: DataFrame, queries: DataFrame,
                     k: Int = 10, depth: Int = graft.functions.Search.RrfDepth,
@@ -178,6 +186,32 @@ object HybridRetrieval {
       knownQueryCount = Some(1L), knownTerms = Some(terms)))
   }
 
+  /** Run two independent builds on two threads and wait for both. Both
+    * threads have stopped when this returns, however the wait ended — a
+    * build failure, an interrupt or a cancellation — so the caller's
+    * cleanup (closing the indexes releases the leases and deletes
+    * scratch roots) never races a build that is still writing. The first
+    * build failure propagates; an interrupt of the waiting thread
+    * propagates as InterruptedException once both builds are done. */
+  private[graft] def runBoth(a: () => Unit, b: () => Unit): Unit = {
+    import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val fa = pool.submit(new Runnable { def run(): Unit = a() })
+      val fb = pool.submit(new Runnable { def run(): Unit = b() })
+      try { fa.get(); fb.get() }
+      catch { case e: ExecutionException => throw e.getCause }
+    } finally {
+      pool.shutdown()
+      var interrupted = false
+      var stopped = false
+      while (!stopped)
+        try stopped = pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+  }
+
   /** x81 — the declared maintained-hybrid slice, the capstone of the
     * incremental-retrieval contract: build BOTH maintained pillars the
     * x79/x80 way (seed half, two live delta windows each), then answer
@@ -205,29 +239,15 @@ object HybridRetrieval {
       // other's idle cores (guide §2.6 "overlap independent jobs"); the
       // serve below starts only after both complete, so results are
       // byte-identical to the sequential build
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val tb = pool.submit(new Runnable { def run(): Unit = {
+      runBoth(() => {
         text.initIndex(docs.filter(pmod(col("doc_id"), lit(4)) < 2))
         text.ingestBatch(docs.filter(pmod(col("doc_id"), lit(4)) === 2), 0)(_ => ())
         text.ingestBatch(docs.filter(pmod(col("doc_id"), lit(4)) === 3), 1)(_ => ())
-      } })
-      val ab = pool.submit(new Runnable { def run(): Unit = {
+      }, () => {
         ann.initIndex(emb.filter(pmod(col("vec_id"), lit(4)) < 2))
         ann.ingestBatch(emb.filter(pmod(col("vec_id"), lit(4)) === 2), 0)(_ => ())
         ann.ingestBatch(emb.filter(pmod(col("vec_id"), lit(4)) === 3), 1)(_ => ())
-      } })
-      pool.shutdown()
-      // await BOTH futures even when the first throws (ADVICE r20): the
-      // finally below closes the indexes, and closing while the sibling
-      // thread is still mid-ingest would race the lease release / scratch
-      // deletion against live writes, turning one clean failure into a
-      // confusing secondary one
-      try { tb.get(); ab.get() }
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          try ab.get() catch { case _: Throwable => () }
-          throw e.getCause
-      }
+      })
       searchRrf(text, ann, emb, graft.functions.Search.QueryTerms,
         emb.filter(col("vec_id") === 0), k = 10, depth = 20, nprobe = 3)
     } finally { text.close(); ann.close() }

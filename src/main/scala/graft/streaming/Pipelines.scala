@@ -128,11 +128,14 @@ object Pipelines {
     * no job; for these delta-sized relations (projections/folds of
     * just-written parquet) it is file-size-derived. A join-inflated or
     * unknown estimate is capped so a bad guess degrades to at most 64
-    * write tasks, never thousands of files. */
-  private[graft] def sizedForWrite(df: org.apache.spark.sql.DataFrame)
+    * write tasks, never thousands of files. `minParts` raises the floor
+    * for layouts whose readers want a minimum split count (the ANN code
+    * deltas). */
+  private[graft] def sizedForWrite(df: org.apache.spark.sql.DataFrame,
+                                   minParts: Int = 1)
       : org.apache.spark.sql.DataFrame = {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val parts = (est / DeltaWriteTargetBytes).min(BigInt(63)).toInt + 1
+    val parts = ((est / DeltaWriteTargetBytes).min(BigInt(63)).toInt + 1).max(minParts)
     if (sys.env.contains("SPARK_GRAFT_DEBUG_WRITE_SIZING"))
       // scalastyle:off println
       println(s"[sizedForWrite] est=$est parts=$parts")
@@ -670,13 +673,8 @@ object Pipelines {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cached = batch.persist()
-        try {
-          val (ok, dead) = CoreOps.splitMalformed(cached, "key")
-          ok.select(col("key"), col("value")).write.mode("append").parquet(s"$outDir/main")
-          dead.select(col("value")).write.mode("append").parquet(s"$outDir/dead_letter")
-        } finally { cached.unpersist(); () }
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        GraftSystem.keyedParquetHandler("", outDir, batch, id)
       }
       .start()
     q.awaitTermination()

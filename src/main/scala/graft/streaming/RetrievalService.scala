@@ -148,17 +148,37 @@ final class RetrievalService(s: SparkSession, textRoot: String, annRoot: String,
   /** [[search]] for a BATCH of queries in ONE plan — the serving tier's
     * form: `queries` is `(query_id, terms array<string>, text)`; each
     * query's text embeds through the same [[embedOf]] the corpus went
-    * through, and the whole batch fuses with rank windows partitioned by
-    * query_id ([[HybridRetrieval.searchRrfAdcMany]]) — one term-pruned
-    * postings scan, one code scan, no per-query driver round-trips.
-    * Output carries query_id; per query it equals a [[search]] loop. */
+    * through, and the batch fuses per query
+    * ([[HybridRetrieval.searchRrfAdcMany]]). Output carries query_id;
+    * per query it equals a [[search]] loop, sorted (rrf desc, id) within
+    * each query and grouped by query.
+    *
+    * A request-sized batch (at most [[graft.functions.Ivfadc
+    * .MaxPruneQueries]] rows) is resolved on the driver ONCE — no job
+    * for a local relation — and passed down with its exact term union
+    * and query count, so neither pillar runs a pre-flight job. What
+    * remains is one term-pruned postings scan with one hash exchange on
+    * query_id, the dense probe ranking, one code scan whose top-k
+    * exchanges on query_id too, and the fusion, which runs on that
+    * shared partitioning without another exchange. A larger batch takes
+    * the self-checking plan. */
   def searchBatch(queries: DataFrame, kTop: Int = 10,
                   depth: Int = graft.functions.Search.RrfDepth,
-                  nprobe: Int = 8): DataFrame =
-    HybridRetrieval.searchRrfAdcMany(text, ann,
-      queries.select(col("query_id"), col("terms"),
-        embedOf(col("text")).as("embedding")),
-      kTop, depth, nprobe)
+                  nprobe: Int = 8): DataFrame = {
+    val q = queries.select(col("query_id"), col("terms"), col("text"))
+    val rows = q.limit(graft.functions.Ivfadc.MaxPruneQueries + 1).collect()
+    def embedded(df: DataFrame) = df.select(col("query_id"), col("terms"),
+      embedOf(col("text")).as("embedding"))
+    if (rows.length > graft.functions.Ivfadc.MaxPruneQueries)
+      HybridRetrieval.searchRrfAdcMany(text, ann, embedded(q), kTop, depth, nprobe)
+    else {
+      import scala.jdk.CollectionConverters._
+      val terms = rows.toSeq.flatMap(r => Option(r.getSeq[String](1)).getOrElse(Nil))
+      HybridRetrieval.searchRrfAdcMany(text, ann,
+        embedded(s.createDataFrame(rows.toSeq.asJava, q.schema)), kTop, depth, nprobe,
+        knownQueryCount = Some(rows.length.toLong), knownTerms = Some(terms))
+    }
+  }
 
   /** TAKEDOWN across both pillars (the removal-request operation,
     * [[CurationService.takedown]]'s retrieval twin): the documents leave

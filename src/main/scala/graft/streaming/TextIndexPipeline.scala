@@ -79,6 +79,14 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
   private val ddlPrefix = "ddl_v"
   private def dpostDir(k: Int) = s"$indexRoot/$dpostPrefix$k"
   private def ddlDir(k: Int) = s"$indexRoot/$ddlPrefix$k"
+  // the stored layouts are read with the schema their writers produce
+  // ([[tokenize]] and the folds) instead of inferring it: parquet schema
+  // inference is one Spark job per read, paid on every search. Ids are
+  // declared bigint; a layout written from int ids reads widened.
+  private def readPostings(dir: String): DataFrame =
+    s.read.schema("term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT").parquet(dir)
+  private def readLengths(dir: String): DataFrame =
+    s.read.schema("doc_id BIGINT, dl BIGINT").parquet(dir)
   private def postStaging = s"$indexRoot/post_staging"
   private def dlStaging = s"$indexRoot/dl_staging"
   private val floorMarker = "_graft_delta_floor"
@@ -345,7 +353,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
           // the pair's COMMIT stamp and an ops-visible record of the
           // window.)
           val winners = tier.versions.map(k2 =>
-              s.read.parquet(ddlDir(k2)).withColumn("_tier", lit(k2.toLong)))
+              readLengths(ddlDir(k2)).withColumn("_tier", lit(k2.toLong)))
             .reduce(_ unionByName _)
             .groupBy("doc_id").agg(max(struct(col("_tier"), col("dl"))).as("_w"))
           // ADD the winners' live lengths; SUBTRACT the base contribution
@@ -370,7 +378,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
           val both =
             if (bn == 0L) addB
             else addB.unionByName(
-              s.read.parquet(dlDir(v)).join(hinted, Seq("doc_id"))
+              readLengths(dlDir(v)).join(hinted, Seq("doc_id"))
                 .select(lit(0L).as("an"), lit(0L).as("asum"),
                   lit(1L).as("sn"), col("dl").as("ssum")))
           val row = both.agg(
@@ -547,7 +555,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
         // removes their base rows, dWin's dl >= 0 filter their tombstone
         // rows, and the postings join on the winner tier finds none.
         val dWin = (tier.versions.map(k =>
-            s.read.parquet(ddlDir(k)).withColumn("_tier", lit(k + 1L))) :+
+            readLengths(ddlDir(k)).withColumn("_tier", lit(k + 1L))) :+
           rdl.withColumn("_tier", lit(Long.MaxValue)))
           .reduce(_ unionByName _)
           .groupBy("doc_id")
@@ -561,17 +569,17 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
         def hinted(df: DataFrame): DataFrame =
           if (guardOk) broadcast(df) else df
         val dPost = (tier.versions.map(k =>
-            s.read.parquet(dpostDir(k)).withColumn("_tier", lit(k + 1L))) :+
+            readPostings(dpostDir(k)).withColumn("_tier", lit(k + 1L))) :+
           rpost.withColumn("_tier", lit(Long.MaxValue)))
           .reduce(_ unionByName _)
           .join(hinted(dWin.select(col("doc_id"), col("_tier"))),
             Seq("doc_id", "_tier"))
           .select(col("term"), col("doc_id"), col("tf"), col("dl"))
         val dIds = dWin.select(col("doc_id"))
-        val newPost = s.read.parquet(postDir(version))
+        val newPost = readPostings(postDir(version))
           .join(hinted(dIds), Seq("doc_id"), "left_anti")
           .unionByName(dPost)
-        val newDl = s.read.parquet(dlDir(version))
+        val newDl = readLengths(dlDir(version))
           .join(hinted(dIds), Seq("doc_id"), "left_anti")
           .unionByName(dWin.filter(col("dl") >= 0)
             .select(col("doc_id"), col("dl")))
@@ -653,7 +661,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     // broadcast under the byte-bound guard; the base's only exchange is
     // the term-clustered layout write.
     val dWin = tier0.map(k =>
-        s.read.parquet(ddlDir(k)).withColumn("_tier", lit(k + 1L)))
+        readLengths(ddlDir(k)).withColumn("_tier", lit(k + 1L)))
       .reduce(_ unionByName _)
       .groupBy("doc_id")
       .agg(max(struct(col("_tier"), col("dl"))).as("_w"))
@@ -662,13 +670,13 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     def hinted(df: DataFrame): DataFrame =
       if (tierD.oversized) df else broadcast(df)
     val dPost = tier0.map(k =>
-        s.read.parquet(dpostDir(k)).withColumn("_tier", lit(k + 1L)))
+        readPostings(dpostDir(k)).withColumn("_tier", lit(k + 1L)))
       .reduce(_ unionByName _)
       .join(hinted(dWin.select(col("doc_id"), col("_tier"))),
         Seq("doc_id", "_tier"))
       .select(col("term"), col("doc_id"), col("tf"), col("dl"))
     val dIds = dWin.select(col("doc_id"))
-    s.read.parquet(postDir(v0))
+    readPostings(postDir(v0))
       .join(hinted(dIds), Seq("doc_id"), "left_anti")
       .unionByName(dPost)
       .repartition(col("term")).sortWithinPartitions("term")
@@ -680,7 +688,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     // through the rename
     val obs = org.apache.spark.sql.Observation()
     observeDlStats(
-      s.read.parquet(dlDir(v0))
+      readLengths(dlDir(v0))
         .join(hinted(dIds), Seq("doc_id"), "left_anti")
         .unionByName(dWin.filter(col("dl") >= 0)
           .select(col("doc_id"), col("dl"))), obs)
@@ -732,11 +740,11 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     // non-empty list prunes every scan at the source
     def pruned(df: DataFrame) =
       if (terms.isEmpty) df else df.filter(col("term").isin(terms: _*))
-    val base = pruned(s.read.parquet(postDir(v)))
+    val base = pruned(readPostings(postDir(v)))
     if (tier.isEmpty) base
     else {
       val dWinners = tier.versions.map(k =>
-          s.read.parquet(ddlDir(k))
+          readLengths(ddlDir(k))
             .select(col("doc_id"), lit(k.toLong).as("_tier")))
         .reduce(_ unionByName _)
         .groupBy("doc_id").agg(max(col("_tier")).as("_tier"))
@@ -744,7 +752,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
         if (tier.oversized) { deltaFallbacks.incrementAndGet(); dWinners }
         else broadcast(dWinners)
       val deltaPost = tier.versions.map(k =>
-          pruned(s.read.parquet(dpostDir(k)))
+          pruned(readPostings(dpostDir(k)))
             .withColumn("_tier", lit(k.toLong)))
         .reduce(_ unionByName _)
         .join(hinted, Seq("doc_id", "_tier"))
@@ -812,80 +820,83 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
   /** [[search]] for a BATCH of queries in ONE plan — the multi-query
     * serving form: `queries` is `(query_id, terms array<string>)`, the
     * output is per-query BM25 top-k `(query_id, doc_id, bm25,
-    * n_matched)`, row-identical per query to a [[search]] loop (the
-    * parity RoundThirteenSpec pins). One postings scan pruned to the
-    * UNION of all query term sets, one ≤|terms|-row df collect for the
-    * whole batch — no per-query driver round-trips; the per-query score
-    * folds each document's matched-term contributions in the query's own
+    * n_matched)` ordered (query_id, score desc, doc_id), row-identical
+    * per query to a [[search]] loop (the parity RoundThirteenSpec pins).
+    * The batch is scored by [[rankMany]]; the one exchange this form
+    * adds over it is the range sort that gives the global order (the
+    * hybrid path, which fuses per query, skips it). */
+  def searchMany(queries: DataFrame, k: Int): DataFrame =
+    rankMany(queries, k, None)
+      // order by the UNROUNDED score, exactly like search's orderBy —
+      // ordering by the rounded bm25 would diverge from the per-query
+      // loop whenever two raw scores round to the same 4-dp value
+      .orderBy(col("query_id"), col("raw").desc, col("doc_id"))
+      .select(col("query_id"), col("doc_id"),
+        round(col("raw"), 4).as("bm25"), col("n_matched"))
+
+  /** Per-query BM25 top-k `(query_id, doc_id, raw, n_matched)` with the
+    * UNROUNDED score, hash-partitioned by query_id and in no particular
+    * order — the shape the hybrid fusion consumes without re-shuffling.
+    *
+    * One postings scan, pruned to the UNION of the batch's term sets,
+    * meets the query terms in a broadcast join; ONE hash exchange on
+    * query_id then carries every later step: per-term df is a window
+    * count over (query_id, term position) — each query holds every live
+    * posting of its terms, so the count is the term's document
+    * frequency, with no separate aggregate-and-broadcast round; the
+    * per-doc fold and the top-k window cluster on query_id too. The fold
+    * sums each document's matched-term contributions in the query's own
     * term order (IEEE: the single-query left-to-right sum skips absent
     * terms as exact `+ 0.0` no-ops, so the two association orders are
-    * bit-identical), and the top-k cutoff ranks by the UNROUNDED score
-    * exactly as [[search]]'s orderBy does. */
-  def searchMany(queries: DataFrame, k: Int): DataFrame =
-    searchMany(queries, k, None)
-
-  /** [[searchMany]] with the union of the batch's term sets supplied by
-    * the caller (`knownTerms` — the [[graft.functions.Ivfadc.search]]
-    * `knownQueryCount` pattern): skips the pre-flight distinct-collect
-    * job. The caller asserts the contract — a term list that under-covers
-    * the batch's terms silently drops those terms from the pruned scan,
-    * and an empty query relation returns an empty result instead of the
-    * loud pre-flight error, so pass it only where the terms are known
-    * exactly (the single-query hybrid entry points, whose `typedlit`
-    * terms ARE the query's terms). private[streaming] (ADVICE r20): the
-    * contract is enforced by the callers, so the overload is not part of
-    * the public index API — external callers get the self-checking
-    * two-arg form. */
-  private[streaming] def searchMany(queries: DataFrame, k: Int,
-                 knownTerms: Option[Seq[String]]): DataFrame = {
+    * bit-identical); a repeated query term contributes once per
+    * occurrence and counts once in n_matched, as in [[search]].
+    *
+    * `knownTerms` is the union of the batch's term sets when the caller
+    * knows it (the [[graft.functions.Ivfadc.search]] `knownQueryCount`
+    * pattern): it skips the pre-flight distinct-collect job. The caller
+    * asserts the contract — a list that under-covers the batch's terms
+    * silently drops those terms from the pruned scan, and an empty query
+    * relation returns an empty result instead of the loud pre-flight
+    * error — so only the hybrid entry points, which know their batch
+    * exactly, pass it; the public [[searchMany]] self-checks. */
+  private[streaming] def rankMany(queries: DataFrame, k: Int,
+                                  knownTerms: Option[Seq[String]]): DataFrame = {
     val sn = captureSnap()
     requireSeeded("searchMany", sn.v)
     import org.apache.spark.sql.expressions.Window
     val qt = queries.select(col("query_id"),
-      posexplode(col("terms")).as(Seq("tidx", "term"))).persist()
-    try {
-      // control-plane: the union of the batch's term sets (one collect
-      // per BATCH, the df-map shape — not per query) — or the caller's
-      // known list, at zero jobs
-      val terms = knownTerms.map(_.distinct).getOrElse(
-        qt.select(col("term")).distinct()
-          .collect().map(_.getString(0)).toSeq)
-      // covers BOTH degenerate inputs without a second pre-flight job:
-      // posexplode yields nothing for an empty query relation AND for
-      // all-empty term arrays — the single-query entry points
-      // (searchRrf/searchRrfAdc) route their 0-row contract violation
-      // here, so the message must name that case too
-      require(terms.nonEmpty,
-        "searchMany needs at least one query term: the query relation is " +
-          "empty or every terms array is — the single-query hybrid entry " +
-          "points (searchRrf/searchRrfAdc) require exactly ONE query row " +
-          "with non-empty terms")
-      val tier = listDeltaTier(sn.floor)
-      val p = livePostings(terms, tier, sn.v)
-      val dfRel = p.groupBy("term").agg(count(lit(1)).as("df"))
-      val (nDocs, sumDl) = liveStats(tier, sn.v)
-      val avgdl = sumDl.toDouble / nDocs
-      val scored = p.join(broadcast(dfRel), Seq("term"))
-        .select(col("term"), col("doc_id"),
-          graft.functions.Search.termScore(col("tf"), col("dl"),
-            lit(nDocs), col("df"), lit(avgdl)).as("contrib"))
-        .join(broadcast(qt), Seq("term"))
-      scored.groupBy(col("query_id"), col("doc_id"))
-        .agg(array_sort(collect_list(struct(col("tidx"), col("contrib")))).as("cs"),
-          countDistinct(col("term")).cast("int").as("n_matched"))
-        .select(col("query_id"), col("doc_id"), col("n_matched"),
-          aggregate(expr("transform(cs, c -> c.contrib)"),
-            lit(0.0), (a, x) => a + x).as("raw"))
-        .withColumn("_rk", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("raw").desc, col("doc_id"))))
-        .filter(col("_rk") <= k)
-        // order by the UNROUNDED score, exactly like search's orderBy —
-        // ordering by the rounded bm25 would diverge from the per-query
-        // loop whenever two raw scores round to the same 4-dp value
-        .orderBy(col("query_id"), col("raw").desc, col("doc_id"))
-        .select(col("query_id"), col("doc_id"),
-          round(col("raw"), 4).as("bm25"), col("n_matched"))
-    } finally qt.unpersist()
+      posexplode(col("terms")).as(Seq("tidx", "term")))
+    val terms = knownTerms.map(_.distinct).getOrElse(
+      qt.select(col("term")).distinct().collect().map(_.getString(0)).toSeq)
+    // covers BOTH degenerate inputs without a second pre-flight job:
+    // posexplode yields nothing for an empty query relation AND for
+    // all-empty term arrays — the single-query entry points
+    // (searchRrf/searchRrfAdc) route their 0-row contract violation
+    // here, so the message must name that case too
+    require(terms.nonEmpty,
+      "searchMany needs at least one query term: the query relation is " +
+        "empty or every terms array is — the single-query hybrid entry " +
+        "points (searchRrf/searchRrfAdc) require exactly ONE query row " +
+        "with non-empty terms")
+    val tier = listDeltaTier(sn.floor)
+    val (nDocs, sumDl) = liveStats(tier, sn.v)
+    val avgdl = sumDl.toDouble / nDocs
+    val hits = livePostings(terms, tier, sn.v)
+      .join(broadcast(qt), Seq("term"))
+      .repartition(col("query_id"))
+    hits.select(col("query_id"), col("doc_id"),
+        struct(col("tidx"), graft.functions.Search.termScore(col("tf"), col("dl"),
+          lit(nDocs), count(lit(1)).over(Window.partitionBy("query_id", "tidx")),
+          lit(avgdl)).as("contrib"), col("term")).as("c"))
+      .groupBy(col("query_id"), col("doc_id"))
+      .agg(array_sort(collect_list(col("c"))).as("cs"))
+      .select(col("query_id"), col("doc_id"),
+        size(array_distinct(col("cs.term"))).as("n_matched"),
+        aggregate(col("cs.contrib"), lit(0.0), (a, x) => a + x).as("raw"))
+      .withColumn("_rk", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("raw").desc, col("doc_id"))))
+      .filter(col("_rk") <= k)
+      .select(col("query_id"), col("doc_id"), col("raw"), col("n_matched"))
   }
 }
 

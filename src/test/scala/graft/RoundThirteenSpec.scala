@@ -449,28 +449,64 @@ class RoundThirteenSpec extends SparkSpec {
 
   test("retrieval service: searchBatch ≡ a search loop, and takedown removes a doc from both pillars") {
     val sparkS = spark; import sparkS.implicits._
-    val svc = new graft.streaming.RetrievalService(spark,
-      tmp("rsvc_t"), tmp("rsvc_a"), flushEvery = 1)
-    try {
-      val docs = (0L until 24L).map(i =>
-        (i, s"term$i alpha " + (1 to 20).map(j => s"w${(i * 7 + j) % 40}").mkString(" ")))
-        .toDF("doc_id", "text")
-      svc.initIndex(docs)
-      // batched serve ≡ per-query loop (different terms AND texts)
-      val qs = Seq((100L, Seq("alpha", "w3"), "alpha w3 probe"),
-        (200L, Seq("w11", "w12"), "w11 w12 probe"))
-      val got = svc.searchBatch(qs.toDF("query_id", "terms", "text"), kTop = 5,
-          depth = 10, nprobe = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
+    import scala.jdk.CollectionConverters._
+    def served(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
         .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+    // batched serve ≡ per-query loop (different terms AND texts; one
+    // query repeats a term, which contributes once per occurrence)
+    def assertBatchParity(svc: graft.streaming.RetrievalService,
+                          qs: Seq[(Long, Seq[String], String)]) = {
+      val got = served(svc.searchBatch(qs.toDF("query_id", "terms", "text"), kTop = 5,
+        depth = 10, nprobe = 4))
       val expect = qs.map { case (qid, ts, tx) =>
         qid -> svc.search(ts, tx, kTop = 5, depth = 10, nprobe = 4)
           .collect().map(r => (r.getLong(0), r.getDouble(3))).toSeq }.toMap
       assert(got == expect, s"searchBatch must equal the search loop:\n$got\nvs\n$expect")
+      got
+    }
+    val docs = (0L until 24L).map(i =>
+      (i, s"term$i alpha " + (1 to 20).map(j => s"w${(i * 7 + j) % 40}").mkString(" ")))
+    val qs = Seq((100L, Seq("alpha", "w3"), "alpha w3 probe"),
+      (200L, Seq("w11", "w12"), "w11 w12 probe"),
+      (300L, Seq("w5", "w5", "term9"), "w5 w5 term9 probe"))
+    val svc = new graft.streaming.RetrievalService(spark,
+      tmp("rsvc_t"), tmp("rsvc_a"), flushEvery = 1)
+    try {
+      svc.initIndex(docs.toDF("doc_id", "text"))
+      assertBatchParity(svc, qs)
+      // plan guard on a warm call: the serve runs from one query_id
+      // partitioning in at most 12 Spark jobs, and the maintained code
+      // layout needs no per-search round-robin repartition
+      val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobGroups.add(Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("serve-guard", "warm searchBatch")
+        val warm = svc.searchBatch(qs.toDF("query_id", "terms", "text"))
+        warm.collect()
+        // a marker job: once the listener has seen it, every earlier job
+        // event has been delivered
+        sc.setJobGroup("serve-guard-end", "marker")
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.currentTimeMillis() + 30000
+        while (!jobGroups.contains("serve-guard-end") && System.currentTimeMillis() < deadline)
+          Thread.sleep(10)
+        val jobs = jobGroups.asScala.count(_ == "serve-guard")
+        assert(jobs > 0 && jobs <= 12, s"a warm searchBatch ran $jobs Spark jobs (want <= 12)")
+        val plan = warm.queryExecution.executedPlan.toString
+        assert(!plan.contains("RoundRobinPartitioning"),
+          s"the serve plan must not round-robin the code scan:\n$plan")
+      } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
       // takedown doc 3: gone from BOTH pillars' serving from the flush
       assert(svc.search(Seq("term3"), "probe", kTop = 5)
         .collect().map(_.getLong(0)).contains(3L))
-      svc.takedown(docs.filter(col("doc_id") === 3L), 0L)
+      svc.takedown(docs.toDF("doc_id", "text").filter(col("doc_id") === 3L), 0L)
       assert(svc.stats("retrieval_text")("n_deleted") == 1L &&
         svc.stats("retrieval_ann")("n_deleted") == 1L)
       assert(!svc.search(Seq("term3"), "probe", kTop = 5)
@@ -479,6 +515,45 @@ class RoundThirteenSpec extends SparkSpec {
       assert(svc.ann.currentCodes.filter(col("vec_id") === 3L).count() == 0L,
         "a taken-down doc must leave the dense code store")
     } finally svc.close()
+    // a LIVE delta tier: two ingested batches (one re-ingests doc 9 with
+    // new text) fold into one delta, a takedown of doc 4 into a second —
+    // the batched serve crosses the tier union and tombstones exactly
+    // like the loop
+    val tiered = new graft.streaming.RetrievalService(spark,
+      tmp("rsvc_dt"), tmp("rsvc_da"), flushEvery = 2, maxDeltas = 2)
+    try {
+      tiered.initIndex(docs.take(16).toDF("doc_id", "text"))
+      tiered.processBatch(docs.slice(16, 20).toDF("doc_id", "text"), 0)(_ => ())
+      tiered.processBatch((docs.slice(20, 24) :+ (9L -> "w5 beta term9 w11 w12"))
+        .toDF("doc_id", "text"), 1)(_ => ())
+      tiered.takedown(Seq(4L).toDF("doc_id"), 3)
+      assert(tiered.text.stats("delta_versions") == 2L &&
+        tiered.ann.stats("delta_versions") == 2L)
+      val beta = assertBatchParity(tiered,
+        Seq(qs.last, (400L, Seq("beta", "term4"), "beta term4 probe")))(400L)
+      assert(beta.map(_._1).contains(9L), "the re-ingested text must retrieve its doc")
+      assert(!beta.map(_._1).contains(4L), "a taken-down doc must not come back")
+    } finally tiered.close()
+  }
+
+  test("runBoth: an interrupted wait still lets both builds finish before it returns") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val started = new java.util.concurrent.CountDownLatch(1)
+    @volatile var outcome: Throwable = null
+    @volatile var slowDoneAtReturn = false
+    val caller = new Thread(() => {
+      try graft.streaming.HybridRetrieval.runBoth(
+        () => { started.countDown(); Thread.sleep(1500); slowDone.set(true) },
+        () => ())
+      catch { case e: Throwable => outcome = e }
+      slowDoneAtReturn = slowDone.get()
+    })
+    caller.start()
+    started.await()
+    caller.interrupt()
+    caller.join(30000)
+    assert(outcome.isInstanceOf[InterruptedException], s"want the interrupt back, got $outcome")
+    assert(slowDoneAtReturn, "runBoth returned while a build was still running")
   }
 
   test("text searchMany ≡ a search loop (shared scan, per-query fold order)") {
@@ -492,7 +567,7 @@ class RoundThirteenSpec extends SparkSpec {
       idx.initIndex(docs.filter(pmod(col("doc_id"), lit(2)) === 0))
       idx.ingestBatch(docs.filter(pmod(col("doc_id"), lit(2)) === 1), 0)(_ => ())
       val termsByQ = Seq(7L -> Seq("hash", "join"), 9L -> Seq("vector"),
-        11L -> Seq("join", "hash", "window"))
+        11L -> Seq("join", "hash", "window"), 13L -> Seq("hash", "hash"))
       val got = idx.searchMany(termsByQ.toDF("query_id", "terms"), 15)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))

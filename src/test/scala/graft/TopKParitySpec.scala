@@ -64,4 +64,15 @@ class TopKParitySpec extends SparkSpec {
     val df = rows.toDF("g", "s", "id").repartition(16)
     for (k <- Seq(1, 5, 37)) assertParity(df, k)
   }
+
+  test("top_k_pairs rejects a null k at analysis with a message naming k") {
+    val sparkS = spark
+    import sparkS.implicits._
+    graft.plans.GraftExtensions.register(spark)
+    val df = Seq((1L, 0.5, 11L)).toDF("g", "s", "id")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.groupBy(col("g")).agg(call_function("top_k_pairs", col("s"), col("id"),
+        lit(null).cast("int"))))
+    assert(e.getMessage.contains("non-null k"), e.getMessage)
+  }
 }
