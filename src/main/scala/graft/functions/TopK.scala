@@ -74,8 +74,11 @@ object TopK {
     * map-side partial pass trims every partition to O(k) per group, so
     * the exchange ships O(groups·k) instead of the full scored relation,
     * and there is no per-partition reduce-side sort of the corpus-scale
-    * input (guide §2.3/§2.4). Output columns: (groupCol, idCol, scoreCol,
-    * rk) — the window form's exact schema and values.
+    * input (guide §2.3/§2.4). Output columns: exactly (groupCol, idCol,
+    * scoreCol, rk), with the window form's values. Every other input
+    * column is DROPPED — unlike the window form, which keeps them; a
+    * caller that needs payload columns joins them back on
+    * (groupCol, idCol).
     */
   def perGroup(df: DataFrame, groupCol: String, scoreCol: String,
                idCol: String, k: Int): DataFrame = {

@@ -1,12 +1,9 @@
 package graft.ops
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.ArrayNode
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import scala.jdk.CollectionConverters._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Reference-parity core column operations.
   *
@@ -21,32 +18,19 @@ import scala.jdk.CollectionConverters._
   */
 object CoreOps {
 
-  /** Jackson mapper, one per executor (thread-safe after config). */
-  @transient private lazy val mapper = new ObjectMapper()
-
   /** JVM-side key derivation, byte-parity with the reference's `dml->msg`
     * (core.clj:13-22): parse the DML JSON, take the `"id"` object, sort its
     * entries by field name, flatten to `[k1, v1, k2, v2, ...]`, serialize as
     * compact JSON. Scalar types are preserved exactly (ints stay ints,
-    * strings stay quoted) because we re-emit the parsed `JsonNode`s.
+    * strings stay quoted) because the parsed `JsonNode`s are re-emitted.
     *
     * Returns null for malformed input or a missing/non-object `id` — the
-    * caller routes those to the dead-letter side (O13).
+    * caller routes those to the dead-letter side (O13). The one
+    * implementation of the rule is [[graft.plans.DmlKey.derive]]; this is
+    * its `String` form.
     */
-  def dmlKeyJvm(dml: String): String = {
-    if (dml == null) return null
-    try {
-      val root = mapper.readTree(dml)
-      val id = root.get("id")
-      if (id == null || !id.isObject) return null
-      val arr: ArrayNode = mapper.createArrayNode()
-      id.fieldNames().asScala.toSeq.sorted.foreach { name =>
-        arr.add(name)
-        arr.add(id.get(name).deepCopy[JsonNode]())
-      }
-      mapper.writeValueAsString(arr)
-    } catch { case _: Exception => null }
-  }
+  def dmlKeyJvm(dml: String): String =
+    Option(graft.plans.DmlKey.derive(UTF8String.fromString(dml))).map(_.toString).orNull
 
   /** Column form of [[dmlKeyJvm]]. A Scala UDF (not a Python UDF — stays in
     * the JVM, no serialization boundary); hot-path alternative would be a

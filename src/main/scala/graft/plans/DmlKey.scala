@@ -17,8 +17,8 @@ import scala.jdk.CollectionConverters._
   * Versus the Scala UDF: operates on UTF8String bytes directly (jackson
   * parses the byte array — no String round-trip through the UDF
   * encoder boundary) and generates a direct static call inside whole-stage
-  * codegen. Semantics are identical to CoreOps.dmlKeyJvm (DmlKeySpec
-  * asserts parity property-wise).
+  * codegen. [[DmlKey.derive]] is the one implementation of the rule:
+  * CoreOps.dmlKeyJvm and its UDF form call it.
   */
 case class DmlKey(child: Expression) extends UnaryExpression {
 

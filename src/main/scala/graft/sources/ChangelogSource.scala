@@ -18,6 +18,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
+import scala.jdk.CollectionConverters._
 
 /** `graft-changelog` — a DataSource V2 micro-batch streaming source that
   * replays a parquet-backed changelog in monotone offset ranges.
@@ -40,7 +42,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * value when a single group exceeds it; size executor memory for
   * max(maxRowsPerBatch, largest row group), see
   * [[ChangelogMicroBatchStream.latestOffset]]),
-  * `numPartitions` (range splits per batch, default 4).
+  * `numPartitions` (range splits per batch, default 4). Files are reached
+  * through the session's Hadoop conf plus these options (see
+  * [[ChangelogConfig]]).
   *
   * Emitted schema: (offset BIGINT, value STRING).
   */
@@ -128,9 +132,8 @@ object ChangelogSource {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
     val root = new Path(cfg.path)
-    val conf = new Configuration()
+    val conf = cfg.hadoopConf.value
     val fs = FileSystem.get(root.toUri, conf)
     val statuses =
       if (fs.getFileStatus(root).isDirectory)
@@ -223,8 +226,17 @@ object ChangelogSource {
   }
 }
 
+/** The source's options plus the Hadoop conf every file access uses: the
+  * driver's footer reads and the executors' cursors. [[ChangelogTable]]
+  * takes it from the session once, so `spark.hadoop.*`, session Hadoop
+  * settings (filesystem implementations, credentials) and the read's own
+  * options reach the source; a config built by hand defaults to the
+  * Hadoop defaults. Readers copy it per cursor, never mutate it. */
 final case class ChangelogConfig(path: String, offsetColumn: String, valueColumn: String,
-                                 maxRowsPerBatch: Long, numPartitions: Int) extends Serializable
+                                 maxRowsPerBatch: Long, numPartitions: Int,
+                                 hadoopConf: SerializableConfiguration =
+                                   new SerializableConfiguration(new Configuration()))
+    extends Serializable
 
 class ChangelogTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
   private val cfg = ChangelogConfig(
@@ -233,7 +245,9 @@ class ChangelogTable(options: CaseInsensitiveStringMap) extends Table with Suppo
     offsetColumn = options.getOrDefault("offsetColumn", "event_id"),
     valueColumn = options.getOrDefault("valueColumn", "props"),
     maxRowsPerBatch = options.getLong("maxRowsPerBatch", Long.MaxValue),
-    numPartitions = options.getInt("numPartitions", 4))
+    numPartitions = options.getInt("numPartitions", 4),
+    hadoopConf = new SerializableConfiguration(SparkSession.active.sessionState
+      .newHadoopConfWithOptions(options.asCaseSensitiveMap().asScala.toMap)))
   require(cfg.numPartitions >= 1,
     s"graft-changelog numPartitions must be >= 1, got ${cfg.numPartitions}")
   require(cfg.maxRowsPerBatch >= 1,
@@ -507,7 +521,7 @@ class ChangelogPartitionReader(cfg: ChangelogConfig, lo: Long, hi: Long,
     * rows. */
   private final class VectorizedCursor(meta: ChangelogSource.FileMeta) extends Cursor {
     private val reader: VectorizedParquetRecordReader = {
-      val conf = new Configuration()
+      val conf = new Configuration(cfg.hadoopConf.value)
       val requested = StructType(Seq(
         StructField(cfg.offsetColumn, LongType, nullable = true),
         StructField(cfg.valueColumn, StringType)))
@@ -550,6 +564,7 @@ class ChangelogPartitionReader(cfg: ChangelogConfig, lo: Long, hi: Long,
   private final class GroupCursor(meta: ChangelogSource.FileMeta, filterable: Boolean) extends Cursor {
     @annotation.nowarn("cat=deprecation")
     private val builder = ParquetReader.builder(new GroupReadSupport(), new Path(meta.path))
+      .withConf(new Configuration(cfg.hadoopConf.value))
     private val reader: ParquetReader[Group] =
       (if (filterable) builder.withFilter(FilterCompat.get(rangePredicate)) else builder).build()
     override def nextRow(): InternalRow = {

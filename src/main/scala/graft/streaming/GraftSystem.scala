@@ -1,8 +1,21 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptContext, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 import graft.streaming.Pipelines.Ccd
 
 /** O19 — system assembly (reference system.clj:15-29 + main.clj:58-62):
@@ -12,9 +25,12 @@ import graft.streaming.Pipelines.Ccd
   * `dataSourceFor(queue)` supplies the per-queue streaming DataFrame with a
   * `value` payload column (in production: the graft-changelog source or a
   * Kafka topic; in tests: a MemoryStream). Each activated queue gets its
-  * own checkpointed query writing keyed output under `outRoot/<queue>/main`
-  * with malformed payloads dead-lettered — the EP3 hot path
-  * (jms_publisher.clj:138-194) as one declarative pipeline per queue.
+  * own checkpointed query — the EP3 hot path (jms_publisher.clj:138-194).
+  * With the default handler ([[GraftSystem.keyedParquetHandler]]) every
+  * micro-batch is ONE Spark job: each task routes keyed rows to
+  * `outRoot/<queue>/main` and malformed payloads to
+  * `outRoot/<queue>/dead_letter`, and the job's `commitJob` publishes
+  * both sides; a failed batch is aborted and adds to neither.
   *
   * Each queue query is supervised (cubic-backoff restarts); when
   * `maxRestartsPerQueue` consecutive restarts are exhausted the system
@@ -182,16 +198,118 @@ object GraftSystem {
   /** The reference EP3 transform: DML envelope → derived key. */
   val dmlTransform: DataFrame => DataFrame = Pipelines.dmlTransform(_, "value")
 
-  /** The reference EP3 sink: keyed main + dead-letter parquet under the
-    * queue's output dir (jms_publisher.clj:138-194 as one declarative
-    * pipeline per queue). */
+  /** The reference EP3 sink (jms_publisher.clj:138-194: derive the key,
+    * publish the record once) as ONE Spark job per micro-batch, with no
+    * persist. Each task routes its rows by the derived key: a row with a
+    * key goes to a `dir/main` file (key, value), a row with a null key to
+    * a `dir/dead_letter` file (value). Both writers come from
+    * `ParquetFileFormat.prepareWrite` and stage their files under ONE
+    * file-commit protocol over `dir`; the commit point is `commitJob`,
+    * which moves every task's `main/` and `dead_letter/` files in and
+    * writes the one `dir/_SUCCESS` marker. A failed task aborts its
+    * attempt and a failed job aborts the whole staging tree
+    * (`dir/_temporary`), so a failed batch adds nothing to either side.
+    * Partition 0 always opens both writers, so after every batch both
+    * directories exist and read back with their schemas even when one
+    * side got no rows (what a parquet append does for an empty side).
+    * Cached DataFrames over the output directories are not refreshed. */
   val keyedParquetHandler: (String, String, DataFrame, Long) => Unit =
-    (_, dir, batch, _) => {
-      val cached = batch.persist()
-      try {
-        val (ok, dead) = graft.ops.CoreOps.splitMalformed(cached, "key")
-        ok.select(col("key"), col("value")).write.mode("append").parquet(s"$dir/main")
-        dead.select(col("value")).write.mode("append").parquet(s"$dir/dead_letter")
-      } finally { cached.unpersist(); () }
+    (_, dir, batch, _) => routedWrite(batch.select(col("key"), col("value")), dir)
+
+  /** Writes `keyed` = (key, value) to `dir/main` and `dir/dead_letter` in
+    * one job under one commit (see [[keyedParquetHandler]]). */
+  private def routedWrite(keyed: DataFrame, dir: String): Unit = {
+    val spark = keyed.sparkSession
+    val qe = keyed.queryExecution
+    val mainSchema = StructType(keyed.schema.map(_.copy(nullable = true)))
+    val deadSchema = StructType(Seq(mainSchema("value")))
+    val valueType = deadSchema.head.dataType
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    // one Hadoop job per side: the parquet write support reads its schema
+    // from the job conf, so the two writers cannot share one
+    def prepare(schema: StructType): (Job, OutputWriterFactory) = {
+      val job = Job.getInstance(hadoopConf)
+      job.setOutputKeyClass(classOf[Void])
+      job.setOutputValueClass(classOf[InternalRow])
+      FileOutputFormat.setOutputPath(job, new Path(dir))
+      (job, new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema))
     }
+    val (mainJob, mainFactory) = prepare(mainSchema)
+    val (deadJob, deadFactory) = prepare(deadSchema)
+    val committer = FileCommitProtocol.instantiate(
+      spark.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID().toString, dir)
+    val mainConf = new SerializableConfiguration(mainJob.getConfiguration)
+    val deadConf = new SerializableConfiguration(deadJob.getConfiguration)
+    val trackerId = new java.text.SimpleDateFormat("yyyyMMddHHmmss", java.util.Locale.US)
+      .format(new java.util.Date())
+    SQLExecution.withNewExecutionId(qe, Some(s"keyed sink $dir")) {
+      val computed = qe.toRdd
+      // an empty batch still writes partition 0's two empty files
+      val rdd = if (computed.partitions.nonEmpty) computed
+        else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+      committer.setupJob(mainJob)
+      try {
+        val commits = spark.sparkContext.runJob(rdd,
+          (ctx: TaskContext, rows: Iterator[InternalRow]) => {
+            // the Hadoop task identity both writers and the committer share
+            val jobId = new JobID(trackerId, ctx.stageId())
+            val attempt = new TaskAttemptID(
+              new TaskID(jobId, TaskType.MAP, ctx.partitionId()), ctx.attemptNumber())
+            def context(c: SerializableConfiguration): TaskAttemptContext = {
+              val conf = c.value
+              conf.set("mapreduce.job.id", jobId.toString)
+              conf.set("mapreduce.task.id", attempt.getTaskID.toString)
+              conf.set("mapreduce.task.attempt.id", attempt.toString)
+              conf.setBoolean("mapreduce.task.ismap", true)
+              conf.setInt("mapreduce.task.partition", 0)
+              new TaskAttemptContextImpl(conf, attempt)
+            }
+            val mainCtx = context(mainConf)
+            val deadCtx = context(deadConf)
+            committer.setupTask(mainCtx)
+            def open(sub: String, f: OutputWriterFactory, s: StructType,
+                     c: TaskAttemptContext): OutputWriter =
+              f.newInstance(committer.newTaskTempFile(mainCtx, Some(sub),
+                FileNameSpec("", "-c000" + f.getFileExtension(c))), s, c)
+            var main: OutputWriter = null
+            var dead: OutputWriter = null
+            // closes both writers, the second also when the first fails
+            def closeWriters(): Unit = {
+              val (m, d) = (main, dead)
+              main = null; dead = null
+              try { if (m != null) m.close() } finally { if (d != null) d.close() }
+            }
+            try {
+              if (ctx.partitionId() == 0) {
+                main = open("main", mainFactory, mainSchema, mainCtx)
+                dead = open("dead_letter", deadFactory, deadSchema, deadCtx)
+              }
+              val deadRow = new GenericInternalRow(1)
+              rows.foreach { r =>
+                if (r.isNullAt(0)) {
+                  if (dead == null) dead = open("dead_letter", deadFactory, deadSchema, deadCtx)
+                  deadRow.update(0, r.get(1, valueType))
+                  dead.write(deadRow)
+                } else {
+                  if (main == null) main = open("main", mainFactory, mainSchema, mainCtx)
+                  main.write(r)
+                }
+              }
+              closeWriters()
+              committer.commitTask(mainCtx)
+            } catch { case t: Throwable =>
+              try closeWriters() catch { case s: Throwable => t.addSuppressed(s) }
+              committer.abortTask(mainCtx)
+              throw t
+            }
+          })
+        commits.foreach(committer.onTaskCommit)
+        committer.commitJob(mainJob, commits.toSeq)
+      } catch { case t: Throwable =>
+        committer.abortJob(mainJob)
+        throw t
+      }
+    }
+  }
 }

@@ -662,11 +662,14 @@ object Pipelines {
   }
 
   /** Run the data-plane pipeline from a streaming source to parquet sinks
-    * (main + dead-letter), checkpointed. Delivery is at-least-once (a batch
-    * retried after a partial append can duplicate rows) — the reference's
-    * semantics exactly (no-ack redelivery, jms_publisher.clj:173-176);
-    * downstream compaction (O2) absorbs duplicates by construction.
-    * Uses foreachBatch to split valid/malformed in one pass per batch. */
+    * (main + dead-letter), checkpointed. Each micro-batch is ONE Spark job:
+    * [[GraftSystem.keyedParquetHandler]] routes valid and malformed rows
+    * in a single pass and commits both sides in one job commit, so a
+    * failed batch adds to neither. Delivery is at-least-once (a batch
+    * whose output committed but whose offsets did not is replayed and
+    * appended again) — the reference's semantics exactly (no-ack
+    * redelivery, jms_publisher.clj:173-176); downstream compaction (O2)
+    * absorbs duplicates by construction. */
   def runDmlPipeline(src: DataFrame, outDir: String, checkpointDir: String,
                      trigger: org.apache.spark.sql.streaming.Trigger): Unit = {
     val q = dmlTransform(src).writeStream

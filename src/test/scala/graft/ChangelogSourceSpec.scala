@@ -270,6 +270,23 @@ class ChangelogSourceSpec extends SparkSpec {
     assert(k == "[\"offset\",0]")
   }
 
+  test("the source reaches files through the session's Hadoop conf (a scheme only it names)") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.graftfs.impl", classOf[GraftSchemeFs].getName)
+    hc.setBoolean("fs.graftfs.impl.disable.cache", true)
+    try {
+      val df = spark.read.format("graft-changelog")
+        .option("path", s"graftfs:$eventsPath")
+        .option("offsetColumn", "event_id").option("valueColumn", "props")
+        .load()
+      assert(df.count() == 1000)
+      assert(df.agg(min("offset"), max("offset")).collect()(0).toSeq == Seq(0L, 999L))
+    } finally {
+      hc.unset("fs.graftfs.impl")
+      hc.unset("fs.graftfs.impl.disable.cache")
+    }
+  }
+
   test("a null offset inside a file fails loudly, never silently mis-filters") {
     // footer stats only prove SOME non-null offset exists; a row-level null
     // must throw (the vectorized path would otherwise read an undefined
@@ -290,4 +307,11 @@ class ChangelogSourceSpec extends SparkSpec {
     assert(messages.exists(_.contains("null value in offset column")),
       s"expected the loud null-offset error, got: $messages")
   }
+}
+
+/** The local filesystem under its own scheme, `graftfs:`: a path on it
+  * opens only through a Hadoop conf that names the implementation. */
+class GraftSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
+  override def getScheme: String = "graftfs"
 }

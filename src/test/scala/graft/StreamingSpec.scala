@@ -4,8 +4,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.Pipelines
+import graft.streaming.{GraftSystem, Pipelines}
 import graft.streaming.Pipelines.Ccd
+import scala.jdk.CollectionConverters._
 
 /** Streaming-semantics tests (SURVEY.md §5.2.3): compaction, dead-letter
   * routing, event-time windows — the behaviors the reference left untested
@@ -136,6 +137,121 @@ class StreamingSpec extends SparkSpec {
     // resume from the same checkpoint: offsets already committed, no new rows
     Pipelines.runDmlPipeline(in.toDF(), out, ckpt, Trigger.AvailableNow())
     assert(sparkS.read.parquet(s"$out/main").count() == 1)
+  }
+
+  /** DML payloads: `good` rows derive a key, `bad` rows are dead-lettered. */
+  private def dmlRows(good: Int, bad: Int): Seq[String] =
+    (0 until good).map(i => s"""{"id":{"b":$i,"a":"x$i"},"type":"insert","table":"t","data":{}}""") ++
+      (0 until bad).map(i => if (i % 2 == 0) s"NOT JSON $i" else s"""{"id":$i,"type":"delete"}""")
+
+  /** Keyed batch as the sink receives it, spread over `parts` partitions. */
+  private def keyedBatch(rows: Seq[String], parts: Int): org.apache.spark.sql.DataFrame = {
+    val sparkS = spark
+    import sparkS.implicits._
+    Pipelines.dmlTransform(sparkS.sparkContext.parallelize(rows, parts).toDF("value"))
+  }
+
+  test("routed sink: a one-sided batch still leaves both sides readable with their schemas") {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val mainSchema = StructType(Seq(StructField("key", StringType), StructField("value", StringType)))
+    val deadSchema = StructType(Seq(StructField("value", StringType)))
+    val allValid = Files.createTempDirectory("routed_valid").toString
+    GraftSystem.keyedParquetHandler("", allValid, keyedBatch(dmlRows(6, 0), 3), 0L)
+    val vDead = spark.read.parquet(s"$allValid/dead_letter")
+    assert(vDead.schema == deadSchema && vDead.count() == 0)
+    assert(spark.read.parquet(s"$allValid/main").count() == 6)
+    val allBad = Files.createTempDirectory("routed_bad").toString
+    GraftSystem.keyedParquetHandler("", allBad, keyedBatch(dmlRows(0, 5), 3), 0L)
+    val bMain = spark.read.parquet(s"$allBad/main")
+    assert(bMain.schema == mainSchema && bMain.count() == 0)
+    assert(spark.read.parquet(s"$allBad/dead_letter").count() == 5)
+  }
+
+  test("routed sink: a mixed batch equals the two-write split on both sides") {
+    val rows = dmlRows(40, 9)
+    val routed = Files.createTempDirectory("routed_mixed").toString
+    GraftSystem.keyedParquetHandler("", routed, keyedBatch(rows, 4), 0L)
+    // the split the routed write replaces: one filtered append per side
+    val split = Files.createTempDirectory("split_mixed").toString
+    val (ok, dead) = graft.ops.CoreOps.splitMalformed(keyedBatch(rows, 4), "key")
+    ok.select(col("key"), col("value")).write.mode("append").parquet(s"$split/main")
+    dead.select(col("value")).write.mode("append").parquet(s"$split/dead_letter")
+    Seq("main", "dead_letter").foreach { side =>
+      val got = spark.read.parquet(s"$routed/$side")
+      val want = spark.read.parquet(s"$split/$side")
+      assert(got.schema == want.schema, side)
+      assert(got.collect().map(_.toString).sorted.toSeq ==
+        want.collect().map(_.toString).sorted.toSeq, side)
+    }
+    assert(spark.read.parquet(s"$routed/main").count() == 40)
+  }
+
+  test("routed sink: a keyed micro-batch runs exactly one Spark job") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+    val out = Files.createTempDirectory("routed_jobs").toString
+    val ckpt = Files.createTempDirectory("routed_jobs_ck").toString
+    val in = MemoryStream[String]
+    in.addData(dmlRows(20, 3))
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobGroups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = sparkS.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val q = Pipelines.dmlTransform(in.toDF()).writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          GraftSystem.keyedParquetHandler("", out, b, id)
+        }
+        .start()
+      q.awaitTermination()
+      // the stream tags its jobs with its run id; a marker job drains the
+      // listener bus of every earlier job event
+      sc.setJobGroup("routed-jobs-end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobGroups.contains("routed-jobs-end") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      val batches = q.recentProgress.count(_.numInputRows > 0)
+      val jobs = jobGroups.asScala.count(_ == q.runId.toString)
+      assert(batches == 1 && jobs == 1, s"$batches keyed batch(es) ran $jobs Spark jobs (want 1 and 1)")
+      assert(sparkS.read.parquet(s"$out/main").count() == 20)
+      assert(sparkS.read.parquet(s"$out/dead_letter").count() == 3)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  test("routed sink: a failed batch leaves no new file and no _temporary") {
+    val out = Files.createTempDirectory("routed_fail").toString
+    GraftSystem.keyedParquetHandler("", out, keyedBatch(dmlRows(6, 2), 2), 0L)
+    def listing(): Seq[String] = {
+      val root = java.nio.file.Paths.get(out)
+      Files.walk(root).iterator().asScala.map(root.relativize(_).toString).toSeq.sorted
+    }
+    val before = listing()
+    // the last of four partitions throws, but only once the other three
+    // have committed their tasks: the job abort must also drop their output
+    val poisoned = udf { (v: String) =>
+      if (v == "POISON") {
+        val committed = java.nio.file.Paths.get(out, "_temporary", "0")
+        val deadline = System.currentTimeMillis() + 30000
+        def done = Option(committed.toFile.list()).exists(_.count(_.startsWith("task_")) >= 3)
+        while (!done && System.currentTimeMillis() < deadline) Thread.sleep(10)
+        throw new IllegalStateException("poisoned row")
+      }
+      v
+    }
+    val batch = keyedBatch(dmlRows(6, 1) :+ "POISON", 4).withColumn("value", poisoned(col("value")))
+    val err = intercept[Exception](GraftSystem.keyedParquetHandler("", out, batch, 1L))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("poisoned row"))), err.toString)
+    assert(listing() == before)
+    assert(!listing().exists(_.contains("_temporary")))
   }
 
   test("event-time tumbling window (D18): streaming result equals batch date_trunc form") {
