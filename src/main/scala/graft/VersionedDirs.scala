@@ -1,13 +1,15 @@
 package graft
 
 /** Restart-safe version discovery for `<prefix><N>`-style versioned
-  * artifact directories — the shared convention of the maintained dedup
-  * indexes (`index_v<N>`, `sig_v<N>`/`tg_v<N>`, delta tiers,
-  * [[graft.streaming.Pipelines.MaintainedDedupIndex]]) and the stored
-  * DSIR models (`v=<N>`, [[graft.functions.Sampling.saveDsirModel]]):
-  * the latest complete version is whatever the directory listing says,
-  * never an in-memory pointer, so a restarted process resumes where the
-  * last writer left off.
+  * artifact directories — the shared convention of the maintained
+  * indexes' [[graft.streaming.TieredStore]] (base and delta relations)
+  * and the stored DSIR models (`v=<N>`,
+  * [[graft.functions.Sampling.saveDsirModel]]): the latest complete
+  * version is whatever the directory listing says, never an in-memory
+  * pointer, so a restarted process resumes where the last writer left
+  * off. For a maintained index's BASE versions this is only half of the
+  * commit rule: the store also requires the floor marker, written last,
+  * on the primary relation.
   *
   * "Complete" means COMMITTED, not merely present: a crash mid-write
   * leaves a torn directory holding only `_temporary/` (no readable

@@ -68,8 +68,9 @@ import org.apache.spark.sql.functions._
   * constructor value only governs the seed — with `nlistOverride` as
   * the pin for callers that manage sizing themselves.
   *
-  * Single-writer per root, enforced by the shared [[Pipelines.WriterLease]];
-  * in-process mutators serialize on the per-root lock. */
+  * Codes versions, floors, the delta tier, the writer lease, snapshots and
+  * retention are the [[TieredStore]]'s; the model binding is this
+  * class's. In-process mutators serialize on the per-root lock. */
 final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
                                flushEvery: Int,
                                nlist: Int = 8, m: Int = 8, k: Int = 16,
@@ -82,13 +83,9 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
                                keepVersions: Int = 2,
                                readOnly: Boolean = false) {
   import graft.functions.{Ivf, Ivfadc, Similarity}
+  import TieredStore.DeltaTier
 
   require(flushEvery >= 1, "flushEvery must be >= 1")
-  require(maxDeltas >= 0, "maxDeltas must be >= 0")
-  // keep >= 2: an in-flight lazy plan built just before a major still
-  // reads the previous base version (the grace rule); raise it for
-  // deployments with cross-process readers slower than one major cycle
-  require(keepVersions >= 2, "keepVersions must be >= 2")
   private def modelDir(v: Int) = s"$indexRoot/model_v$v"
   private def codesDir(v: Int) = s"$indexRoot/codes_v$v"
   /** Cell-clustered BASE layout: hash-repartition by cell, sort within
@@ -141,98 +138,50 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   private def readCodes(dir: String): DataFrame =
     s.read.schema("vec_id BIGINT, cell INT, codes ARRAY<INT>").parquet(dir)
   private def stagingDir = s"$indexRoot/codes_staging"
-  // the shadow retrain's build target: never served (prefix is not
-  // codes_v), overwritten by the next retrain if a prepare crashes
-  private def shadowDir = s"$indexRoot/codes_shadow"
-  private val dcodesPrefix = "dcodes_v"
-  private val floorMarker = "_graft_delta_floor"
   private val simMarker = "_graft_assign_sim"
-  private def dcodesDir(kd: Int) = s"$indexRoot/$dcodesPrefix$kd"
-  private def fs = new org.apache.hadoop.fs.Path(indexRoot)
-    .getFileSystem(s.sparkContext.hadoopConfiguration)
+  private def dcodesDir(kd: Int) = s"$indexRoot/dcodes_v$kd"
+  private def fs: org.apache.hadoop.fs.FileSystem = store.fs
 
-  // restart-safe pointers: codes advance per flush window; the model only
-  // on retrain. The model version BOUND to the stored codes rides a
-  // marker in the codes dir (`_graft_model`) — a crash between a
-  // retrain's model write and its re-encode must leave the index serving
-  // the OLD (model, codes) pair, never a new model over old codes (an
-  // ADC table against codes from another codebook is silently wrong, the
-  // worst failure mode). The orphan committed model is skipped on
-  // restart and superseded by the next retrain.
+  // codes versions are the store's (the model only changes on retrain);
+  // a codes version's floor marker lands after its `_graft_model` marker
+  private val store = new TieredStore(s, indexRoot, "ANN", "MaintainedAnnIndex",
+    basePrefixes = Seq("codes_v"), deltaPrefixes = Seq("dcodes_v"),
+    maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
+    readOnly)
+  private def version = store.version
+  // the shadow build target shared by retrain and compaction: never
+  // served, overwritten by the next rebuild if a prepare crashes
+  private def shadowDir = store.shadowDir("codes_v")
+
+  // The model version BOUND to the stored codes rides a marker in the
+  // codes dir (`_graft_model`) — a crash between a retrain's model write
+  // and its re-encode must leave the index serving the OLD (model, codes)
+  // pair, never a new model over old codes (an ADC table against codes
+  // from another codebook is silently wrong, the worst failure mode). The
+  // orphan committed model is skipped on restart and superseded by the
+  // next retrain.
   private val modelMarker = "_graft_model"
-  // CODES version behind the VersionPointer seam (the dedup indexes'
-  // split-brain guard applied here): claims happen before each codes_v
-  // write; the default discovery impl is the plain layout resume
-  private val vptr: VersionPointer =
-    pointer.getOrElse(new DiscoveredVersionPointer(fs, indexRoot, "codes_v"))
-  // the pointer must judge commitment by THIS index's commit point (data
-  // + floor marker), or a crash between the codes write and the marker
-  // write leaves a claim reconcile() can never clear and every later
-  // advance() wedges as a foreign claim
-  vptr.bindCommitted(codesCommitted)
-  // a codes version is COMMITTED only once its floor marker exists — the
-  // marker is written LAST (after the parquet and the model marker), so a
-  // crash mid-publish leaves the new version invisible and the index
-  // keeps serving the previous (model, codes, deltas) triple consistently
-  // instead of mixing a new base with old-model deltas (or worse, an
-  // orphan model with old codes)
-  private def codesCommitted(v: Int): Boolean =
-    graft.VersionedDirs.hasCommittedData(fs, codesDir(v)) &&
-      Pipelines.readIntMarker(fs, codesDir(v), floorMarker).nonEmpty
-  @volatile private var version = {
-    val cand = vptr.current().getOrElse(0)
-    (cand to 0 by -1).find(codesCommitted).getOrElse(0)
-  }
-  @volatile private var modelVersion =
-    Pipelines.readIntMarker(fs, codesDir(version), modelMarker)
+  private def boundModel(v: Int): Int =
+    Pipelines.readIntMarker(fs, codesDir(v), modelMarker)
       .orElse(graft.VersionedDirs.latest(fs, indexRoot, "model_v"))
       .getOrElse(0)
-  private def readFloor(v: Int): Int =
-    Pipelines.readIntMarker(fs, codesDir(v), floorMarker).getOrElse(0)
-  @volatile private var deltaFloor = readFloor(version)
-
-  /** Committed delta versions at or above the floor, with their on-disk
-    * byte total — the tier the serving path must resolve against base.
-    * `oversized` bounds the SERVING broadcast (and forces an early major
-    * at flush, the dedup/text indexes' guard): past the bound the delta
-    * side is no longer safely broadcastable and the resolve falls back
-    * to the shuffle join. */
-  private case class DeltaTier(versions: Seq[Int], bytes: Long) {
-    def isEmpty: Boolean = versions.isEmpty
-    def oversized: Boolean = bytes > maxDeltaBroadcastBytes
-  }
-  private def listDeltaTier(): DeltaTier = listDeltaTier(deltaFloor)
-  private def listDeltaTier(floor: Int): DeltaTier = {
-    val vs = graft.VersionedDirs.allWithBytes(fs, indexRoot, dcodesPrefix)
-      .filter(_._1 >= floor)
-    DeltaTier(vs.map(_._1), vs.map(_._2).sum)
-  }
-  private def listDeltas(): Seq[Int] = listDeltaTier().versions
+  @volatile private var modelVersion = boundModel(version)
 
   // drift-window accumulators (exact integer micro-units, order-free)
   private val windowSimSum = new java.util.concurrent.atomic.AtomicLong()
   private val windowSimN = new java.util.concurrent.atomic.AtomicLong()
   @volatile private var lastWindowSimMicro = -1L
 
-  // lifecycle counters — the MaintainedDedupIndex.stats contract
-  private val stagedBatches = new java.util.concurrent.atomic.AtomicLong()
-  private val flushes = new java.util.concurrent.atomic.AtomicLong()
+  // the ANN-only gauges (the shared ones are the store's)
   private val staleStagedDiscarded = new java.util.concurrent.atomic.AtomicLong()
-  private val deltaFallbacks = new java.util.concurrent.atomic.AtomicLong()
   private val stagingFallbacks = new java.util.concurrent.atomic.AtomicLong()
-  private val earlyMajors = new java.util.concurrent.atomic.AtomicLong()
   private val driftRetrains = new java.util.concurrent.atomic.AtomicLong()
   private val retrainCatchup = new java.util.concurrent.atomic.AtomicLong()
-  private val nDeleted = new java.util.concurrent.atomic.AtomicLong()
-  private val shadowDeferredMajors = new java.util.concurrent.atomic.AtomicLong()
   private val retrainFailures = new java.util.concurrent.atomic.AtomicLong()
   // O18 applied to the unattended sweep: a persistently-failing retrain
   // logs once a minute, not once per micro-batch
   private val retrainErrorLimiter =
     new graft.metrics.Observability.RateLimiter(60000L)
-  // one shadow rebuild at a time; also read by flush() to defer majors
-  // while a shadow build is in flight (see retrainImpl)
-  private val rebuildInFlight = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Normalize a raw staging read to the stamped shape: rows staged
     * before the stamp columns shipped can only be current-model (the
@@ -249,105 +198,30 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
       .foldLeft(raw) { case (df, (c, d)) =>
         if (df.columns.contains(c)) df.withColumn(c, coalesce(col(c), lit(d)))
         else df.withColumn(c, lit(d)) }
-  @volatile private var lastFlushMs = -1L
 
-  // writer mode takes the cross-process single-writer lease; a READ-ONLY
-  // handle ([[MaintainedAnnIndex.openReader]]) takes NOTHING — it serves
-  // committed snapshots and coexists with a live maintainer in another
-  // process (the one-writer-N-search-replicas deployment)
-  private val lease: Option[Pipelines.WriterLease] =
-    if (readOnly) None
-    else Some(new Pipelines.WriterLease(fs, indexRoot, leaseTtlMs, writerId))
-  lease.foreach(_.acquire())
-  // reconcile only under the lease: deleting a torn pointer remnant is
-  // safe only when no rival writer can be mid-claim
-  if (!readOnly) vptr.reconcile()
-
-  /** Renew the writer lease before a mutation — also the gate that makes
-    * every mutator on a read-only handle fail loudly instead of racing
-    * the live writer's staging. */
-  private def renewWriter(op: String): Unit = lease match {
-    case Some(l) => l.checkAndRenew()
-    case None => throw new UnsupportedOperationException(
-      s"$op on a read-only ANN-index handle for $indexRoot — construct " +
-        "the writer (new MaintainedAnnIndex) to mutate")
+  /** A serve snapshot ([[TieredStore.captureSnap]]) with the model version
+    * bound to its codes: taken under the store's monitor, which every
+    * publish (and its bind of [[modelVersion]]) also takes, so no serve
+    * pairs new codes with the old model — the silently-wrong-ADC failure.
+    * A read-only handle re-reads the binding from the codes' marker. */
+  private def serveSnap(): (TieredStore.Snap, Int) = store.synchronized {
+    val sn = store.captureSnap()
+    if (readOnly) modelVersion = boundModel(sn.v)
+    (sn, modelVersion)
   }
-
-  /** READ-ONLY freshness: re-resolve the committed snapshot (codes
-    * version + bound model version + floor — a consistent triple: both
-    * markers are read from the version's own directory) from the stored
-    * layout at the top of every read, then serve that pinned snapshot
-    * for the read's whole plan. The writer may publish concurrently; the
-    * `keepVersions` base/model retention and the matching delta grace
-    * ([[deltaSweepFloor]]) keep a pinned plan's files alive (the reader
-    * SLA — SCALING.md). Writer handles skip this.
-    *
-    * Thread safety: the refresh writes the shared version/model/floor
-    * fields, so refresh AND the plan build that consumes them run under
-    * the handle's monitor — two threads on one reader handle must never
-    * pair base v+1 with v's model or floor (a wrong (model, codes) pair
-    * is the silently-wrong-ADC failure mode). Plan BUILD only; returned
-    * plans are lazy and evaluate unserialized. Reentrant, so the serve
-    * entry points can wrap their currentCodes/loadModel composition. */
-  /** One immutable SERVE SNAPSHOT — the (codes version, bound model
-    * version, floor) triple a read's whole plan builds from, consistent
-    * by construction: captured atomically under the handle's monitor,
-    * which every mutator's PUBLISH block also takes, so no serve —
-    * reader OR writer handle — can ever pair new codes with the old
-    * model (the silently-wrong-ADC failure) or a base with the wrong
-    * floor (double-counted or dropped deltas), even while a retrain or
-    * shadow swap's field writes land on another thread. */
-  private case class Snap(v: Int, mv: Int, floor: Int)
-
-  /** Capture the serve snapshot — see MaintainedTextIndex.captureSnap
-    * (readers re-resolve the committed layout first; writers capture
-    * their in-memory triple; never a Spark job under the monitor). */
-  private def captureSnap(): Snap = this.synchronized {
-    if (readOnly) {
-      val cand = vptr.current().getOrElse(0)
-      val v = (cand to 0 by -1).find(codesCommitted).getOrElse(0)
-      version = v
-      modelVersion = Pipelines.readIntMarker(fs, codesDir(v), modelMarker)
-        .orElse(graft.VersionedDirs.latest(fs, indexRoot, "model_v"))
-        .getOrElse(0)
-      deltaFloor = readFloor(v)
-    }
-    Snap(version, modelVersion, deltaFloor)
-  }
-
-  /** Publish a new (version, model, floor) triple atomically w.r.t.
-    * every serve capture — the mutators' side of the [[captureSnap]]
-    * contract. Called with the root lock held. */
-  private def publishSnap(v: Int, mv: Int, floor: Int): Unit = this.synchronized {
-    version = v
-    modelVersion = mv
-    deltaFloor = floor
-  }
-
-  /** Base versions GC must keep: the newest `keepVersions` (current plus
-    * `keepVersions - 1` predecessors — the in-flight-plan grace window,
-    * widened for slow cross-process readers via the constructor knob). */
-  private def baseKeepSet: Set[Int] =
-    ((version - keepVersions + 1) to version).toSet
 
   /** Model versions GC must keep: every kept codes version's BOUND model
     * (an in-flight or reader search pairs a pinned codes snapshot with
     * ITS model — retiring the model mid-plan breaks it), plus the
     * current. */
-  private def modelKeepSet: Set[Int] =
-    baseKeepSet.flatMap(v =>
-      Pipelines.readIntMarker(fs, codesDir(v), modelMarker)) + modelVersion
-
-  /** The delta sweep floor matching [[baseKeepSet]] — the oldest kept
-    * codes version's floor (see MaintainedTextIndex.deltaSweepFloor: at
-    * the default keepVersions = 2 this equals the previous floor; a
-    * raised knob widens the tier grace with the base retention). */
-  private def deltaSweepFloor: Int =
-    readFloor(math.max(0, version - keepVersions + 1))
+  private def retireModels(): Unit =
+    Pipelines.retireVersionsExcept(fs, indexRoot, "model_v",
+      store.baseKeepSet.flatMap(v =>
+        Pipelines.readIntMarker(fs, codesDir(v), modelMarker)) + modelVersion)
 
   /** Release the writer lease (maintainer shutdown); no-op on a
     * read-only handle (it holds nothing). */
-  def close(): Unit = lease.foreach(_.release())
+  def close(): Unit = store.close()
 
   // ---- stored model ----
 
@@ -459,28 +333,20 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   // ---- lifecycle ----
 
   /** Seed the index: train the IVFADC model on the corpus, encode every
-    * vector, store model_v0 + codes_v0. Refuses a root with committed
-    * versions (the MaintainedDedupIndex.initIndex rule). */
+    * vector, store model_v0 + codes_v0 ([[TieredStore.beginSeed]]
+    * refuses a root with a committed version). */
   def initIndex(corpus: DataFrame): Unit = Pipelines.rootLock(indexRoot).synchronized {
-    renewWriter("initIndex")
-    // "already seeded" is judged by the INDEX's commit point (codes +
-    // floor marker), not raw layout: a seed that crashed between the
-    // model write and the codes commit leaves dirs the index will never
-    // serve, and refusing on them would wedge the natural retry
-    if (graft.VersionedDirs.all(fs, indexRoot, "codes_v").exists(codesCommitted))
-      throw new IllegalStateException(
-        s"ANN index root $indexRoot already holds committed versions; " +
-          "seeding would be invisible — use a fresh root, or retrainModel to rebuild")
+    store.renewWriter("initIndex")
+    store.beginSeed()
     // with no codes committed, any stored model is a crashed seed's
     // orphan (nothing binds it); clear it so the retry's errorifexists
-    // model write can land, and re-pin the in-memory pointers the
+    // model write can land, and re-pin the in-memory binding the
     // constructor may have resolved to the orphan
     graft.VersionedDirs.all(fs, indexRoot, "model_v").foreach(v =>
       fs.delete(new org.apache.hadoop.fs.Path(modelDir(v)), true))
-    publishSnap(0, 0, 0) // fresh root: the constructor resolved the same
+    modelVersion = 0
     modelCache = None
     baseSimCache = (-1, -1L) // model_v0's sim marker is about to be (re)written
-    vptr.advance(0)
     val model = Ivfadc.train(corpus, nlist, m, k)
     // encode + drift-baseline similarity in ONE corpus pass: the codes
     // write job carries the observe() aggregate the old assignSim pass
@@ -498,7 +364,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     // model marker BEFORE the floor marker: the floor marker is the
     // commit point, so its presence implies the model binding exists
     Pipelines.writeIntMarker(fs, codesDir(0), modelMarker, 0)
-    Pipelines.writeIntMarker(fs, codesDir(0), floorMarker, 0)
+    store.commit(0, 0)
   }
 
   /** OPERATOR action when the drift gauge says recall is decaying: a
@@ -545,12 +411,10 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   def retrainModel(corpus: => DataFrame, nlistOverride: Option[Int] = None,
                    pqOverride: Option[(Int, Int)] = None,
                    onPrepared: () => Unit = () => ()): Unit = {
-    if (!rebuildInFlight.compareAndSet(false, true))
-      throw new IllegalStateException(
-        s"a shadow rebuild (retrain or major compaction) is already in " +
-          s"flight at $indexRoot — one rebuild at a time")
-    try retrainImpl(corpus, nlistOverride, pqOverride, onPrepared)
-    finally rebuildInFlight.set(false)
+    store.exclusive(throw new IllegalStateException(
+      s"a shadow rebuild (retrain or major compaction) is already in " +
+        s"flight at $indexRoot — one rebuild at a time"))(
+      retrainImpl(corpus, nlistOverride, pqOverride, onPrepared))
   }
 
   /** The state written since a build began, one winner row per vec_id:
@@ -565,7 +429,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     * write can only ADD rows, which the authoritative swap re-read
     * sees) and the swap's catch-up set (under the lock). */
   private def resolvedSinceBuild(): Option[DataFrame] =
-    resolvedSinceBuild(listDeltas())
+    resolvedSinceBuild(store.listDeltaTier().versions)
 
   private def resolvedSinceBuild(tier: Seq[Int]): Option[DataFrame] = {
     val stagedLive: Option[DataFrame] =
@@ -593,7 +457,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     // row ingested mid-build is still attributable — in staging or in a
     // live delta — when the swap computes its catch-up set; a major
     // would fold mid-build rows into an old-model base the swap replaces.
-    renewWriter("retrainModel")
+    store.renewWriter("retrainModel")
     val c = corpus
     val n = c.count()
     val useNlist = nlistOverride.getOrElse(MaintainedAnnIndex.sizedNlist(n))
@@ -648,12 +512,13 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
       .write.mode("overwrite").option("maxRecordsPerFile", baseFileRecords).parquet(shadowDir)
     val (simSum, simN) = obsSim(obs)
     writeModel(model, nextModel, if (simN > 0) simSum / simN else -1L)
+    Pipelines.writeIntMarker(fs, shadowDir, modelMarker, nextModel)
     onPrepared()
     // ---- SWAP (root lock; O(ingested-during-build), never O(corpus)) --
     Pipelines.rootLock(indexRoot).synchronized {
-      renewWriter("retrainModel")
-      val tier = listDeltas()
-      val sinceBuild = resolvedSinceBuild(tier).map(_.persist())
+      store.renewWriter("retrainModel")
+      val tier = store.listDeltaTier()
+      val sinceBuild = resolvedSinceBuild(tier.versions).map(_.persist())
       try {
         // one pass for both counts (live winners need catch-up re-encode;
         // tombstone winners need to SURVIVE the swap, not be re-encoded)
@@ -714,15 +579,9 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
               lit(Long.MinValue).as("_graft_batch"))
             .write.mode("append").parquet(stagingDir)
         }
-        val newFloor = tier.lastOption.map(_ + 1).getOrElse(deltaFloor)
-        vptr.advance(version + 1)
-        if (!fs.rename(shadow, new org.apache.hadoop.fs.Path(codesDir(version + 1))))
-          throw new IllegalStateException(
-            s"shadow swap failed: cannot rename $shadowDir to ${codesDir(version + 1)}")
-        Pipelines.writeIntMarker(fs, codesDir(version + 1), modelMarker, nextModel)
-        // floor marker LAST — the commit point
-        Pipelines.writeIntMarker(fs, codesDir(version + 1), floorMarker, newFloor)
-        publishSnap(version + 1, nextModel, newFloor)
+        // the shadow carries its model marker; the swap commits it with
+        // the floor marker, binding the new model in the same publish
+        store.swapShadows(tier.next, bind = { modelVersion = nextModel })
         modelCache = Some((nextModel, model))
         baseSimCache = (-1, -1L)
         windowSimSum.set(0); windowSimN.set(0); lastWindowSimMicro = -1L
@@ -738,14 +597,10 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
               .withColumn("_tier", lit(Long.MaxValue))
               .withColumnRenamed("_graft_batch", "_b")
               .select("vec_id", "cell", "codes", "_tier", "_b")), codeFiles)
-            .write.mode("overwrite").parquet(dcodesDir(newFloor))
+            .write.mode("overwrite").parquet(dcodesDir(tier.next))
         }
         fs.delete(new org.apache.hadoop.fs.Path(stagingDir), true)
-        Pipelines.retireVersionsBelow(fs, indexRoot, dcodesPrefix, deltaSweepFloor)
-        Pipelines.retireVersionsExcept(fs, indexRoot, "codes_v", baseKeepSet)
-        // keep every retained codes version's BOUND model (an in-flight
-        // or reader search may still pair them) plus the current
-        Pipelines.retireVersionsExcept(fs, indexRoot, "model_v", modelKeepSet)
+        retireModels()
       } finally sinceBuild.foreach(_.unpersist())
     }
   }
@@ -783,13 +638,11 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     * still throws — an explicit caller wants the error. */
   def maybeRetrain(corpus: => DataFrame, driftThresholdMicro: Long): Boolean = {
     if (driftMicroNow <= driftThresholdMicro) false
-    else if (!rebuildInFlight.compareAndSet(false, true)) false
-    else try {
+    else store.exclusive(false) {
       // re-check under the flag: the previous winner's window reset may
       // have cleared the drift this sweep measured
-      val fire = driftMicroNow > driftThresholdMicro
-      if (fire) {
-        try { retrainImpl(corpus, None, None, () => ()); driftRetrains.incrementAndGet() }
+      driftMicroNow > driftThresholdMicro && {
+        try { retrainImpl(corpus, None, None, () => ()); driftRetrains.incrementAndGet(); true }
         catch { case scala.util.control.NonFatal(e) =>
           retrainFailures.incrementAndGet()
           // cool-down: clear the window the failed attempt fired on
@@ -800,108 +653,61 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
                 s"continues on the current model; $suppressed earlier " +
                 s"failures suppressed): ${e.getMessage}", e)
           }
-          return false
+          false
         }
       }
-      fire
-    } finally rebuildInFlight.set(false)
+    }
   }
 
-  /** SHADOW MAJOR compaction — the flush-path major's O(base) fold run
-    * OFF the root lock (the [[retrainModel]] machinery applied to
-    * compaction, closing the last writer-blocking O(base) rewrite):
-    * snapshot the live delta tier, fold base ∪ tier to a shadow base
-    * (tombstone winners GC'd physically) while ingest, flush, search,
-    * and screens all proceed — flush defers ITS majors to minor deltas
-    * for the duration (`shadow_deferred_majors`), so the snapshot tier
-    * and base version stay immutable under the build. The swap holds
-    * the lock for O(1) metadata only: rename + markers + floor advance
-    * — rows ingested mid-build live in deltas ABOVE the snapshot tier
-    * (or in staging) and stay live across the swap, nothing re-written.
-    * Model untouched; serve afterwards ≡ the blocking fold's. One
-    * rebuild (retrain or major) at a time — the same flag, so the two
-    * shadow builds can never interleave their floor arithmetic.
-    * Returns false without folding when the tier is empty (the base
-    * carries no tombstones by invariant — nothing to fold) or when
-    * another rebuild already holds the flag (the maintenance-cadence
-    * caller's busy signal, [[maybeRetrain]]'s stand-down convention —
-    * a cron-fired compact racing a drift-fired retrain is a timing
-    * event, not a caller bug). `onPrepared` is the test seam between
-    * build and swap. */
-  def compactBase(onPrepared: () => Unit = () => ()): Boolean = {
-    if (!rebuildInFlight.compareAndSet(false, true)) false
-    else
-      try compactBaseImpl(onPrepared)
-      finally rebuildInFlight.set(false)
-  }
+  /** SHADOW MAJOR compaction ([[TieredStore.shadowMajor]]): the flush
+    * major's fold, minus staging, written to the shadow codes off the
+    * root lock, then swapped in. Model untouched; serve afterwards ≡ the
+    * blocking fold's. It shares the one-rebuild flag with
+    * [[retrainModel]], so the two shadow builds never interleave their
+    * floor arithmetic; a busy flag returns false ([[maybeRetrain]]'s
+    * stand-down convention). */
+  def compactBase(onPrepared: () => Unit = () => ()): Boolean =
+    store.shadowMajor(onPrepared) { (_, tier) =>
+      foldBase(tier, None, guardOk = !tier.oversized, shadowDir)
+    }
 
   /** The unattended form of the compaction decision ([[maybeRetrain]]'s
-    * twin for the tier): run [[compactBase]] exactly when the live delta
-    * tier has at least `maxTier` versions. The deployment shape this
-    * completes: constructor `maxDeltas` set HIGH (so the flush-path
-    * BLOCKING major effectively never fires — the byte-bound early major
-    * stays as the backstop) and this sweep on the maintenance cadence,
-    * making every routine major a shadow fold the writer never waits
-    * for. The sweeping thread pays the fold; ingest/search on other
-    * threads proceed throughout. Costs one tier listing per call — run
-    * it on the flush cadence, not per record. Returns whether a fold
-    * ran (false: tier below threshold, or another rebuild in flight —
-    * it does not queue). */
-  def maybeCompact(maxTier: Int): Boolean =
-    listDeltas().size >= maxTier && compactBase()
+    * twin for the tier, [[TieredStore.maybeCompact]]). The deployment
+    * shape it completes: constructor `maxDeltas` set HIGH (so the
+    * flush-path BLOCKING major effectively never fires — the byte-bound
+    * early major stays as the backstop) and this sweep on the
+    * maintenance cadence, making every routine major a shadow fold the
+    * writer never waits for. */
+  def maybeCompact(maxTier: Int): Boolean = store.maybeCompact(maxTier)(compactBase())
 
-  private def compactBaseImpl(onPrepared: () => Unit): Boolean = {
-    renewWriter("compactBase")
-    // snapshot under the lock; immutable for the whole build (flush
-    // majors deferred by the flag, retrains excluded by it)
-    val (v0, tierD) = Pipelines.rootLock(indexRoot).synchronized {
-      (version, listDeltaTier())
-    }
-    val tier0 = tierD.versions
-    if (tier0.isEmpty) return false
-    val shadow = new org.apache.hadoop.fs.Path(shadowDir)
-    fs.delete(shadow, true) // a crashed build's remnant (either kind)
-    // ---- PREPARE (no lock): the blocking major's exact fold, in the
-    // no-base-shuffle topology (see flush's major branch — same shape,
-    // tier only, no staged side) ----------
+  /** Write the base that folds `tier` (and, at a flush, the resolved
+    * `staged` rows) into the current codes WITHOUT shuffling the
+    * corpus-scale base (guide §2.4/§8: decide with the small rows, move
+    * the big rows once): the delta side resolves alone — flush-window
+    * sized by construction — and its vec_id set anti-joins the base as a
+    * broadcast while `guardOk` (else Spark plans the shuffle join). The
+    * base's only exchange is the cell-clustered layout write. Tombstone
+    * winners drop out physically — the delete's GC moment: the anti-join
+    * removes their base rows, the cell >= 0 filter their tombstone rows.
+    * The fold keeps the CURRENT model and stamps its binding: without it
+    * a restart after an orphan-model crash would fall back to 'latest
+    * stored model' and serve it over codes encoded under the older one. */
+  private def foldBase(tier: DeltaTier, staged: Option[DataFrame], guardOk: Boolean,
+                       out: String): Unit = {
     val deltaSide = resolveNewest(
-      tier0.map(kd => readCodes(dcodesDir(kd))
-          .withColumn("_tier", lit(kd + 1L)).withColumn("_b", lit(0L))
-          .select("vec_id", "cell", "codes", "_tier", "_b"))
+      (staged.toSeq ++ tier.versions.map(kd => readCodes(dcodesDir(kd))
+          .withColumn("_tier", lit(kd + 1L)).withColumn("_b", lit(0L))))
+        .map(_.select("vec_id", "cell", "codes", "_tier", "_b"))
         .reduce(_ unionByName _))
     val dIds = deltaSide.select(col("vec_id"))
     val hinted =
-      if (tierD.oversized) { deltaFallbacks.incrementAndGet(); dIds }
-      else broadcast(dIds)
+      if (guardOk) broadcast(dIds) else { store.deltaFallbacks.incrementAndGet(); dIds }
     cellClustered(
-      readCodes(codesDir(v0))
+      readCodes(codesDir(version))
         .join(hinted, Seq("vec_id"), "left_anti")
         .unionByName(deltaSide.filter(col("cell") >= 0)))
-      .write.mode("overwrite").option("maxRecordsPerFile", baseFileRecords).parquet(shadowDir)
-    onPrepared()
-    // ---- SWAP (lock; O(1) metadata) ----------------------------------
-    Pipelines.rootLock(indexRoot).synchronized {
-      renewWriter("compactBase")
-      assert(version == v0,
-        s"base version moved under an in-flight shadow major at $indexRoot")
-      vptr.advance(version + 1)
-      // clear an uncommitted remnant of a previously torn swap (version+1
-      // cannot be committed — discovery would have resumed it)
-      fs.delete(new org.apache.hadoop.fs.Path(codesDir(version + 1)), true)
-      if (!fs.rename(shadow, new org.apache.hadoop.fs.Path(codesDir(version + 1))))
-        throw new IllegalStateException(
-          s"shadow major swap failed: cannot rename $shadowDir to ${codesDir(version + 1)}")
-      val newFloor = tier0.last + 1
-      Pipelines.writeIntMarker(fs, codesDir(version + 1), modelMarker, modelVersion)
-      // floor marker LAST — the commit point
-      Pipelines.writeIntMarker(fs, codesDir(version + 1), floorMarker, newFloor)
-      publishSnap(version + 1, modelVersion, newFloor)
-      baseSimCache = (-1, -1L)
-      Pipelines.retireVersionsBelow(fs, indexRoot, dcodesPrefix, deltaSweepFloor)
-      Pipelines.retireVersionsExcept(fs, indexRoot, "codes_v",
-        baseKeepSet)
-    }
-    true
+      .write.mode("overwrite").option("maxRecordsPerFile", baseFileRecords).parquet(out)
+    Pipelines.writeIntMarker(fs, out, modelMarker, modelVersion)
   }
 
   /** Incremental semantic-dedup screen (the SemDeDup admission shape —
@@ -993,7 +799,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
                      resolveWithinBatch: Boolean)
                     (sink: DataFrame => Unit): Unit =
     Pipelines.rootLock(indexRoot).synchronized {
-      renewWriter("screenAndAdmit")
+      store.renewWriter("screenAndAdmit")
       val model = loadModel()
       // left-join back to the batch: a vector whose probed cells hold no
       // codes yields NO search row, and absence of evidence is novelty
@@ -1055,7 +861,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     * list-then-delete race the dedup indexes lock against. */
   def ingestBatch(batch: DataFrame, batchId: Long)
                  (sink: DataFrame => Unit): Unit = Pipelines.rootLock(indexRoot).synchronized {
-    renewWriter("ingestBatch")
+    store.renewWriter("ingestBatch")
     val model = loadModel()
     // one map pass computes codes AND the drift-window similarity; the
     // similarity aggregate rides the staging WRITE job via observe(), so
@@ -1080,7 +886,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
         val (simSum, simN) = obsSim(obs)
         windowSimSum.addAndGet(simSum)
         windowSimN.addAndGet(simN)
-        stagedBatches.incrementAndGet()
+        store.stagedBatches.incrementAndGet()
       }
       if ((batchId + 1) % flushEvery == 0) flush()
     } finally encodedS.unpersist()
@@ -1101,7 +907,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     * the same vec_id resolve ingest-wins — issue deletes under their own
     * batch id. */
   def deleteVectors(ids: DataFrame, batchId: Long): Unit = Pipelines.rootLock(indexRoot).synchronized {
-    renewWriter("deleteVectors")
+    store.renewWriter("deleteVectors")
     val tomb = ids.select(col("vec_id"), lit(-1).as("cell"),
         typedlit(Seq.empty[Int]).as("codes"),
         lit(modelVersion).as("_graft_model_v"), lit(batchId).as("_graft_batch"))
@@ -1110,21 +916,20 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
       val n = tomb.count()
       if (n > 0) {
         tomb.write.mode("append").parquet(stagingDir)
-        nDeleted.addAndGet(n)
-        stagedBatches.incrementAndGet()
+        store.nDeleted.addAndGet(n)
+        store.stagedBatches.incrementAndGet()
       }
       if ((batchId + 1) % flushEvery == 0) flush()
     } finally tomb.unpersist()
   }
 
-  /** Fold staged codes: MINOR delta write (O(staged)) until maxDeltas
-    * accumulate, then a MAJOR compaction into codes N+1 with the floor
-    * advance + grace sweep of superseded/torn delta dirs (the
-    * MaintainedDedupIndex.flush shape; replayed staging dedups on
-    * vec_id — codes are deterministic under a fixed model, so replays
-    * are idempotent). Records the window's drift gauge. */
+  /** Fold staged codes ([[TieredStore.flushWindow]]): a MINOR delta
+    * write (O(staged)) or a MAJOR compaction into codes N+1 (replayed
+    * staging dedups on vec_id — codes are deterministic under a fixed
+    * model, so replays are idempotent). Records the window's drift
+    * gauge. */
   def flush(): Unit = Pipelines.rootLock(indexRoot).synchronized {
-    renewWriter("flush")
+    store.renewWriter("flush")
     val staging = new org.apache.hadoop.fs.Path(stagingDir)
     if (Pipelines.stagedHasData(fs, stagingDir)) {
       val stagedStamped = stampStaged(s.read.parquet(stagingDir))
@@ -1149,86 +954,24 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
         .drop("_graft_model_v")
         .withColumnRenamed("_graft_batch", "_b")
         .withColumn("_tier", lit(Long.MaxValue))
-      if (live == 0) fs.delete(staging, true)
-      else {
-        val t0 = System.nanoTime()
-        val tierFull = listDeltaTier()
-        val tier = tierFull.versions
-        // while a shadow retrain builds, majors are DEFERRED (minor
-        // deltas only, even past maxDeltas/the byte bound): a major would
+      if (live > 0) {
+        // while a retrain builds, the store defers majors: a major would
         // fold mid-build rows into an old-model base the swap is about to
-        // replace, making them unattributable to the catch-up re-encode.
-        // The swap retires the whole tier anyway; if the build crashes,
-        // the next ordinary flush majors the accumulated tier in.
-        val deferMajor = rebuildInFlight.get()
-        if (deferMajor && !(maxDeltas > 0 && tier.size < maxDeltas && !tierFull.oversized))
-          shadowDeferredMajors.incrementAndGet()
-        if (deferMajor ||
-            (maxDeltas > 0 && tier.size < maxDeltas && !tierFull.oversized)) {
-          val kd = tier.lastOption.map(_ + 1).getOrElse(deltaFloor)
+        // replace, making them unattributable to the catch-up re-encode
+        store.flushWindow { tier =>
           Pipelines.sizedForWrite(resolveNewest(staged), codeFiles)
-            .write.mode("overwrite").parquet(dcodesDir(kd))
-        } else {
-          // a tier past the broadcast bound forces the major EARLY (the
-          // dedup/text indexes' guard): serving would otherwise fall back
-          // to shuffle-joining the delta side on every search
-          if (maxDeltas > 0 && tierFull.oversized) {
-            earlyMajors.incrementAndGet()
-            Pipelines.log.warn(
-              s"ANN delta tier at $indexRoot is ${tierFull.bytes} bytes " +
-                s"(> $maxDeltaBroadcastBytes): forcing an EARLY major " +
-                s"compaction at ${tier.size}/$maxDeltas deltas")
-          }
-          vptr.advance(version + 1)
-          // fold WITHOUT shuffling the corpus-scale base (guide §2.4/§8:
-          // decide with the small rows, move the big rows once): resolve
-          // the delta∪staged side alone — flush-window sized by
-          // construction — then anti-join its vec_id set into the base as
-          // a broadcast under the same byte-bound guard serving uses
-          // (oversized side → hint dropped, Spark plans the shuffle
-          // join). The base's only exchange is the cell-clustered layout
-          // write it always paid; the old shape group-folded base ∪
-          // deltas ∪ staged on vec_id, a full corpus-scale shuffle per
-          // major. Tombstone winners (deleted vec_ids) still drop out of
-          // the compacted base physically — the delete's GC moment: the
-          // anti-join removes their base rows, the cell >= 0 filter their
-          // tombstone rows.
-          val deltaSide = resolveNewest(
-            tier.map(kd => readCodes(dcodesDir(kd))
-                .withColumn("_tier", lit(kd + 1L)).withColumn("_b", lit(0L))
-                .select("vec_id", "cell", "codes", "_tier", "_b"))
-              .foldLeft(staged.select("vec_id", "cell", "codes", "_tier", "_b"))(
-                _ unionByName _))
+            .write.mode("overwrite").parquet(dcodesDir(tier.next))
+        } { (tier, v) =>
           val stagedBytes = graft.VersionedDirs.committedBytes(fs, stagingDir)
-          val dIds = deltaSide.select(col("vec_id"))
-          val hinted =
-            if (tierFull.oversized || stagedBytes > maxDeltaBroadcastBytes) {
-              deltaFallbacks.incrementAndGet(); dIds
-            } else broadcast(dIds)
-          cellClustered(
-            readCodes(codesDir(version))
-              .join(hinted, Seq("vec_id"), "left_anti")
-              .unionByName(deltaSide.filter(col("cell") >= 0)))
-            .write.mode("overwrite").option("maxRecordsPerFile", baseFileRecords).parquet(codesDir(version + 1))
-          val newFloor = tier.lastOption.map(_ + 1).getOrElse(deltaFloor)
-          // the fold keeps the CURRENT model: without re-stamping the
-          // binding, a restart after an orphan-model crash would fall
-          // back to 'latest stored model' and serve it over codes
-          // encoded under the older one — silently wrong ADC distances
-          Pipelines.writeIntMarker(fs, codesDir(version + 1), modelMarker, modelVersion)
-          Pipelines.writeIntMarker(fs, codesDir(version + 1), floorMarker, newFloor)
-          publishSnap(version + 1, modelVersion, newFloor)
-          Pipelines.retireVersionsBelow(fs, indexRoot, dcodesPrefix, deltaSweepFloor)
-          Pipelines.retireVersionsExcept(fs, indexRoot, "codes_v",
-            baseKeepSet)
+          foldBase(tier, Some(staged),
+            guardOk = !tier.oversized && stagedBytes <= maxDeltaBroadcastBytes, codesDir(v))
+          store.commit(v, tier.next)
         }
         val n = windowSimN.getAndSet(0)
         val sumq = windowSimSum.getAndSet(0)
         if (n > 0) lastWindowSimMicro = sumq / n
-        flushes.incrementAndGet()
-        lastFlushMs = (System.nanoTime() - t0) / 1000000L
-        fs.delete(staging, true)
       }
+      fs.delete(staging, true)
     } else if (fs.exists(staging)) {
       fs.delete(staging, true) // _temporary-only remnant of a killed append
     }
@@ -1258,9 +1001,9 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     * shuffle join instead of OOMing the driver; results are identical
     * either way, which RoundTwelveSpec pins against the all-tier
     * group-fold form. */
-  def currentCodes: DataFrame = currentCodesAt(captureSnap())
-  private def currentCodesAt(sn: Snap): DataFrame = {
-    val tier = listDeltaTier(sn.floor)
+  def currentCodes: DataFrame = currentCodesAt(store.captureSnap())
+  private def currentCodesAt(sn: TieredStore.Snap): DataFrame = {
+    val tier = store.listDeltaTier(sn.floor)
     if (tier.isEmpty) readCodes(codesDir(sn.v))
     else {
       // each delta dir is already one-row-per-vec_id (resolved at its
@@ -1277,7 +1020,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
       // nothing)
       val dIds = dResolved.select(col("vec_id"))
       val hinted =
-        if (tier.oversized) { deltaFallbacks.incrementAndGet(); dIds }
+        if (tier.oversized) { store.deltaFallbacks.incrementAndGet(); dIds }
         else broadcast(dIds)
       readCodes(codesDir(sn.v))
         .join(hinted, Seq("vec_id"), "left_anti")
@@ -1290,8 +1033,8 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     * base ∪ delta codes with the stored model. */
   def search(queries: DataFrame, kTop: Int, nprobe: Int,
              knownQueryCount: Option[Long] = None): DataFrame = {
-    val sn = captureSnap() // ONE capture binds the (codes, model) pair
-    Ivfadc.search(currentCodesAt(sn), queries, loadModel(sn.mv), kTop, nprobe,
+    val (sn, mv) = serveSnap() // ONE capture binds the (codes, model) pair
+    Ivfadc.search(currentCodesAt(sn), queries, loadModel(mv), kTop, nprobe,
       knownQueryCount)
   }
 
@@ -1304,8 +1047,8 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   def searchRerank(corpus: DataFrame, queries: DataFrame, kTop: Int,
                    nprobe: Int, shortlistFactor: Int = 8,
                    knownQueryCount: Option[Long] = None): DataFrame = {
-    val sn = captureSnap()
-    Ivfadc.searchRerank(corpus, currentCodesAt(sn), queries, loadModel(sn.mv),
+    val (sn, mv) = serveSnap()
+    Ivfadc.searchRerank(corpus, currentCodesAt(sn), queries, loadModel(mv),
       kTop, nprobe, shortlistFactor, knownQueryCount)
   }
 
@@ -1340,35 +1083,24 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
       knownQueryCount)
   }
 
-  /** Lifecycle + drift gauges (the Observability `indexGauges` contract):
-    * `drift_micro` is (training-corpus mean assign-similarity − last
-    * flush window's), in 1e-6 cosine units — rising drift says the
-    * stored centroids no longer represent the arriving distribution and
-    * a [[retrainModel]] is due. */
+  /** Lifecycle gauges ([[TieredStore.stats]]) plus the model and drift
+    * gauges (the Observability `indexGauges` contract): `drift_micro` is
+    * (training-corpus mean assign-similarity − last flush window's), in
+    * 1e-6 cosine units — rising drift says the stored centroids no longer
+    * represent the arriving distribution and a [[retrainModel]] is due. */
   def stats: Map[String, Long] = {
-    val sn = captureSnap()
-    val tier = listDeltaTier(sn.floor)
-    Map(
-    "version" -> sn.v.toLong,
-    "model_version" -> sn.mv.toLong,
-    "staged_batches" -> stagedBatches.get(),
-    "flushes" -> flushes.get(),
-    "last_flush_ms" -> lastFlushMs,
-    "delta_versions" -> tier.versions.size.toLong,
-    "delta_bytes" -> tier.bytes,
-    "delta_fallbacks" -> deltaFallbacks.get(),
-    "staging_fallbacks" -> stagingFallbacks.get(),
-    "early_majors" -> earlyMajors.get(),
-    "stale_staged_discarded" -> staleStagedDiscarded.get(),
-    "drift_retrains" -> driftRetrains.get(),
-    "retrain_failures" -> retrainFailures.get(),
-    "retrain_catchup" -> retrainCatchup.get(),
-    "shadow_deferred_majors" -> shadowDeferredMajors.get(),
-    "n_deleted" -> nDeleted.get(),
-    "boosted_serves" -> boostedServes.get(),
-    "base_assign_sim_micro" -> baseAssignSimCached,
-    "window_assign_sim_micro" -> lastWindowSimMicro,
-    "drift_micro" -> driftMicroNow)
+    val (sn, mv) = serveSnap()
+    store.stats(sn, store.listDeltaTier(sn.floor)) ++ Map(
+      "model_version" -> mv.toLong,
+      "staging_fallbacks" -> stagingFallbacks.get(),
+      "stale_staged_discarded" -> staleStagedDiscarded.get(),
+      "drift_retrains" -> driftRetrains.get(),
+      "retrain_failures" -> retrainFailures.get(),
+      "retrain_catchup" -> retrainCatchup.get(),
+      "boosted_serves" -> boostedServes.get(),
+      "base_assign_sim_micro" -> baseAssignSimCached,
+      "window_assign_sim_micro" -> lastWindowSimMicro,
+      "drift_micro" -> driftMicroNow)
   }
 }
 

@@ -37,13 +37,6 @@ object Pipelines {
     * bound are untouched, so fixture-scale layouts are unchanged. */
   val BaseFileRecords: String = 500000.toString
 
-  /** Latest `<prefix><N>` directory version under `root` — the maintained
-    * indexes' restart-safe version discovery (shared with the stored DSIR
-    * models via [[graft.VersionedDirs]]). */
-  private[streaming] def latestVersion(fs: org.apache.hadoop.fs.FileSystem,
-                                       root: String, prefix: String): Option[Int] =
-    graft.VersionedDirs.latest(fs, root, prefix)
-
   /** Delete every `<prefix><N>` dir whose N is not in `keep` — the
     * maintained indexes' version GC. `keep` is the reachable set: the
     * current version, the previous one (an in-flight batch plan may still
@@ -750,27 +743,6 @@ object Pipelines {
       .partitionBy("batch_id" +: partitionCols: _*)
       .parquet(outDir)
 
-  /** [[runDmlPipeline]] with exactly-once observable sinks: same transform
-    * and dead-letter split, but both outputs go through
-    * [[idempotentBatchWriter]] so batch retries cannot duplicate rows. */
-  def runDmlPipelineExactlyOnce(src: DataFrame, outDir: String, checkpointDir: String,
-                                trigger: org.apache.spark.sql.streaming.Trigger): Unit = {
-    val q = dmlTransform(src).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val cached = batch.persist()
-        try {
-          val (ok, dead) = CoreOps.splitMalformed(cached, "key")
-          idempotentBatchWriter(s"$outDir/main")(ok.select(col("key"), col("value")), id)
-          idempotentBatchWriter(s"$outDir/dead_letter")(dead.select(col("value")), id)
-        } finally { cached.unpersist(); () }
-      }
-      .start()
-    q.awaitTermination()
-  }
-
   /** x38 streaming twin: the count-min sketch as a global streaming
     * aggregate (complete mode). The CmsAgg partials vector-add across
     * tasks AND across micro-batches — the mergeability that makes a
@@ -998,103 +970,38 @@ object Pipelines {
                                    pointer: Option[VersionPointer] = None,
                                    keepVersions: Int = 2,
                                    readOnly: Boolean = false) {
+    import TieredStore.DeltaTier
     require(flushEvery >= 1, "flushEvery must be >= 1")
-    require(maxDeltas >= 0, "maxDeltas must be >= 0")
-    // keep >= 2: an in-flight lazy plan built just before a major still
-    // reads the previous base version (the grace rule); raise it for
-    // deployments with cross-process readers slower than one major cycle
-    require(keepVersions >= 2, "keepVersions must be >= 2")
     private def bucketed = fpBuckets > 0
     // catalog-safe, root-derived table family (unsigned hex — no '-')
     private val tableSuffix = java.lang.Integer.toHexString(indexRoot.hashCode)
     private def idxTable(v: Int) = s"graft_mdix_${tableSuffix}_v$v"
     private def indexDir(v: Int) = s"$indexRoot/index_v$v"
     private def stagingDir = s"$indexRoot/staging"
-    private def fs = new org.apache.hadoop.fs.Path(indexRoot)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // restart-safe version pointer, behind the VersionPointer SEAM: the
-    // default (directory discovery) resumes at the latest flushed version
-    // (a fresh instance over an existing root must NOT fall back to the
-    // seed); an AtomicFileVersionPointer additionally makes each version
-    // bump single-winner across drivers. A crash between the version
-    // write and the staging delete re-folds staging on the next flush —
-    // harmless, the min fold is idempotent.
-    private val vptr: VersionPointer =
-      pointer.getOrElse(new DiscoveredVersionPointer(fs, indexRoot, "index_v"))
-    // this index's commit point is committed data AND the floor marker —
-    // the marker is written LAST on every publish path (seed, flush-path
-    // major, shadow swap), so it is what makes a base version visible.
-    // Data alone is NOT enough: the flush-path major writes the new base
-    // as a multi-file overwrite directly into index_v<N+1>, and the
-    // layout rule calls a dir committed from its FIRST landed data file —
-    // a cross-process reader resolving mid-write would serve a partial
-    // base (and, marker still missing, floor 0), silently classifying
-    // known duplicates as new. Marker-gating closes that window the same
-    // way the text/ANN pillars' floor-marker-written-last commit points
-    // do.
-    // (declared BEFORE the `version` field below: its construction-time
-    // vptr.current() resolve invokes the predicate, which must not read
-    // a not-yet-initialized marker name)
-    private val floorMarker = "_graft_delta_floor"
-    private def committedBase(v: Int): Boolean =
-      graft.VersionedDirs.hasCommittedData(fs, indexDir(v)) &&
-        Pipelines.readIntMarker(fs, indexDir(v), floorMarker).isDefined
-    vptr.bindCommitted(committedBase)
-    @volatile private var version = vptr.current().getOrElse(0)
-    // ---- delta tier (maxDeltas > 0): the LSM shape for 100 TB flushes --
-    // With maxDeltas = 0 (default) every flush FOLDS staging into a full
-    // new base version — O(index) I/O per flush window, fine until the
-    // index is corpus-scale. With maxDeltas > 0, a flush instead writes
-    // the staged acceptances as a flush-window-sized DELTA version
-    // (O(staged) I/O); once maxDeltas deltas accumulate (or the tier
-    // outgrows maxDeltaBroadcastBytes — the broadcast guard below), the
-    // next flush runs a MAJOR compaction folding base + deltas + staging
-    // into base N+1 and advances the tier FLOOR past the folded deltas.
-    // Readers: the per-batch finalize joins the base bucketed (no
-    // exchange) and the delta tier BROADCAST while it is under
-    // maxDeltaBroadcastBytes; past that bound — a high-novelty phase, an
-    // initial load, a misconfigured flushEvery — the broadcast hint is
-    // DROPPED (loud log + delta_fallbacks gauge) and the join falls back
-    // to shuffle, so an oversized tier degrades to a slower plan instead
-    // of a driver OOM, until the early major compaction clears it. Base
-    // and delta fps are disjoint in steady state (an fp present in the
-    // index is never re-accepted); crash replays can duplicate an fp
-    // ACROSS deltas or into the new base with the SAME keeper id (the min
-    // fold is idempotent), which the delta-union min-fold and coalesce
-    // precedence absorb exactly.
-    //
-    // Delta version numbers are MONOTONIC; the base version's
-    // `_graft_delta_floor` marker records the first delta number NOT
-    // folded into it. Folded deltas (numbers below the floor) stay on
-    // disk for ONE more compaction cycle — the delta twin of the
-    // keep-current-plus-previous base rule, so a lazy plan built from
-    // currentIndex just before a major still finds its delta files — and
-    // the next major's GC sweeps everything below the PREVIOUS floor,
-    // torn crash remnants included. A crash between the base write and
-    // the floor-marker write re-includes the folded deltas in the tier
-    // (floor reads low); the min fold absorbs the duplication and the
-    // next major heals the marker.
-    private val deltaPrefix = "delta_v"
-    private def deltaDir(k: Int) = s"$indexRoot/$deltaPrefix$k"
-    private def readFloor(v: Int): Int =
-      Pipelines.readIntMarker(fs, indexDir(v), floorMarker).getOrElse(0)
-    @volatile private var deltaFloor = readFloor(version)
-    /** One snapshot of the live delta tier: committed versions at or above
-      * the floor, with their on-disk byte total (sized from the same
-      * listing that proves commitment — no extra RPC). Mutators list ONCE
-      * per locked mutation and thread the snapshot through, instead of
-      * re-listing per accessor call (object-store metadata RPCs are the
-      * per-batch hot-path cost the caching removes). */
-    private case class DeltaTier(versions: Seq[Int], bytes: Long) {
-      def isEmpty: Boolean = versions.isEmpty
-      def oversized: Boolean = bytes > maxDeltaBroadcastBytes
-    }
-    private def listDeltaTier(): DeltaTier = listDeltaTier(deltaFloor)
-    private def listDeltaTier(floor: Int): DeltaTier = {
-      val live = graft.VersionedDirs.allWithBytes(fs, indexRoot, deltaPrefix)
-        .filter(_._1 >= floor)
-      DeltaTier(live.map(_._1), live.map(_._2).sum)
-    }
+    private def fs: org.apache.hadoop.fs.FileSystem = store.fs
+    // ---- versions (the TieredStore): base `index_v<N>` with its
+    // `ids_v<N>` sidecar, delta tier `delta_v<k>`. With maxDeltas = 0
+    // (default) every flush FOLDS staging into a full new base version —
+    // O(index) I/O per flush window, fine until the index is corpus-scale.
+    // With maxDeltas > 0 a flush writes the staged acceptances as a
+    // flush-window-sized DELTA (O(staged) I/O) until the tier is due a
+    // major. The per-batch finalize joins the base bucketed (no exchange)
+    // and the delta tier BROADCAST while it is under
+    // maxDeltaBroadcastBytes; past that bound the hint is DROPPED (loud
+    // log + delta_fallbacks gauge) and the join falls back to shuffle.
+    // Base and delta fps are disjoint in steady state (an fp present in
+    // the index is never re-accepted); crash replays can duplicate an fp
+    // ACROSS deltas or into the new base with the SAME keeper id, and a
+    // crash between a major's base write and its floor marker re-includes
+    // the folded deltas (the version never committed) — the min fold and
+    // the coalesce precedence absorb both exactly.
+    private val store = new TieredStore(s, indexRoot, "dedup", "MaintainedDedupIndex",
+      basePrefixes = Seq("index_v"), deltaPrefixes = Seq("delta_v"),
+      maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
+      readOnly, sidecarPrefixes = Seq("ids_v"),
+      unregister = v => if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${idxTable(v)}"))
+    private def version = store.version
+    private def deltaDir(k: Int) = s"$indexRoot/delta_v$k"
     /** The delta tier as one relation, min-folded per fp (replayed staging
       * can duplicate an fp across deltas — same keeper, the fold is a
       * no-op on it). None when the tier is empty. */
@@ -1103,131 +1010,30 @@ object Pipelines {
       else Some(tier.versions.map(k => s.read.parquet(deltaDir(k)))
         .reduce(_ unionByName _)
         .groupBy(col("fp")).agg(min(col("corpus_id")).as("corpus_id")))
-    // index versions a classify STREAM may still be reading: the streaming
-    // plan's static join pins its file listing at query start, for the
-    // query's whole lifetime — GC must never retire a pinned version. A
-    // concurrent set (not a min) so (a) two classify calls racing cannot
-    // lose a pin, and (b) GC stays effective while a stream is live: only
-    // the pinned versions are kept, not everything above them. Pins clear
-    // on restart (a resumed stream re-plans against the then-current
-    // version), which is when GC catches up fully.
-    private val pinnedVersions = Pipelines.pinsFor(indexRoot)
-    // THIS instance's pin references (one entry per classify call):
-    // release drops exactly these from the shared REF-COUNTED registry —
-    // a set-based clear (or even a set-based removeAll) would drop
+    // THIS instance's classify pin references (one entry per classify
+    // call) in the JVM-global, REF-COUNTED registry the store's retention
+    // keeps: release drops exactly these — a set-based clear would drop
     // another live instance's pin on the same version, letting the next
-    // major-flush GC retire a base version that instance's pinned file
-    // listing still reads (failing its stream mid-query)
+    // major GC retire a base that instance's pinned file listing still
+    // reads (failing its stream mid-query)
     private val myPins = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    // lifecycle counters — the ops surface an unattended maintainer is
-    // watched through (next to Spark's own streaming metrics): how many
-    // batches staged acceptances, how many flushes folded a new version,
-    // what the last fold cost, and how often the broadcast guard fired
-    private val stagedBatches = new java.util.concurrent.atomic.AtomicLong()
-    private val flushes = new java.util.concurrent.atomic.AtomicLong()
-    private val deltaFallbacks = new java.util.concurrent.atomic.AtomicLong()
-    private val earlyMajors = new java.util.concurrent.atomic.AtomicLong()
-    private val nDeleted = new java.util.concurrent.atomic.AtomicLong()
-    private val shadowDeferredMajors = new java.util.concurrent.atomic.AtomicLong()
-    // one shadow major at a time; read by flush() to defer ITS majors to
-    // minor deltas while the build is in flight (see compactBase)
-    private val majorInFlight = new java.util.concurrent.atomic.AtomicBoolean(false)
-    @volatile private var lastFlushMs = -1L
-    // enforce the single-writer contract at construction: a second
-    // maintainer PROCESS over this root fails loudly here instead of
-    // silently cross-folding the first one's staging (same-process
-    // re-construction shares the host#pid owner and passes)
-    // writer mode takes the cross-process single-writer lease; a
-    // READ-ONLY handle ([[Pipelines.openDedupReader]]) takes NOTHING —
-    // it serves committed snapshots and coexists with a live maintainer
-    // in another process (the one-writer-N-classifiers deployment)
-    private val lease: Option[WriterLease] =
-      if (readOnly) None
-      else Some(new WriterLease(fs, indexRoot, leaseTtlMs, writerId))
-    lease.foreach(_.acquire())
-    // reconcile only under the lease: deleting a torn pointer remnant is
-    // safe only when no rival writer can be mid-claim
-    if (!readOnly) vptr.reconcile()
-
-    /** Renew the writer lease before a mutation — also the gate that
-      * makes every mutator on a read-only handle fail loudly instead of
-      * racing the live writer's staging. */
-    private def renewWriter(op: String): Unit = lease match {
-      case Some(l) => l.checkAndRenew()
-      case None => throw new UnsupportedOperationException(
-        s"$op on a read-only dedup-index handle for $indexRoot — " +
-          "construct the writer (new MaintainedDedupIndex) to mutate")
-    }
-
-    /** Serve snapshot — see MaintainedTextIndex.captureSnap: the
-      * (version, floor) pair captured atomically under the handle's
-      * monitor, paired with the mutators' [[publishSnap]], so no serve
-      * (reader OR writer handle) can tear the pair while a fold's field
-      * writes land on another thread. Readers re-resolve the committed
-      * layout first (per-read freshness). */
-    private case class Snap(v: Int, floor: Int)
-    private def captureSnap(): Snap = this.synchronized {
-      if (readOnly) {
-        val v = vptr.current().getOrElse(0)
-        version = v
-        deltaFloor = readFloor(v)
-      }
-      Snap(version, deltaFloor)
-    }
-    private def publishSnap(v: Int, floor: Int): Unit = this.synchronized {
-      version = v
-      deltaFloor = floor
-    }
-
-    /** Base versions GC must keep: the newest `keepVersions` plus every
-      * version a live classify stream pinned at query start. */
-    private def baseKeepSet: Set[Int] = {
-      import scala.jdk.CollectionConverters._
-      pinnedVersions.keySet().asScala.toSet ++
-        ((version - keepVersions + 1) to version)
-    }
-
-    /** The delta sweep floor matching [[baseKeepSet]] — the oldest kept
-      * base version's floor, pins included (see
-      * MaintainedTextIndex.deltaSweepFloor: keepVersions = 2 reproduces
-      * the historical previous-floor grace; a raised knob — or a pin —
-      * widens the tier grace with the base retention). */
-    private def deltaSweepFloor: Int = {
-      import scala.jdk.CollectionConverters._
-      val oldestPin = pinnedVersions.keySet().asScala.minOption
-      val oldestKept = math.max(0, version - keepVersions + 1)
-      readFloor(math.min(oldestKept, oldestPin.getOrElse(oldestKept)))
-    }
 
     /** Release the writer lease (maintainer shutdown); no-op on a
       * read-only handle (it holds nothing). The instance must not mutate
       * the index afterwards. */
-    def close(): Unit = lease.foreach(_.release())
+    def close(): Unit = store.close()
 
-    /** Seed version 0 of the stored index from `(fp, corpus_id)`. Loudly
-      * refuses a root that already holds committed versions: the
-      * discovered pointer would keep reading the existing latest version,
-      * making the seed an invisible no-op that the next GC deletes. */
+    /** Seed version 0 of the stored index from `(fp, corpus_id)`
+      * ([[TieredStore.beginSeed]] refuses a root with a committed
+      * version). */
     def initIndex(idx: DataFrame): Unit = {
-      renewWriter("initIndex")
-      // "already seeded" = a MARKER-committed version exists (the index's
-      // own commit point): a seed that crashed between the data write and
-      // the floor marker left a version no reader resolves, and refusing
-      // on it would wedge the natural retry — the overwrite-mode write
-      // below heals it instead
-      if (graft.VersionedDirs.all(fs, indexRoot, "index_v").exists(committedBase))
-        throw new IllegalStateException(
-          s"index root $indexRoot already holds committed versions; seeding " +
-            "would be invisible (reads keep the discovered latest) — use a " +
-            "fresh root, or delete the existing versions to rebuild")
-      vptr.advance(0)
+      store.renewWriter("initIndex")
+      store.beginSeed()
       writeIndex(idx.select(col("fp"), col("corpus_id")), 0)
-      // marker BEFORE sidecar — the one crash-ordering rule for every
-      // version publish (the major's order): a crash after the marker
-      // leaves a committed version with a missing sidecar, which the
-      // takedown resolve heals via its semi-join fallback; the reverse
-      // order would leave a sidecar over an uncommitted version
-      Pipelines.writeIntMarker(fs, indexDir(0), floorMarker, 0)
+      store.commit(0, 0)
+      // sidecar after the commit point: a crash before it leaves a
+      // committed version without one, which the takedown resolve heals
+      // via its semi-join fallback
       writeSidecar(0)
     }
 
@@ -1268,13 +1074,14 @@ object Pipelines {
     // the base commit and the sidecar commit) simply resolves via the
     // base-scan fallback — correctness never depends on the sidecar.
     private def sidecarDir(v: Int) = s"$indexRoot/ids_v$v"
-    private def writeSidecar(v: Int): Unit =
-      s.read.parquet(indexDir(v))
+    private def writeSidecar(v: Int): Unit = writeSidecar(indexDir(v), sidecarDir(v))
+    private def writeSidecar(base: String, out: String): Unit =
+      s.read.parquet(base)
         .select(col("corpus_id").as("doc_id"), col("fp"))
         .repartition(col("doc_id")).sortWithinPartitions("doc_id")
         .write.mode("overwrite")
         .option("maxRecordsPerFile", Pipelines.BaseFileRecords)
-        .parquet(sidecarDir(v))
+        .parquet(out)
     private def sidecarAt(v: Int): Option[DataFrame] =
       if (graft.VersionedDirs.hasCommittedData(fs, sidecarDir(v)))
         Some(s.read.parquet(sidecarDir(v)))
@@ -1301,11 +1108,9 @@ object Pipelines {
       * keeper, so it wins the idempotent min-fold and then drops out
       * here; the raw form feeds the major compaction, which GCs it). */
     def currentIndex: DataFrame = {
-      val sn = captureSnap()
-      currentIndexRaw(listDeltaTier(sn.floor), sn.v).filter(col("corpus_id") >= 0)
+      val sn = store.captureSnap()
+      currentIndexRaw(store.listDeltaTier(sn.floor), sn.v).filter(col("corpus_id") >= 0)
     }
-    private def currentIndexRaw(tier: DeltaTier): DataFrame =
-      currentIndexRaw(tier, version)
     private def currentIndexRaw(tier: DeltaTier, v: Int): DataFrame =
       foldedIndexRaw(tier, None, v)
 
@@ -1332,7 +1137,7 @@ object Pipelines {
           val d = d0.groupBy(col("fp")).agg(min(col("corpus_id")).as("corpus_id"))
           val oversized = tier.oversized || (staged.isDefined &&
             graft.VersionedDirs.committedBytes(fs, stagingDir) > maxDeltaBroadcastBytes)
-          if (oversized) deltaFallbacks.incrementAndGet()
+          if (oversized) store.deltaFallbacks.incrementAndGet()
           def hinted(df: DataFrame): DataFrame =
             if (oversized) df else broadcast(df)
           val base = indexAt(v)
@@ -1352,29 +1157,14 @@ object Pipelines {
       if (bucketed) { ensureIdxTable(v); s.table(idxTable(v)) }
       else s.read.parquet(indexDir(v))
 
-    /** Lifecycle gauges for monitoring an unattended maintainer: current
-      * stored version, batches that staged acceptances, completed flushes,
-      * last flush wall-time, live classify pins, the delta tier's size in
-      * versions and bytes, and the broadcast-guard counters (finalize
-      * joins that fell back to shuffle; majors forced early by tier
-      * size). Wire through
+    /** Lifecycle gauges ([[TieredStore.stats]]) plus `pinned_versions`,
+      * the live classify pins. Wire through
       * [[graft.metrics.Observability.startReporter]]'s `indexGauges` to
       * emit these on the periodic O17 surface. */
     def stats: Map[String, Long] = {
-      val sn = captureSnap()
-      val tier = listDeltaTier(sn.floor)
-      Map(
-        "version" -> sn.v.toLong,
-        "staged_batches" -> stagedBatches.get(),
-        "flushes" -> flushes.get(),
-        "last_flush_ms" -> lastFlushMs,
-        "pinned_versions" -> pinnedVersions.size().toLong,
-        "delta_versions" -> tier.versions.size.toLong,
-        "delta_bytes" -> tier.bytes,
-        "delta_fallbacks" -> deltaFallbacks.get(),
-        "early_majors" -> earlyMajors.get(),
-        "shadow_deferred_majors" -> shadowDeferredMajors.get(),
-        "n_deleted" -> nDeleted.get())
+      val sn = store.captureSnap()
+      store.stats(sn, store.listDeltaTier(sn.floor)) +
+        ("pinned_versions" -> Pipelines.pinsFor(indexRoot).size().toLong)
     }
 
     /** DELETE fingerprints (the takedown operation): stage one tombstone
@@ -1391,14 +1181,14 @@ object Pipelines {
       * the first post-major copy becomes the durable keeper. `fps` is
       * `(fp)`; `n_deleted` counts staged tombstones. */
     def deleteFps(fps: DataFrame, batchId: Long): Unit = rootLock(indexRoot).synchronized {
-      renewWriter("deleteFps")
+      store.renewWriter("deleteFps")
       val tomb = fps.select(col("fp"), lit(-1L).as("doc_id")).persist()
       try {
         val n = tomb.count()
         if (n > 0) {
           tomb.write.mode("append").parquet(stagingDir)
-          nDeleted.addAndGet(n)
-          stagedBatches.incrementAndGet()
+          store.nDeleted.addAndGet(n)
+          store.stagedBatches.incrementAndGet()
         }
         if ((batchId + 1) % flushEvery == 0) flush()
       } finally tomb.unpersist()
@@ -1435,7 +1225,7 @@ object Pipelines {
       * base scan — the r15 shape — never to wrong results. */
     def deleteIds(ids: DataFrame, batchId: Long): Unit = rootLock(indexRoot).synchronized {
       val idsOnly = ids.select(col("doc_id"))
-      val tier = listDeltaTier()
+      val tier = store.listDeltaTier()
       val staged =
         if (Pipelines.stagedHasData(fs, stagingDir))
           Some(s.read.parquet(stagingDir)
@@ -1514,7 +1304,7 @@ object Pipelines {
       // actually reads. synchronized additionally excludes the flush
       // itself (finalizeBatch/flush hold the same lock); captureSnap
       // additionally re-resolves a READ-ONLY handle's committed version
-      val v = captureSnap().v
+      val v = store.captureSnap().v
       Pipelines.pinVersion(indexRoot, v)
       myPins.add(v)
       val ttl = ttlMs // local copy — the task closure must not capture `this`
@@ -1558,7 +1348,7 @@ object Pipelines {
       * keeper coalesce (an fp in both carries the same id; see the
       * delta-tier invariant above). Exposed for plan auditing. */
     private[graft] def finalizeJoined(batch: DataFrame): DataFrame =
-      finalizeJoined(batch, listDeltaTier())
+      finalizeJoined(batch, store.listDeltaTier())
     private def finalizeJoined(batch: DataFrame, tier: DeltaTier): DataFrame = {
       val base = indexAt(version).withColumnRenamed("corpus_id", "base_id")
       val joined0 = batch.join(base, Seq("fp"), "left")
@@ -1566,7 +1356,7 @@ object Pipelines {
         case Some(d0) =>
           val d = d0.withColumnRenamed("corpus_id", "delta_id")
           val side = if (!tier.oversized) broadcast(d) else {
-            deltaFallbacks.incrementAndGet()
+            store.deltaFallbacks.incrementAndGet()
             Pipelines.log.warn(
               s"delta tier at $indexRoot is ${tier.bytes} bytes " +
                 s"(> $maxDeltaBroadcastBytes): dropping the broadcast hint — " +
@@ -1625,7 +1415,7 @@ object Pipelines {
       * is SINGLE-WRITER by contract (one maintainer per indexRoot). */
     def finalizeBatch(batch: Dataset[DedupDecision], batchId: Long)
                      (sink: DataFrame => Unit): Unit = rootLock(indexRoot).synchronized {
-      renewWriter("finalizeBatch")
+      store.renewWriter("finalizeBatch")
       val out = finalizeJoined(batch.toDF()).persist()
       try {
         // pin before staging writes shift the dirs under the plan; also the
@@ -1644,101 +1434,45 @@ object Pipelines {
           // into a full index read + byte-identical rewrite
           if (!accepted.isEmpty) {
             accepted.write.mode("append").parquet(stagingDir)
-            stagedBatches.incrementAndGet()
+            store.stagedBatches.incrementAndGet()
           }
         }
         if ((batchId + 1) % flushEvery == 0) flush()
       } finally out.unpersist()
     }
 
-    /** Fold staged fps into the stored index as a NEW version (the x59
-      * maintained-index write), then clear staging and retire every index
-      * version outside the reachable set — current, previous (an in-flight
-      * batch plan may still read it), and any classify stream's pinned
-      * query-start version. Disk therefore holds O(live readers) index
-      * copies even under a long-running stream; without the GC it
-      * accreted one full copy per flush window. Delta mode: a flush is
-      * MINOR (one O(staged) delta write) until the tier reaches maxDeltas
-      * versions OR outgrows maxDeltaBroadcastBytes — the latter forces an
-      * EARLY major compaction (loud log + `early_majors` gauge) so a
-      * high-novelty phase cannot grow the tier without bound. A major
-      * advances the tier floor past the folded deltas and sweeps every
-      * delta dir below the PREVIOUS floor (torn crash remnants included)
-      * — the one-cycle grace window documented on the tier. No-op when
-      * nothing is staged; a footer-less `_temporary`-only staging remnant
-      * (killed append) is dropped, not read. Synchronized — see
-      * [[finalizeBatch]]. */
+    /** Fold staged fps into the stored index ([[TieredStore.flushWindow]]):
+      * a MINOR flush writes one O(staged) delta; a MAJOR folds base +
+      * delta tier + staging into a NEW base version (the x59
+      * maintained-index write) and the store retires every version outside
+      * the reachable set — disk holds O(live readers) index copies even
+      * under a long-running stream. No-op when nothing is staged; a
+      * footer-less `_temporary`-only staging remnant (killed append) is
+      * dropped, not read. Synchronized — see [[finalizeBatch]]. */
     def flush(): Unit = rootLock(indexRoot).synchronized {
-      renewWriter("flush")
+      store.renewWriter("flush")
       val staging = new org.apache.hadoop.fs.Path(stagingDir)
       if (Pipelines.stagedHasData(fs, stagingDir)) {
         val staged = s.read.parquet(stagingDir)
-        if (staged.isEmpty) fs.delete(staging, true) // committed zero-row parts only
-        else {
-          val t0 = System.nanoTime()
-          val tier = listDeltaTier() // one listing per flush
-          // while a shadow major builds, flush majors are DEFERRED (minor
-          // deltas only): a competing blocking fold would move the base
-          // version out from under the build's snapshot
-          val deferMajor = majorInFlight.get()
-          if (deferMajor &&
-              !(maxDeltas > 0 && tier.versions.size < maxDeltas && !tier.oversized))
-            shadowDeferredMajors.incrementAndGet()
-          if (deferMajor ||
-              (maxDeltas > 0 && tier.versions.size < maxDeltas && !tier.oversized)) {
-            // MINOR flush: persist this window's acceptances as one delta
-            // version — O(staged) I/O; the corpus-scale base is untouched
-            val k = tier.versions.lastOption.map(_ + 1).getOrElse(deltaFloor)
+        if (!staged.isEmpty) // committed zero-row parts only otherwise
+          store.flushWindow { tier =>
             sizedForWrite(staged.groupBy(col("fp")).agg(min(col("doc_id")).as("corpus_id")))
-              .write.mode("overwrite").parquet(deltaDir(k))
-          } else {
-            // MAJOR compaction (every flush when maxDeltas = 0): fold
-            // base + delta tier + staging into base N+1, advance the tier
-            // floor past the folded deltas, and retire versions no live
-            // reader can reach — keep current, previous (in-flight batch
-            // plans), and classify-pinned starts
-            if (maxDeltas > 0 && tier.oversized) {
-              earlyMajors.incrementAndGet()
-              Pipelines.log.warn(
-                s"delta tier at $indexRoot is ${tier.bytes} bytes " +
-                  s"(> $maxDeltaBroadcastBytes): forcing an EARLY major " +
-                  s"compaction at ${tier.versions.size}/$maxDeltas deltas")
-            }
+              .write.mode("overwrite").parquet(deltaDir(tier.next))
+          } { (tier, v) =>
             // fold over the RAW tier (tombstones still winning their min
             // groups — a staged re-accept of a deleted fp must not beat
             // the epoch's tombstone), then drop the deleted fps from the
             // compacted base: the delete's GC moment. The fold rides the
-            // no-base-shuffle topology ([[foldedIndexRaw]]) — the old
-            // updateFingerprintIndex(currentIndexRaw ∪ staged) shape
-            // re-grouped the whole corpus-scale base on fp per major.
-            val next = foldedIndexRaw(tier, Some(staged), version)
-              .filter(col("corpus_id") >= 0)
-            vptr.advance(version + 1)
-            writeIndex(next, version + 1)
-            val newFloor = tier.versions.lastOption.map(_ + 1).getOrElse(deltaFloor)
-            Pipelines.writeIntMarker(fs, indexDir(version + 1), floorMarker, newFloor)
-            // sidecar AFTER the floor marker: deleteIds tolerates a
-            // missing sidecar by design (base-scan fallback), so nothing
-            // requires it to precede the marker — writing it first would
-            // widen the torn-flush window in which the new version stays
-            // UNCOMMITTED (the marker is the commit point), stalling
-            // readers on version N for the sidecar write's duration
-            writeSidecar(version + 1)
-            publishSnap(version + 1, newFloor)
-            // grace GC: the deltas below the sweep floor
-            // survive one cycle for in-flight lazy plans; everything below
-            // the previous floor — superseded OR torn — is swept now
-            Pipelines.retireVersionsBelow(fs, indexRoot, deltaPrefix, deltaSweepFloor)
-            import scala.jdk.CollectionConverters._
-            val keep = baseKeepSet
-            Pipelines.retireVersionsExcept(fs, indexRoot, "index_v", keep,
-              onRetire = v => if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${idxTable(v)}"))
-            Pipelines.retireVersionsExcept(fs, indexRoot, "ids_v", keep)
+            // no-base-shuffle topology ([[foldedIndexRaw]]).
+            writeIndex(foldedIndexRaw(tier, Some(staged), version)
+              .filter(col("corpus_id") >= 0), v)
+            store.commit(v, tier.next)
+            // sidecar AFTER the commit point: the takedown resolve
+            // tolerates a missing sidecar (base-scan fallback), and writing
+            // it first would stall readers on version N for its duration
+            writeSidecar(v)
           }
-          flushes.incrementAndGet()
-          lastFlushMs = (System.nanoTime() - t0) / 1000000L
-          fs.delete(staging, true)
-        }
+        fs.delete(staging, true)
       } else if (fs.exists(staging)) {
         // crash remnant: only _temporary/ left by a killed append — no
         // readable footer, so reading would throw; the engine's checkpoint
@@ -1747,16 +1481,9 @@ object Pipelines {
       }
     }
 
-    /** SHADOW MAJOR compaction — the flush-path major's O(index) fold run
-      * OFF the root lock (the serving pillars'
-      * [[graft.streaming.MaintainedAnnIndex.compactBase]] shape applied
-      * to the fp index): snapshot the live delta tier, min-fold base ∪
-      * tier off-lock (tombstones win their groups, then drop — the
-      * delete's GC moment) while classify/finalize/flush proceed; flush
-      * defers its majors to minors for the duration
-      * (`shadow_deferred_majors`). The swap is O(1) metadata: rename +
-      * floor marker + grace sweep; acceptances staged or flushed
-      * MID-BUILD land in deltas above the snapshot and stay live.
+    /** SHADOW MAJOR compaction ([[TieredStore.shadowMajor]]) — the flush
+      * major's min-fold, minus staging, written to the shadow index and
+      * its sidecar off the root lock, then swapped in.
       *
       * EPOCH note: the fold boundary is the SNAPSHOT, not the swap — a
       * re-accept of a deleted fp staged mid-build counts as the first
@@ -1765,93 +1492,31 @@ object Pipelines {
       * Same admit-rather-than-block direction, one window earlier.
       * Bucketed mode: the shadow is written as an external bucketed
       * layout (bucket marker travels with the rename) and readers
-      * re-register it via the stored marker. Returns false without
-      * folding on an empty tier or when another compaction holds the
-      * flag (busy — the maintenance-cadence caller's stand-down
-      * signal). `onPrepared` is the test seam between build and swap. */
-    def compactBase(onPrepared: () => Unit = () => ()): Boolean = {
-      if (!majorInFlight.compareAndSet(false, true)) false
-      else
-        try compactBaseImpl(onPrepared)
-        finally majorInFlight.set(false)
-    }
-
-    /** Unattended compaction decision — see
-      * [[graft.streaming.MaintainedAnnIndex.maybeCompact]] (same
-      * contract and deployment shape). */
-    def maybeCompact(maxTier: Int): Boolean =
-      listDeltaTier().versions.size >= maxTier && compactBase()
-
-    private def compactBaseImpl(onPrepared: () => Unit): Boolean = {
-      renewWriter("compactBase")
-      val (v0, tier0) = rootLock(indexRoot).synchronized {
-        (version, listDeltaTier())
+      * re-register it via the stored marker. */
+    def compactBase(onPrepared: () => Unit = () => ()): Boolean =
+      store.shadowMajor(onPrepared) { (_, tier) =>
+        val shadowDir = store.shadowDir("index_v")
+        val next = currentIndexRaw(tier, version).filter(col("corpus_id") >= 0)
+        if (bucketed) {
+          val shadowTable = s"graft_mdix_${tableSuffix}_shadow"
+          s.sql(s"DROP TABLE IF EXISTS $shadowTable")
+          next.write.mode("overwrite")
+            .bucketBy(fpBuckets, "fp").sortBy("fp")
+            .option("path", shadowDir)
+            .saveAsTable(shadowTable)
+          Pipelines.writeBucketMarker(fs, shadowDir, fpBuckets)
+          // external table: dropping the metadata keeps the files for the
+          // rename; the final version re-registers from the stored marker
+          s.sql(s"DROP TABLE IF EXISTS $shadowTable")
+        } else next.write.mode("overwrite").parquet(shadowDir)
+        // the sidecar is built off-lock too, so the new version's resolve
+        // path is pruned from its first request
+        writeSidecar(shadowDir, store.shadowDir("ids_v"))
       }
-      if (tier0.isEmpty) return false
-      val shadowDir = s"$indexRoot/index_shadow"
-      val shadowTable = s"graft_mdix_${tableSuffix}_shadow"
-      fs.delete(new org.apache.hadoop.fs.Path(shadowDir), true)
-      // ---- PREPARE (no lock): the blocking fold, minus staging --------
-      val next = currentIndexRaw(tier0).filter(col("corpus_id") >= 0)
-      if (bucketed) {
-        s.sql(s"DROP TABLE IF EXISTS $shadowTable")
-        next.write.mode("overwrite")
-          .bucketBy(fpBuckets, "fp").sortBy("fp")
-          .option("path", shadowDir)
-          .saveAsTable(shadowTable)
-        Pipelines.writeBucketMarker(fs, shadowDir, fpBuckets)
-        // external table: dropping the metadata keeps the files for the
-        // rename; the final version re-registers from the stored marker
-        s.sql(s"DROP TABLE IF EXISTS $shadowTable")
-      } else next.write.mode("overwrite").parquet(shadowDir)
-      // sidecar built off-lock from the shadow's committed files (same
-      // one-narrow-re-read discipline as writeSidecar); swapped in with
-      // the base so the new version's resolve path is pruned from its
-      // first request
-      val shadowIdsDir = s"$indexRoot/ids_shadow"
-      fs.delete(new org.apache.hadoop.fs.Path(shadowIdsDir), true)
-      s.read.parquet(shadowDir)
-        .select(col("corpus_id").as("doc_id"), col("fp"))
-        .repartition(col("doc_id")).sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", Pipelines.BaseFileRecords)
-        .parquet(shadowIdsDir)
-      onPrepared()
-      // ---- SWAP (lock; O(1) metadata) ---------------------------------
-      rootLock(indexRoot).synchronized {
-        renewWriter("compactBase")
-        assert(version == v0,
-          s"base version moved under an in-flight shadow major at $indexRoot")
-        vptr.advance(version + 1)
-        if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${idxTable(version + 1)}")
-        fs.delete(new org.apache.hadoop.fs.Path(indexDir(version + 1)), true)
-        if (!fs.rename(new org.apache.hadoop.fs.Path(shadowDir),
-            new org.apache.hadoop.fs.Path(indexDir(version + 1))))
-          throw new IllegalStateException(
-            s"shadow major swap failed: cannot rename $shadowDir to ${indexDir(version + 1)}")
-        val newFloor = tier0.versions.last + 1
-        Pipelines.writeIntMarker(fs, indexDir(version + 1), floorMarker, newFloor)
-        // sidecar swap AFTER the base rename AND the floor marker: a
-        // crash before the rename leaves the new version sidecar-less —
-        // deleteIds falls back to the base scan, never to wrong results —
-        // while a sidecar rename BEFORE the marker would widen the
-        // torn-swap window in which the version stays UNCOMMITTED (the
-        // marker is the commit point readers resolve by)
-        fs.delete(new org.apache.hadoop.fs.Path(sidecarDir(version + 1)), true)
-        if (!fs.rename(new org.apache.hadoop.fs.Path(shadowIdsDir),
-            new org.apache.hadoop.fs.Path(sidecarDir(version + 1))))
-          throw new IllegalStateException(
-            s"shadow major swap failed: cannot rename $shadowIdsDir to " +
-              sidecarDir(version + 1))
-        publishSnap(version + 1, newFloor)
-        Pipelines.retireVersionsBelow(fs, indexRoot, deltaPrefix, deltaSweepFloor)
-        val keep = baseKeepSet
-        Pipelines.retireVersionsExcept(fs, indexRoot, "index_v", keep,
-          onRetire = v => if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${idxTable(v)}"))
-        Pipelines.retireVersionsExcept(fs, indexRoot, "ids_v", keep)
-      }
-      true
-    }
+
+    /** Run [[compactBase]] when the live tier holds at least `maxTier`
+      * deltas ([[TieredStore.maybeCompact]]). */
+    def maybeCompact(maxTier: Int): Boolean = store.maybeCompact(maxTier)(compactBase())
   }
 
   /** x89 — the exact-dedup TAKEDOWN lifecycle, oracle-gated (the dedup
@@ -2130,12 +1795,8 @@ object Pipelines {
                                      pointer: Option[VersionPointer] = None,
                                      keepVersions: Int = 2,
                                      readOnly: Boolean = false) {
+    import TieredStore.DeltaTier
     require(flushEvery >= 1, "flushEvery must be >= 1")
-    require(maxDeltas >= 0, "maxDeltas must be >= 0")
-    // keep >= 2: an in-flight lazy plan built just before a major still
-    // reads the previous base pair (the grace rule); raise it for
-    // deployments with cross-process readers slower than one major cycle
-    require(keepVersions >= 2, "keepVersions must be >= 2")
     private def bucketed = sigBuckets > 0
     // catalog-safe, root-derived table family (unsigned hex — no '-')
     private val tableSuffix = java.lang.Integer.toHexString(indexRoot.hashCode)
@@ -2144,34 +1805,13 @@ object Pipelines {
     private def tgDir(v: Int) = s"$indexRoot/tg_v$v"
     private def sigStaging = s"$indexRoot/sig_staging"
     private def tgStaging = s"$indexRoot/tg_staging"
-    private def fs = new org.apache.hadoop.fs.Path(indexRoot)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // restart-safe version pointer (see MaintainedDedupIndex), behind the
-    // same VersionPointer seam (the pointer tracks the SIG version; the
-    // two relations version together and resume at the latest COMPLETE
-    // pair — a crash between the sig and tg writes leaves an orphan sig_v
-    // that is simply overwritten by the next flush); staging re-folds are
-    // harmless — the distinct fold is idempotent
-    private val vptr: VersionPointer =
-      pointer.getOrElse(new DiscoveredVersionPointer(fs, indexRoot, "sig_v"))
-    // this index's commit point is the COMPLETE pair — a crash between
-    // the sig and tg writes leaves an orphan sig_v the index never
-    // serves, and a pointer judging it committed would keep the crashed
-    // claim and wedge the restarted writer's next advance()
-    vptr.bindCommitted(v =>
-      graft.VersionedDirs.hasCommittedData(fs, sigDir(v)) &&
-        graft.VersionedDirs.hasCommittedData(fs, tgDir(v)))
-    @volatile private var version = (for {
-      a <- vptr.current()
-      b <- Pipelines.latestVersion(fs, indexRoot, "tg_v")
-    } yield math.min(a, b)).getOrElse(0)
-    // ---- delta tier (maxDeltas > 0): the LSM shape, near-dup form ----
-    // A minor flush persists the window's accepted signatures + shingle
-    // sets as a delta PAIR (`dsig_v<k>`/`dtg_v<k>`, each flush-window
-    // sized) instead of rewriting both corpus-scale relations; every
-    // (maxDeltas+1)-th flush major-compacts base + deltas into version
-    // N+1. Screening stays BIT-IDENTICAL to the fold-every-flush mode —
-    // including [[graft.functions.Dedup.MaxBucket]]: a bucket's cap
+    private def fs: org.apache.hadoop.fs.FileSystem = store.fs
+    // ---- versions (the TieredStore): base pair `sig_v<N>`/`tg_v<N>`
+    // (markers on the sig half), delta pairs `dsig_v<k>`/`dtg_v<k>`. A
+    // minor flush persists the window's accepted signatures + shingle
+    // sets as a delta PAIR instead of rewriting both corpus-scale
+    // relations. Screening stays BIT-IDENTICAL to the fold-every-flush
+    // mode — including [[graft.functions.Dedup.MaxBucket]]: a bucket's cap
     // verdict must count base AND delta members together, so the screen
     // corrects the base-only window with the broadcast-sized set of
     // delta-touched buckets (only those buckets can change verdict; see
@@ -2187,34 +1827,14 @@ object Pipelines {
     // folded index would keep) until the next major compaction heals the
     // duplication. Conservative (never admits an over-cap bucket), and
     // self-healing.
-    private val dsigPrefix = "dsig_v"
-    private val dtgPrefix = "dtg_v"
-    private val floorMarker = "_graft_delta_floor"
-    private def dsigDir(k: Int) = s"$indexRoot/$dsigPrefix$k"
-    private def dtgDir(k: Int) = s"$indexRoot/$dtgPrefix$k"
-    private def readFloor(v: Int): Int =
-      Pipelines.readIntMarker(fs, sigDir(v), floorMarker).getOrElse(0)
-    @volatile private var deltaFloor = readFloor(version)
-    /** One snapshot of the live delta tier — committed PAIRS only (both
-      * halves must have committed data: a torn half keeps the whole pair
-      * invisible, and the next minor flush overwrites it), at or above
-      * the floor. `bytes` totals the SIGNATURE halves — the screen's
-      * broadcast relations all derive from the signature tier, which is
-      * what the broadcast guard must bound. Mutators list ONCE per locked
-      * mutation and thread the snapshot through (see
-      * MaintainedDedupIndex.DeltaTier). */
-    private case class DeltaTier(versions: Seq[Int], bytes: Long) {
-      def isEmpty: Boolean = versions.isEmpty
-      def oversized: Boolean = bytes > maxDeltaBroadcastBytes
-    }
-    private def listDeltaTier(): DeltaTier = listDeltaTier(deltaFloor)
-    private def listDeltaTier(floor: Int): DeltaTier = {
-      val sig = graft.VersionedDirs.allWithBytes(fs, indexRoot, dsigPrefix)
-        .filter(_._1 >= floor)
-      val tg = graft.VersionedDirs.all(fs, indexRoot, dtgPrefix).toSet
-      val pairs = sig.filter { case (k, _) => tg.contains(k) }
-      DeltaTier(pairs.map(_._1), pairs.map(_._2).sum)
-    }
+    private val store = new TieredStore(s, indexRoot, "near-dup", "MaintainedNearDupIndex",
+      basePrefixes = Seq("sig_v", "tg_v"), deltaPrefixes = Seq("dsig_v", "dtg_v"),
+      maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
+      readOnly,
+      unregister = v => if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${sigTable(v)}"))
+    private def version = store.version
+    private def dsigDir(k: Int) = s"$indexRoot/dsig_v$k"
+    private def dtgDir(k: Int) = s"$indexRoot/dtg_v$k"
     /** Deleted doc_ids recorded in the delta tier (tombstone signature
       * rows, `band = -1` — see [[deleteDocs]]). Delta-sized by
       * construction; every serving consumer anti-joins it under the same
@@ -2257,82 +1877,10 @@ object Pipelines {
           .reduce(_ unionByName _)
           .filter(col("tg").isNotNull) // tombstone shingle rows are null-tg
           .dropDuplicates("doc_id"), tier, hint))
-    // lifecycle counters — see MaintainedDedupIndex.stats
-    private val stagedBatches = new java.util.concurrent.atomic.AtomicLong()
-    private val flushes = new java.util.concurrent.atomic.AtomicLong()
-    private val deltaFallbacks = new java.util.concurrent.atomic.AtomicLong()
-    private val earlyMajors = new java.util.concurrent.atomic.AtomicLong()
-    private val nDeleted = new java.util.concurrent.atomic.AtomicLong()
-    private val shadowDeferredMajors = new java.util.concurrent.atomic.AtomicLong()
-    // one shadow major at a time; read by flush() to defer ITS majors to
-    // minor delta pairs while the build is in flight (see compactBase)
-    private val majorInFlight = new java.util.concurrent.atomic.AtomicBoolean(false)
-    @volatile private var lastFlushMs = -1L
-    // single-writer contract, enforced — see MaintainedDedupIndex; a
-    // READ-ONLY handle ([[Pipelines.openNearDupReader]]) takes NOTHING
-    private val lease: Option[WriterLease] =
-      if (readOnly) None
-      else Some(new WriterLease(fs, indexRoot, leaseTtlMs, writerId))
-    lease.foreach(_.acquire())
-    if (!readOnly) vptr.reconcile()
-
-    /** Renew the writer lease before a mutation — also the gate that
-      * makes every mutator on a read-only handle fail loudly. */
-    private def renewWriter(op: String): Unit = lease match {
-      case Some(l) => l.checkAndRenew()
-      case None => throw new UnsupportedOperationException(
-        s"$op on a read-only near-dup-index handle for $indexRoot — " +
-          "construct the writer (new MaintainedNearDupIndex) to mutate")
-    }
-
-    /** Serve snapshot — see MaintainedTextIndex.captureSnap: the
-      * (version, floor) pair captured atomically under the handle's
-      * monitor, paired with the mutators' [[publishSnap]], so no serve
-      * (reader OR writer handle) can tear the pair while a fold's field
-      * writes land on another thread. Readers re-resolve the committed
-      * PAIR first (per-read freshness). */
-    private case class Snap(v: Int, floor: Int)
-    private def captureSnap(): Snap = this.synchronized {
-      if (readOnly) {
-        val v = (for {
-          a <- vptr.current()
-          b <- Pipelines.latestVersion(fs, indexRoot, "tg_v")
-        } yield math.min(a, b)).getOrElse(0)
-        version = v
-        deltaFloor = readFloor(v)
-      }
-      Snap(version, deltaFloor)
-    }
-    private def publishSnap(v: Int, floor: Int): Unit = this.synchronized {
-      version = v
-      deltaFloor = floor
-    }
-
-    /** Base versions GC must keep — the newest `keepVersions` (see
-      * MaintainedTextIndex.baseKeepSet). */
-    private def baseKeepSet: Set[Int] =
-      ((version - keepVersions + 1) to version).toSet
-
-    /** The delta sweep floor matching [[baseKeepSet]] — the oldest kept
-      * pair's floor (see MaintainedTextIndex.deltaSweepFloor). */
-    private def deltaSweepFloor: Int =
-      readFloor(math.max(0, version - keepVersions + 1))
-
-    /** Lifecycle gauges — same contract as MaintainedDedupIndex.stats. */
+    /** Lifecycle gauges ([[TieredStore.stats]]). */
     def stats: Map[String, Long] = {
-      val sn = captureSnap()
-      val tier = listDeltaTier(sn.floor)
-      Map(
-        "version" -> sn.v.toLong,
-        "staged_batches" -> stagedBatches.get(),
-        "flushes" -> flushes.get(),
-        "last_flush_ms" -> lastFlushMs,
-        "delta_versions" -> tier.versions.size.toLong,
-        "delta_bytes" -> tier.bytes,
-        "delta_fallbacks" -> deltaFallbacks.get(),
-        "early_majors" -> earlyMajors.get(),
-        "shadow_deferred_majors" -> shadowDeferredMajors.get(),
-        "n_deleted" -> nDeleted.get())
+      val sn = store.captureSnap()
+      store.stats(sn, store.listDeltaTier(sn.floor))
     }
 
     /** DELETE documents (the takedown operation): stage one tombstone
@@ -2347,7 +1895,7 @@ object Pipelines {
       * the flush boundary, not mid-window. `ids` is `(doc_id)`;
       * `n_deleted` counts staged tombstones. */
     def deleteDocs(ids: DataFrame, batchId: Long): Unit = rootLock(indexRoot).synchronized {
-      renewWriter("deleteDocs")
+      store.renewWriter("deleteDocs")
       val tomb = ids.select(col("doc_id")).persist()
       try {
         val n = tomb.count()
@@ -2357,8 +1905,8 @@ object Pipelines {
             .write.mode("append").parquet(tgStaging)
           tomb.select(lit(-1).as("band"), lit("").as("min_hash"), col("doc_id"))
             .write.mode("append").parquet(sigStaging)
-          nDeleted.addAndGet(n)
-          stagedBatches.incrementAndGet()
+          store.nDeleted.addAndGet(n)
+          store.stagedBatches.incrementAndGet()
         }
         if ((batchId + 1) % flushEvery == 0) flush()
       } finally tomb.unpersist()
@@ -2366,43 +1914,19 @@ object Pipelines {
 
     /** Release the writer lease (maintainer shutdown). The instance must
       * not mutate the index afterwards. */
-    def close(): Unit = lease.foreach(_.release())
+    def close(): Unit = store.close()
 
-    /** Seed version 0 from the already-ingested corpus `(doc_id, text)`.
-      * Refuses a root with existing committed versions — see
-      * MaintainedDedupIndex.initIndex. */
+    /** Seed version 0 from the already-ingested corpus `(doc_id, text)`
+      * ([[TieredStore.beginSeed]] refuses a root with a committed
+      * version): sig half, tg half, then the commit. */
     def initIndex(corpus: DataFrame): Unit = {
-      renewWriter("initIndex")
-      // "already seeded" = a COMPLETE committed pair exists (the index's
-      // own commit point): a seed that crashed between the sig and tg
-      // writes leaves an orphan half the index never serves, and
-      // refusing on it would wedge the natural retry — the overwrite-
-      // mode writes below heal the torn half instead
-      val pairCommitted = (v: Int) =>
-        graft.VersionedDirs.hasCommittedData(fs, sigDir(v)) &&
-          graft.VersionedDirs.hasCommittedData(fs, tgDir(v))
-      if ((graft.VersionedDirs.all(fs, indexRoot, "sig_v") ++
-           graft.VersionedDirs.all(fs, indexRoot, "tg_v"))
-          .exists(pairCommitted))
-        throw new IllegalStateException(
-          s"index root $indexRoot already holds committed versions; seeding " +
-            "would be invisible — use a fresh root, or delete to rebuild")
-      vptr.advance(0)
+      store.renewWriter("initIndex")
+      store.beginSeed()
       writeSignatures(graft.functions.Dedup.minhashSignatures(corpus)
         .select(col("band"), col("min_hash"), col("doc_id")), 0)
-      Pipelines.writeIntMarker(fs, sigDir(0), floorMarker, 0)
-      // tg half via shadow + rename — see flush()'s major branch: with
-      // sig_v0 already committed, a direct multi-file tg write would make
-      // the pair resolvable from its first landed file
-      val tgSeedShadow = s"$indexRoot/tg_flush_shadow"
-      fs.delete(new org.apache.hadoop.fs.Path(tgSeedShadow), true)
       graft.functions.Dedup.shingleRelation(corpus)
-        .write.mode("overwrite").parquet(tgSeedShadow)
-      fs.delete(new org.apache.hadoop.fs.Path(tgDir(0)), true)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(tgSeedShadow),
-          new org.apache.hadoop.fs.Path(tgDir(0))))
-        throw new IllegalStateException(
-          s"seed commit failed: cannot rename $tgSeedShadow to ${tgDir(0)}")
+        .write.mode("overwrite").parquet(tgDir(0))
+      store.commit(0, 0)
     }
 
     /** Write a signature version: plain parquet, or (bucketed mode) a
@@ -2449,11 +1973,9 @@ object Pipelines {
     /** The current LOGICAL index: base plus the delta tier, deleted docs
       * excluded from both. */
     def currentSignatures: DataFrame = {
-      val sn = captureSnap()
-      currentSignatures(listDeltaTier(sn.floor), sn.v)
+      val sn = store.captureSnap()
+      currentSignatures(store.listDeltaTier(sn.floor), sn.v)
     }
-    private def currentSignatures(tier: DeltaTier): DataFrame =
-      currentSignatures(tier, version)
     // Base∪delta WITHOUT the old corpus-wide dropDuplicates exchange
     // (guide §2.4): base and delta doc_ids only collide on crash-replay
     // re-accepts, whose rows are IDENTICAL (the verifyShingles
@@ -2474,11 +1996,9 @@ object Pipelines {
             .unionByName(d)
       }
     def currentShingles: DataFrame = {
-      val sn = captureSnap()
-      currentShingles(listDeltaTier(sn.floor), sn.v)
+      val sn = store.captureSnap()
+      currentShingles(store.listDeltaTier(sn.floor), sn.v)
     }
-    private def currentShingles(tier: DeltaTier): DataFrame =
-      currentShingles(tier, version)
     private def currentShingles(tier: DeltaTier, v: Int): DataFrame =
       deltaShingles(tier) match {
         case None => baseShingles(v)
@@ -2501,8 +2021,6 @@ object Pipelines {
       * IDENTICAL shingle arrays: a duplicate can transiently inflate a
       * doc's n_matches (never flip a match verdict or change the best
       * match) until the next major compaction heals the tier. */
-    private def verifyShingles(tier: DeltaTier): DataFrame =
-      verifyShingles(tier, broadcast)
     private def verifyShingles(tier: DeltaTier,
                                hint: DataFrame => DataFrame): DataFrame =
       verifyShingles(tier, hint, version)
@@ -2533,7 +2051,7 @@ object Pipelines {
       * candidates, no forced corpus-scale broadcast) until the early
       * major compaction clears the tier. */
     private[graft] def screenCandidates(batchSig: DataFrame): DataFrame =
-      screenCandidates(batchSig, listDeltaTier())
+      screenCandidates(batchSig, store.listDeltaTier())
     private def screenCandidates(batchSig: DataFrame, tier: DeltaTier): DataFrame =
       screenCandidates(batchSig, tier, version)
     private def screenCandidates(batchSig: DataFrame, tier: DeltaTier,
@@ -2547,7 +2065,7 @@ object Pipelines {
       val hinted: DataFrame => DataFrame =
         if (!tier.oversized) broadcast
         else {
-          deltaFallbacks.incrementAndGet()
+          store.deltaFallbacks.incrementAndGet()
           Pipelines.log.warn(
             s"near-dup delta tier at $indexRoot is ${tier.bytes} bytes " +
               s"(> $maxDeltaBroadcastBytes): dropping the screen's broadcast " +
@@ -2607,7 +2125,7 @@ object Pipelines {
       * the append just committed (see MaintainedDedupIndex.finalizeBatch);
       * across processes the index is single-writer by contract. */
     def screenBatch(batch: DataFrame, batchId: Long)(sink: DataFrame => Unit): Unit = rootLock(indexRoot).synchronized {
-      renewWriter("screenBatch")
+      store.renewWriter("screenBatch")
       import org.apache.spark.sql.expressions.Window
       // one tokenize+shingle pass for the whole screen: the shingle
       // relation persists and BOTH the signatures (derived from it) and
@@ -2616,7 +2134,7 @@ object Pipelines {
         batch.repartition(s.sparkContext.defaultParallelism)).persist()
       val sig = graft.functions.Dedup.signaturesFromShingles(tg).persist()
       val batchSig = sig.select(col("band"), col("min_hash"), col("doc_id").as("batch_id"))
-      val tier = listDeltaTier() // one listing for the whole screen
+      val tier = store.listDeltaTier() // one listing for the whole screen
       val cands = screenCandidates(batchSig, tier)
       // same fallback decision as the candidate screen (no second gauge
       // increment — screenCandidates already counted this screen's)
@@ -2653,7 +2171,7 @@ object Pipelines {
             sig.join(accepted, "doc_id")
               .select(col("band"), col("min_hash"), col("doc_id"))
               .write.mode("append").parquet(sigStaging)
-            stagedBatches.incrementAndGet()
+            store.stagedBatches.incrementAndGet()
           }
         }
         if ((batchId + 1) % flushEvery == 0) flush()
@@ -2669,13 +2187,13 @@ object Pipelines {
       * per consumer (the batch path persists it only because it also
       * feeds the staging writes). */
     def screen(batch: DataFrame): DataFrame = {
-      val sn = captureSnap()
+      val sn = store.captureSnap()
       val tg = graft.functions.Dedup.shingleRelation(
         batch.repartition(s.sparkContext.defaultParallelism))
       val sig = graft.functions.Dedup.signaturesFromShingles(tg)
       val batchSig = sig.select(col("band"), col("min_hash"),
         col("doc_id").as("batch_id"))
-      val tier = listDeltaTier(sn.floor)
+      val tier = store.listDeltaTier(sn.floor)
       val cands = screenCandidates(batchSig, tier, sn.v)
       val vhint: DataFrame => DataFrame =
         if (tier.oversized) identity else broadcast
@@ -2692,19 +2210,17 @@ object Pipelines {
         .orderBy(col("batch_id"))
     }
 
-    /** Fold staged signatures + shingles into version N+1, then clear
-      * staging and retire versions older than the previous pair (see
-      * MaintainedDedupIndex.flush — without GC each flush window leaves a
-      * dead full-index copy behind). Distinct-folded for replay
-      * idempotency, and restricted to docs staged in BOTH relations: a
-      * crash between the two staging appends leaves one half of a batch,
-      * and folding a doc's signatures without its shingles would
-      * corrupt later verifies — the engine's checkpoint replays the
-      * interrupted batch, whose re-append completes the pair. A staging
-      * dir with no complete doc is dropped, not folded. No-op when
-      * nothing is staged. */
+    /** Fold staged signatures + shingles ([[TieredStore.flushWindow]]):
+      * a MINOR delta pair, or a MAJOR base pair N+1 (sig half, tg half,
+      * then the commit). Distinct-folded for replay idempotency, and
+      * restricted to docs staged in BOTH relations: a crash between the
+      * two staging appends leaves one half of a batch, and folding a
+      * doc's signatures without its shingles would corrupt later
+      * verifies — the engine's checkpoint replays the interrupted batch,
+      * whose re-append completes the pair. A staging dir with no complete
+      * doc is dropped, not folded. No-op when nothing is staged. */
     def flush(): Unit = rootLock(indexRoot).synchronized {
-      renewWriter("flush")
+      store.renewWriter("flush")
       val sp = new org.apache.hadoop.fs.Path(sigStaging)
       val tp = new org.apache.hadoop.fs.Path(tgStaging)
       if (Pipelines.stagedHasData(fs, sigStaging) && Pipelines.stagedHasData(fs, tgStaging)) {
@@ -2714,44 +2230,17 @@ object Pipelines {
           .join(tgStaged.select("doc_id").distinct(), "doc_id")
           .persist()
         try {
-          if (!complete.isEmpty) {
-            val t0 = System.nanoTime()
-            val tier = listDeltaTier() // one listing per flush
-            // shadow-major defer — see MaintainedDedupIndex.flush
-            val deferMajor = majorInFlight.get()
-            if (deferMajor &&
-                !(maxDeltas > 0 && tier.versions.size < maxDeltas && !tier.oversized))
-              shadowDeferredMajors.incrementAndGet()
-            if (deferMajor ||
-                (maxDeltas > 0 && tier.versions.size < maxDeltas && !tier.oversized)) {
-              // MINOR flush: persist the window's acceptances as one
-              // delta pair — O(staged) I/O, both corpus-scale relations
-              // untouched. dtg writes BEFORE dsig (orphan-asymmetry: see
-              // the tier comment) and the pair only counts once both
-              // exist.
-              val k = tier.versions.lastOption.map(_ + 1).getOrElse(deltaFloor)
+          if (!complete.isEmpty)
+            store.flushWindow { tier =>
+              // dtg BEFORE dsig (orphan asymmetry: see the store comment)
               sizedForWrite(tgStaged.join(complete, "doc_id")
                   .dropDuplicates("doc_id"))
-                .write.mode("overwrite").parquet(dtgDir(k))
+                .write.mode("overwrite").parquet(dtgDir(tier.next))
               sizedForWrite(sigStaged.join(complete, "doc_id")
                   .select(col("band"), col("min_hash"), col("doc_id"))
                   .dropDuplicates("band", "min_hash", "doc_id"))
-                .write.mode("overwrite").parquet(dsigDir(k))
-            } else {
-              // MAJOR compaction (every flush when maxDeltas = 0; EARLY
-              // when the tier outgrew the broadcast bound): fold base +
-              // delta tier + staging into version N+1, advance the tier
-              // floor past the folded deltas (grace-retiring delta pairs
-              // below the PREVIOUS floor, torn halves included), and
-              // retire old base pairs
-              if (maxDeltas > 0 && tier.oversized) {
-                earlyMajors.incrementAndGet()
-                Pipelines.log.warn(
-                  s"near-dup delta tier at $indexRoot is ${tier.bytes} bytes " +
-                    s"(> $maxDeltaBroadcastBytes): forcing an EARLY major " +
-                    s"compaction at ${tier.versions.size}/$maxDeltas deltas")
-              }
-              vptr.advance(version + 1)
+                .write.mode("overwrite").parquet(dsigDir(tier.next))
+            } { (tier, v) =>
               // staged tombstones delete at the fold: their docs leave
               // both compacted relations (tier-level tombstones are
               // already excluded by currentSignatures/currentShingles),
@@ -2763,9 +2252,8 @@ object Pipelines {
                   .select(df.columns.map(col).toIndexedSeq: _*) // keep input order
               // the staged side folds alone (staged-sized dedup) and its
               // doc set anti-joins the served relation as a broadcast —
-              // the old shape ran a corpus-wide dropDuplicates over
-              // base ∪ tier ∪ staged per major (guide §2.4; identical-row
-              // invariant, see currentSignatures)
+              // no corpus-wide dropDuplicates over base ∪ tier ∪ staged
+              // (guide §2.4; identical-row invariant, see currentSignatures)
               val stagedSigLive = sigStaged.filter(col("band") >= 0)
                 .join(complete, "doc_id")
                 .select(col("band"), col("min_hash"), col("doc_id"))
@@ -2775,44 +2263,17 @@ object Pipelines {
                 df.join(broadcast(stagedDocs), Seq("doc_id"), "left_anti")
                   .select(df.columns.map(col).toIndexedSeq: _*)
               writeSignatures(
-                dropDel(dropStaged(currentSignatures(tier)))
+                dropDel(dropStaged(currentSignatures(tier, version)))
                   .unionByName(stagedSigLive),
-                version + 1)
-              val newFloor = tier.versions.lastOption.map(_ + 1).getOrElse(deltaFloor)
-              Pipelines.writeIntMarker(fs, sigDir(version + 1), floorMarker, newFloor)
-              // tg half via shadow-write + RENAME (the shadow-compact
-              // path's discipline): the pair's commit point is "both
-              // halves hold data", and the layout rule calls a dir
-              // committed from its FIRST landed data file — a direct
-              // multi-file write into tg_v<N+1> would let a cross-process
-              // reader capture mid-write and verify against partial
-              // shingles (missed pairs, wrong screen verdicts). The
-              // rename lands the complete half or nothing.
-              val tgFlushShadow = s"$indexRoot/tg_flush_shadow"
-              fs.delete(new org.apache.hadoop.fs.Path(tgFlushShadow), true)
+                v)
               val stagedTgLive = tgStaged.filter(col("tg").isNotNull)
                 .join(complete, "doc_id")
                 .dropDuplicates("doc_id")
-              dropDel(dropStaged(currentShingles(tier)))
+              dropDel(dropStaged(currentShingles(tier, version)))
                 .unionByName(stagedTgLive)
-                .write.mode("overwrite").parquet(tgFlushShadow)
-              fs.delete(new org.apache.hadoop.fs.Path(tgDir(version + 1)), true)
-              if (!fs.rename(new org.apache.hadoop.fs.Path(tgFlushShadow),
-                  new org.apache.hadoop.fs.Path(tgDir(version + 1))))
-                throw new IllegalStateException(
-                  s"major flush commit failed: cannot rename $tgFlushShadow " +
-                    s"to ${tgDir(version + 1)}")
-              publishSnap(version + 1, newFloor)
-              Pipelines.retireVersionsBelow(fs, indexRoot, dsigPrefix, deltaSweepFloor)
-              Pipelines.retireVersionsBelow(fs, indexRoot, dtgPrefix, deltaSweepFloor)
-              val keep = baseKeepSet
-              Pipelines.retireVersionsExcept(fs, indexRoot, "sig_v", keep,
-                onRetire = v => if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${sigTable(v)}"))
-              Pipelines.retireVersionsExcept(fs, indexRoot, "tg_v", keep)
+                .write.mode("overwrite").parquet(tgDir(v))
+              store.commit(v, tier.next)
             }
-            flushes.incrementAndGet()
-            lastFlushMs = (System.nanoTime() - t0) / 1000000L
-          }
         } finally complete.unpersist()
         fs.delete(sp, true)
         fs.delete(tp, true)
@@ -2827,88 +2288,33 @@ object Pipelines {
       }
     }
 
-    /** SHADOW MAJOR compaction for the signature/shingle pair — the
-      * [[MaintainedDedupIndex.compactBase]] shape on two relations:
-      * snapshot the tier, fold base ∪ tier off-lock (tombstoned docs
-      * drop from both relations — the GC moment — exactly as the
-      * blocking fold, minus staging) while screens/ingest/flush proceed;
-      * flush defers its majors for the duration. The swap is O(1)
-      * metadata: the sig half renames first and the tg half LAST (the
-      * pair's commit point needs both dirs, so a crash between the
-      * renames leaves the old version serving); the floor marker and
-      * (bucketed mode) the bucket marker ride the shadow sig dir through
-      * the rename. Mid-build acceptances/deletes land in delta pairs
-      * above the snapshot and stay live. Returns false without folding
-      * on an empty tier or when another compaction holds the flag
-      * (busy — the maintenance-cadence caller's stand-down signal). */
-    def compactBase(onPrepared: () => Unit = () => ()): Boolean = {
-      if (!majorInFlight.compareAndSet(false, true)) false
-      else
-        try compactBaseImpl(onPrepared)
-        finally majorInFlight.set(false)
-    }
-
-    /** Unattended compaction decision — see
-      * [[graft.streaming.MaintainedAnnIndex.maybeCompact]]. */
-    def maybeCompact(maxTier: Int): Boolean =
-      listDeltaTier().versions.size >= maxTier && compactBase()
-
-    private def compactBaseImpl(onPrepared: () => Unit): Boolean = {
-      renewWriter("compactBase")
-      val (v0, tier0) = rootLock(indexRoot).synchronized {
-        (version, listDeltaTier())
+    /** SHADOW MAJOR compaction for the signature/shingle pair
+      * ([[TieredStore.shadowMajor]]): the flush major's fold, minus
+      * staging, written to the shadow pair off the root lock, then
+      * swapped in. currentSignatures/currentShingles already resolve the
+      * tier's tombstones (deleted docs out of both relations, tombstone
+      * rows excluded) and distinct-fold crash replays; the bucket marker
+      * (bucketed mode) rides the shadow sig dir through the rename. */
+    def compactBase(onPrepared: () => Unit = () => ()): Boolean =
+      store.shadowMajor(onPrepared) { (v0, tier) =>
+        val shadowSig = store.shadowDir("sig_v")
+        if (bucketed) {
+          val shadowTable = s"graft_mndix_${tableSuffix}_sig_shadow"
+          s.sql(s"DROP TABLE IF EXISTS $shadowTable")
+          currentSignatures(tier, v0).write.mode("overwrite")
+            .bucketBy(sigBuckets, "band", "min_hash")
+            .sortBy("band", "min_hash")
+            .option("path", shadowSig)
+            .saveAsTable(shadowTable)
+          Pipelines.writeBucketMarker(fs, shadowSig, sigBuckets)
+          s.sql(s"DROP TABLE IF EXISTS $shadowTable") // files stay (external)
+        } else currentSignatures(tier, v0).write.mode("overwrite").parquet(shadowSig)
+        currentShingles(tier, v0).write.mode("overwrite").parquet(store.shadowDir("tg_v"))
       }
-      if (tier0.isEmpty) return false
-      val shadowSig = s"$indexRoot/sig_shadow"
-      val shadowTg = s"$indexRoot/tg_shadow"
-      val shadowTable = s"graft_mndix_${tableSuffix}_sig_shadow"
-      fs.delete(new org.apache.hadoop.fs.Path(shadowSig), true)
-      fs.delete(new org.apache.hadoop.fs.Path(shadowTg), true)
-      // ---- PREPARE (no lock): the blocking fold, minus staging --------
-      // currentSignatures/currentShingles already resolve the tier's
-      // tombstones (deleted docs out of both relations, tombstone rows
-      // excluded) and distinct-fold crash replays
-      val newFloor = tier0.versions.last + 1
-      if (bucketed) {
-        s.sql(s"DROP TABLE IF EXISTS $shadowTable")
-        currentSignatures(tier0).write.mode("overwrite")
-          .bucketBy(sigBuckets, "band", "min_hash")
-          .sortBy("band", "min_hash")
-          .option("path", shadowSig)
-          .saveAsTable(shadowTable)
-        Pipelines.writeBucketMarker(fs, shadowSig, sigBuckets)
-        s.sql(s"DROP TABLE IF EXISTS $shadowTable") // files stay (external)
-      } else currentSignatures(tier0).write.mode("overwrite").parquet(shadowSig)
-      Pipelines.writeIntMarker(fs, shadowSig, floorMarker, newFloor)
-      currentShingles(tier0).write.mode("overwrite").parquet(shadowTg)
-      onPrepared()
-      // ---- SWAP (lock; O(1) metadata; tg rename = the commit point) ---
-      rootLock(indexRoot).synchronized {
-        renewWriter("compactBase")
-        assert(version == v0,
-          s"base version moved under an in-flight shadow major at $indexRoot")
-        vptr.advance(version + 1)
-        if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${sigTable(version + 1)}")
-        fs.delete(new org.apache.hadoop.fs.Path(sigDir(version + 1)), true)
-        fs.delete(new org.apache.hadoop.fs.Path(tgDir(version + 1)), true)
-        if (!fs.rename(new org.apache.hadoop.fs.Path(shadowSig),
-            new org.apache.hadoop.fs.Path(sigDir(version + 1))))
-          throw new IllegalStateException(
-            s"shadow major swap failed: cannot rename $shadowSig to ${sigDir(version + 1)}")
-        if (!fs.rename(new org.apache.hadoop.fs.Path(shadowTg),
-            new org.apache.hadoop.fs.Path(tgDir(version + 1))))
-          throw new IllegalStateException(
-            s"shadow major swap failed: cannot rename $shadowTg to ${tgDir(version + 1)}")
-        publishSnap(version + 1, newFloor)
-        Pipelines.retireVersionsBelow(fs, indexRoot, dsigPrefix, deltaSweepFloor)
-        Pipelines.retireVersionsBelow(fs, indexRoot, dtgPrefix, deltaSweepFloor)
-        val keep = baseKeepSet
-        Pipelines.retireVersionsExcept(fs, indexRoot, "sig_v", keep,
-          onRetire = v => if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${sigTable(v)}"))
-        Pipelines.retireVersionsExcept(fs, indexRoot, "tg_v", keep)
-      }
-      true
-    }
+
+    /** Run [[compactBase]] when the live tier holds at least `maxTier`
+      * deltas ([[TieredStore.maybeCompact]]). */
+    def maybeCompact(maxTier: Int): Boolean = store.maybeCompact(maxTier)(compactBase())
   }
 
   /** Open a lease-free READ-ONLY handle over an existing exact-dedup

@@ -52,10 +52,10 @@ import org.apache.spark.sql.functions._
   *    term-pruned relation, and the top-k is TakeOrderedAndProject —
   *    the corpus-scale postings shuffle exactly once (on doc_id).
   *
-  * Single-writer per root, enforced by the shared
-  * [[Pipelines.WriterLease]]; version bumps ride the [[VersionPointer]]
-  * seam with THIS index's commit point bound (complete post+dl pair plus
-  * the floor marker); in-process mutators serialize on the per-root lock. */
+  * Versions, floors, the delta tier, the writer lease, snapshots and
+  * retention are the [[TieredStore]]'s: base relations `post_v`/`dl_v`
+  * (markers on the post half) and delta pairs `ddl_v`/`dpost_v`, a pair
+  * committed by its stats marker on the dpost half, written last. */
 final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
                                 flushEvery: Int,
                                 leaseTtlMs: Long = Pipelines.DefaultLeaseTtlMs,
@@ -66,19 +66,13 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
                                 pointer: Option[VersionPointer] = None,
                                 keepVersions: Int = 2,
                                 readOnly: Boolean = false) {
+  import TieredStore.DeltaTier
   require(flushEvery >= 1, "flushEvery must be >= 1")
-  require(maxDeltas >= 0, "maxDeltas must be >= 0")
-  // keep >= 2: an in-flight lazy plan built just before a major still
-  // reads the previous base version (the grace rule); raise it for
-  // deployments with cross-process readers slower than one major cycle
-  require(keepVersions >= 2, "keepVersions must be >= 2")
 
   private def postDir(v: Int) = s"$indexRoot/post_v$v"
   private def dlDir(v: Int) = s"$indexRoot/dl_v$v"
-  private val dpostPrefix = "dpost_v"
-  private val ddlPrefix = "ddl_v"
-  private def dpostDir(k: Int) = s"$indexRoot/$dpostPrefix$k"
-  private def ddlDir(k: Int) = s"$indexRoot/$ddlPrefix$k"
+  private def dpostDir(k: Int) = s"$indexRoot/dpost_v$k"
+  private def ddlDir(k: Int) = s"$indexRoot/ddl_v$k"
   // the stored layouts are read with the schema their writers produce
   // ([[tokenize]] and the folds) instead of inferring it: parquet schema
   // inference is one Spark job per read, paid on every search. Ids are
@@ -89,137 +83,15 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     s.read.schema("doc_id BIGINT, dl BIGINT").parquet(dir)
   private def postStaging = s"$indexRoot/post_staging"
   private def dlStaging = s"$indexRoot/dl_staging"
-  private val floorMarker = "_graft_delta_floor"
   private val statsMarker = "_graft_stats"
-  private def fs = new org.apache.hadoop.fs.Path(indexRoot)
-    .getFileSystem(s.sparkContext.hadoopConfiguration)
+  private def fs: org.apache.hadoop.fs.FileSystem = store.fs
 
-  // a version COMMITS only once its floor marker (written last, after
-  // both relations and the stats marker) lands — a crash mid-publish
-  // leaves the previous (post, dl, stats) triple served intact
-  private def versionCommitted(v: Int): Boolean =
-    graft.VersionedDirs.hasCommittedData(fs, postDir(v)) &&
-      graft.VersionedDirs.hasCommittedData(fs, dlDir(v)) &&
-      Pipelines.readIntMarker(fs, postDir(v), floorMarker).nonEmpty
-
-  private val vptr: VersionPointer =
-    pointer.getOrElse(new DiscoveredVersionPointer(fs, indexRoot, "post_v"))
-  vptr.bindCommitted(versionCommitted)
-  @volatile private var version = {
-    val cand = vptr.current().getOrElse(0)
-    (cand to 0 by -1).find(versionCommitted).getOrElse(0)
-  }
-  private def readFloor(v: Int): Int =
-    Pipelines.readIntMarker(fs, postDir(v), floorMarker).getOrElse(0)
-  @volatile private var deltaFloor = readFloor(version)
-
-  /** Committed delta PAIRS (post half, dl half, stats marker — marker
-    * written last, so its presence commits the pair) at or above the
-    * floor. `bytes` totals the DL halves — the winner/tombstone relations
-    * the search broadcasts all derive from them, which is what the
-    * broadcast guard must bound. */
-  private case class DeltaTier(versions: Seq[Int], bytes: Long) {
-    def isEmpty: Boolean = versions.isEmpty
-    def oversized: Boolean = bytes > maxDeltaBroadcastBytes
-  }
-  private def listDeltaTier(): DeltaTier = listDeltaTier(deltaFloor)
-  private def listDeltaTier(floor: Int): DeltaTier = {
-    val dl = graft.VersionedDirs.allWithBytes(fs, indexRoot, ddlPrefix)
-      .filter(_._1 >= floor)
-    val post = graft.VersionedDirs.all(fs, indexRoot, dpostPrefix).toSet
-    val pairs = dl.filter { case (k, _) =>
-      post.contains(k) &&
-        Pipelines.readLongsMarker(fs, dpostDir(k), statsMarker).nonEmpty }
-    DeltaTier(pairs.map(_._1), pairs.map(_._2).sum)
-  }
-
-  // lifecycle counters — the MaintainedDedupIndex.stats contract
-  private val stagedBatches = new java.util.concurrent.atomic.AtomicLong()
-  private val flushes = new java.util.concurrent.atomic.AtomicLong()
-  private val deltaFallbacks = new java.util.concurrent.atomic.AtomicLong()
-  private val earlyMajors = new java.util.concurrent.atomic.AtomicLong()
-  private val nDeleted = new java.util.concurrent.atomic.AtomicLong()
-  private val shadowDeferredMajors = new java.util.concurrent.atomic.AtomicLong()
-  // one shadow major at a time; read by flush() to defer ITS majors to
-  // minor deltas while the build is in flight (see compactBase)
-  private val majorInFlight = new java.util.concurrent.atomic.AtomicBoolean(false)
-  @volatile private var lastFlushMs = -1L
-
-  // writer mode takes the cross-process single-writer lease; a READ-ONLY
-  // handle ([[MaintainedTextIndex.openReader]]) takes NOTHING — it serves
-  // committed snapshots and coexists with a live maintainer in another
-  // process (the one-writer-N-search-replicas deployment)
-  private val lease: Option[Pipelines.WriterLease] =
-    if (readOnly) None
-    else Some(new Pipelines.WriterLease(fs, indexRoot, leaseTtlMs, writerId))
-  lease.foreach(_.acquire())
-  // reconcile only under the lease: deleting a torn pointer remnant is
-  // safe only when no rival writer can be mid-claim
-  if (!readOnly) vptr.reconcile()
-
-  /** Renew the writer lease before a mutation — also the gate that makes
-    * every mutator on a read-only handle fail loudly instead of racing
-    * the live writer's staging. */
-  private def renewWriter(op: String): Unit = lease match {
-    case Some(l) => l.checkAndRenew()
-    case None => throw new UnsupportedOperationException(
-      s"$op on a read-only text-index handle for $indexRoot — construct " +
-        "the writer (new MaintainedTextIndex) to mutate")
-  }
-
-  /** One immutable SERVE SNAPSHOT — the (version, floor) pair a read's
-    * whole plan builds from. The pair is consistent by construction:
-    * captured atomically under the handle's monitor, which every
-    * mutator's PUBLISH block also takes, so no serve — reader OR writer
-    * handle — can ever pair base v+1 with v's floor (double-counted
-    * re-included deltas) or v with v+1's floor (dropped live deltas),
-    * even while a shadow swap's field writes land on another thread. */
-  private case class Snap(v: Int, floor: Int)
-
-  /** Capture the serve snapshot. READ-ONLY handles re-resolve the
-    * committed layout first (per-read freshness: version by this index's
-    * commit point, floor from the version's own marker); writer handles
-    * capture their in-memory pair. O(1) for writers, FS metadata reads
-    * for readers — never a Spark job, so the monitor hold is tiny and
-    * plan build + evaluation run fully unserialized. The `keepVersions`
-    * base retention and the matching delta grace ([[deltaSweepFloor]])
-    * keep a captured snapshot's files alive (the reader SLA —
-    * SCALING.md). */
-  private def captureSnap(): Snap = this.synchronized {
-    if (readOnly) {
-      val cand = vptr.current().getOrElse(0)
-      val v = (cand to 0 by -1).find(versionCommitted).getOrElse(0)
-      version = v
-      deltaFloor = readFloor(v)
-    }
-    Snap(version, deltaFloor)
-  }
-
-  /** Publish a new base version's (version, floor) pair — the mutators'
-    * side of the [[captureSnap]] contract: the two field writes land
-    * atomically w.r.t. every serve capture. Called with the root lock
-    * held; the monitor hold is two field writes. */
-  private def publishSnap(v: Int, floor: Int): Unit = this.synchronized {
-    version = v
-    deltaFloor = floor
-  }
-
-  /** Base versions GC must keep: the newest `keepVersions` (current plus
-    * `keepVersions - 1` predecessors — the in-flight-plan grace window,
-    * widened for slow cross-process readers via the constructor knob). */
-  private def baseKeepSet: Set[Int] =
-    ((version - keepVersions + 1) to version).toSet
-
-  /** The delta-tier sweep floor matching [[baseKeepSet]]: deltas at or
-    * above the OLDEST KEPT base version's floor must survive — a reader
-    * pinned on any retained base still resolves ITS tier. At the default
-    * keepVersions = 2 this equals the previous floor (the historical
-    * one-cycle grace); raising the knob now widens BOTH retentions, or
-    * the documented slow-reader SLA would hold for the base and break on
-    * the tier. A missing floor marker (version dir gone or pre-seed)
-    * reads 0 — sweep nothing rather than a live reader's files. */
-  private def deltaSweepFloor: Int =
-    readFloor(math.max(0, version - keepVersions + 1))
+  private val store = new TieredStore(s, indexRoot, "text", "MaintainedTextIndex",
+    basePrefixes = Seq("post_v", "dl_v"), deltaPrefixes = Seq("ddl_v", "dpost_v"),
+    maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
+    readOnly,
+    deltaCommitted = k => Pipelines.readLongsMarker(fs, dpostDir(k), statsMarker).nonEmpty)
+  private def version = store.version
 
   /** Fail fast on a never-seeded root: ingest's major path and every read
     * path dereference `post_v/dl_v` directly, so using the index before
@@ -227,34 +99,22 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     * AnalysisException deep in a plan. */
   private def requireSeeded(op: String): Unit = requireSeeded(op, version)
   private def requireSeeded(op: String, v: Int): Unit =
-    if (!versionCommitted(v))
+    if (!store.committed(v))
       throw new IllegalStateException(
         s"text index root $indexRoot has no committed base version — " +
           s"call initIndex before $op")
 
   /** Release the writer lease (maintainer shutdown); no-op on a
     * read-only handle (it holds nothing). */
-  def close(): Unit = lease.foreach(_.release())
+  def close(): Unit = store.close()
 
-  /** Lifecycle gauges — same contract as the other maintained indexes;
-    * `n_docs`/`sum_dl` are the LIVE additive stats the scorer uses. */
+  /** Lifecycle gauges ([[TieredStore.stats]]) plus `n_docs`/`sum_dl`, the
+    * LIVE additive stats the scorer uses. */
   def stats: Map[String, Long] = {
-    val sn = captureSnap()
-    val tier = listDeltaTier(sn.floor)
+    val sn = store.captureSnap()
+    val tier = store.listDeltaTier(sn.floor)
     val (n, sumDl) = liveStats(tier, sn.v)
-    Map(
-      "version" -> sn.v.toLong,
-      "staged_batches" -> stagedBatches.get(),
-      "flushes" -> flushes.get(),
-      "last_flush_ms" -> lastFlushMs,
-      "delta_versions" -> tier.versions.size.toLong,
-      "delta_bytes" -> tier.bytes,
-      "delta_fallbacks" -> deltaFallbacks.get(),
-      "early_majors" -> earlyMajors.get(),
-      "shadow_deferred_majors" -> shadowDeferredMajors.get(),
-      "n_deleted" -> nDeleted.get(),
-      "n_docs" -> n,
-      "sum_dl" -> sumDl)
+    store.stats(sn, tier) ++ Map("n_docs" -> n, "sum_dl" -> sumDl)
   }
 
   // ---- tokenize (the one shared relation builder) ----
@@ -308,9 +168,6 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
           "version should not have committed without it")
     }
 
-  private def liveStats(tier: DeltaTier): (Long, Long) =
-    liveStats(tier, version)
-
   /** Memoized exact-stats results per (base version, tier signature):
     * the subtraction join below scans the corpus-thin base `dl` relation,
     * which must be paid once per TIER CHANGE (the flush cadence), never
@@ -336,7 +193,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     // a fresh (un-seeded) root has no committed base — zero stats, not a
     // missing-marker error (the marker is only owed by a COMMITTED version)
     val (bn, bs) =
-      if (!versionCommitted(v)) (0L, 0L) else readStats(postDir(v))
+      if (!store.committed(v)) (0L, 0L) else readStats(postDir(v))
     if (tier.isEmpty) (bn, bs)
     else {
       val key = (v, tier.versions.toList)
@@ -369,7 +226,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
           // still subtracts its superseded base length.
           val docSet = winners.select(col("doc_id"))
           val hinted =
-            if (tier.oversized) { deltaFallbacks.incrementAndGet(); docSet }
+            if (tier.oversized) { store.deltaFallbacks.incrementAndGet(); docSet }
             else broadcast(docSet)
           val addB = winners.select(
             when(col("_w.dl") >= 0, 1L).otherwise(0L).as("an"),
@@ -396,35 +253,28 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
 
   // ---- lifecycle ----
 
-  /** Seed version 0 from the corpus `(doc_id, text)`. Refuses a root with
-    * committed versions (the MaintainedDedupIndex.initIndex rule). */
+  /** Seed version 0 from the corpus `(doc_id, text)`
+    * ([[TieredStore.beginSeed]] refuses a root with a committed version). */
   def initIndex(corpus: DataFrame): Unit = Pipelines.rootLock(indexRoot).synchronized {
-    renewWriter("initIndex")
-    // "already seeded" is judged by the INDEX's commit point, not raw
-    // layout: a seed that crashed between the dl write and the floor
-    // marker leaves data-bearing dirs the index will never serve, and
-    // refusing on those would wedge the natural retry — the overwrite-
-    // mode writes below heal a torn seed instead
-    if ((graft.VersionedDirs.all(fs, indexRoot, "post_v") ++
-         graft.VersionedDirs.all(fs, indexRoot, "dl_v"))
-        .exists(versionCommitted))
-      throw new IllegalStateException(
-        s"text index root $indexRoot already holds committed versions; " +
-          "seeding would be invisible — use a fresh root, or delete to rebuild")
-    vptr.advance(0)
+    store.renewWriter("initIndex")
+    store.beginSeed()
     val (post, dl) = tokenize(corpus)
     // stats ride the dl WRITE via observe() — no read-back aggregation job
     val obs = org.apache.spark.sql.Observation()
     observeDlStats(dl, obs).write.mode("overwrite").parquet(dlDir(0))
     val (n0, sd0) = statsFromObs(obs)
-    // term-clustered: hash-repartition + sort + bounded files, so a
-    // query's pushed In(term, ...) filter skips non-matching base files
-    // from footer stats — the ANN base's cell layout applied to postings
-    post.repartition(col("term")).sortWithinPartitions("term").write.mode("overwrite")
-      .option("maxRecordsPerFile", Pipelines.BaseFileRecords).parquet(postDir(0))
+    writeBasePostings(post, postDir(0))
     Pipelines.writeLongsMarker(fs, postDir(0), statsMarker, Seq(n0, sd0))
-    Pipelines.writeIntMarker(fs, postDir(0), floorMarker, 0)
+    store.commit(0, 0)
   }
+
+  /** Term-clustered base postings: hash-repartition + sort + bounded
+    * files, so a query's pushed In(term, ...) filter skips non-matching
+    * base files from footer stats — the ANN base's cell layout applied to
+    * postings. */
+  private def writeBasePostings(post: DataFrame, dir: String): Unit =
+    post.repartition(col("term")).sortWithinPartitions("term").write.mode("overwrite")
+      .option("maxRecordsPerFile", Pipelines.BaseFileRecords).parquet(dir)
 
   /** Ingest one batch `(doc_id, text)`: tokenize (batch-sized), hand the
     * per-doc `(doc_id, dl)` summary to `sink`, stage both relations with
@@ -435,7 +285,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     * reverse order would index a doc with no terms. */
   def ingestBatch(batch: DataFrame, batchId: Long)
                  (sink: DataFrame => Unit): Unit = Pipelines.rootLock(indexRoot).synchronized {
-    renewWriter("ingestBatch")
+    store.renewWriter("ingestBatch")
     requireSeeded("ingestBatch")
     // tokenize() already materializes the token arrays (localCheckpoint),
     // so dl is a cheap projection of stored blocks — no extra persist
@@ -446,7 +296,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
         .write.mode("append").parquet(postStaging)
       dl.withColumn("_b", lit(batchId))
         .write.mode("append").parquet(dlStaging)
-      stagedBatches.incrementAndGet()
+      store.stagedBatches.incrementAndGet()
     }
     if ((batchId + 1) % flushEvery == 0) flush()
   }
@@ -465,7 +315,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     * ingest-wins (dl ≥ 0 sorts above -1 at equal `_b`) — issue deletes
     * under their own batch id. */
   def deleteDocs(ids: DataFrame, batchId: Long): Unit = Pipelines.rootLock(indexRoot).synchronized {
-    renewWriter("deleteDocs")
+    store.renewWriter("deleteDocs")
     requireSeeded("deleteDocs")
     val tomb = ids.select(col("doc_id"), lit(-1L).as("dl"),
       lit(batchId).as("_b")).persist()
@@ -473,31 +323,28 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
       val n = tomb.count()
       if (n > 0) {
         tomb.write.mode("append").parquet(dlStaging)
-        nDeleted.addAndGet(n)
-        stagedBatches.incrementAndGet()
+        store.nDeleted.addAndGet(n)
+        store.stagedBatches.incrementAndGet()
       }
       if ((batchId + 1) % flushEvery == 0) flush()
     } finally tomb.unpersist()
   }
 
-  /** Fold staging: MINOR delta pair (O(staged)) until maxDeltas
-    * accumulate or the tier oversizes its broadcast bound (early major,
-    * `early_majors` gauge), else a MAJOR compaction into version N+1 —
-    * tombstone-resolving every doc to its newest tier, recomputing the
+  /** Fold staging ([[TieredStore.flushWindow]]): a MINOR delta pair
+    * (O(staged)), or a MAJOR compaction into version N+1 —
+    * tombstone-resolving every doc to its newest tier and recomputing the
     * corpus stats EXACTLY from the resolved lengths (the Lucene-merge
-    * moment where the additive stats heal — deleted docs drop out here),
-    * advancing the floor, and grace-sweeping superseded/torn delta
-    * pairs. A dl-only staging dir is valid (a delete-only window stages
-    * no postings — every completed INGEST writes postings before
-    * lengths, so lengths-without-postings can only be tombstones plus
-    * completed batches' rows); the reverse orphan (postings only) is
-    * still a torn ingest and is dropped for the replay to restore. */
+    * moment where the additive stats heal — deleted docs drop out here).
+    * A dl-only staging dir is valid (a delete-only window stages no
+    * postings — every completed INGEST writes postings before lengths, so
+    * lengths-without-postings can only be tombstones plus completed
+    * batches' rows); the reverse orphan (postings only) is still a torn
+    * ingest and is dropped for the replay to restore. */
   def flush(): Unit = Pipelines.rootLock(indexRoot).synchronized {
-    renewWriter("flush")
+    store.renewWriter("flush")
     val stagingDl = new org.apache.hadoop.fs.Path(dlStaging)
     val stagingPost = new org.apache.hadoop.fs.Path(postStaging)
     if (Pipelines.stagedHasData(fs, dlStaging)) {
-      val t0 = System.nanoTime()
       // within-window resolution: the newest batch's length wins per doc,
       // and only the winning batch's postings survive (a replayed append
       // duplicates rows with identical values — dropDuplicates is exact)
@@ -517,91 +364,24 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
         .join(winners.select(col("doc_id"), col("_b")), Seq("doc_id", "_b"))
         .select(col("term"), col("doc_id"), col("tf"), col("dl"))
         .dropDuplicates("term", "doc_id")
-      val tier = listDeltaTier()
-      // while a shadow major builds, flush majors are DEFERRED (minor
-      // deltas only, even past maxDeltas/the byte bound): a competing
-      // blocking fold would move the base version out from under the
-      // build's snapshot; the in-flight swap advances the floor anyway
-      val deferMajor = majorInFlight.get()
-      if (deferMajor &&
-          !(maxDeltas > 0 && tier.versions.size < maxDeltas && !tier.oversized))
-        shadowDeferredMajors.incrementAndGet()
-      if (deferMajor ||
-          (maxDeltas > 0 && tier.versions.size < maxDeltas && !tier.oversized)) {
-        val kd = tier.versions.lastOption.map(_ + 1).getOrElse(deltaFloor)
+      store.flushWindow { tier =>
         // post half first, then the dl half, then the stats marker that
         // commits the pair — any crash prefix leaves an incomplete,
         // invisible pair the next flush overwrites. The pair's stats ride
         // the dl write via observe() (no read-back job).
-        Pipelines.sizedForWrite(rpost).write.mode("overwrite").parquet(dpostDir(kd))
+        Pipelines.sizedForWrite(rpost).write.mode("overwrite").parquet(dpostDir(tier.next))
         val obs = org.apache.spark.sql.Observation()
         Pipelines.sizedForWrite(observeDlStats(rdl, obs))
-          .write.mode("overwrite").parquet(ddlDir(kd))
+          .write.mode("overwrite").parquet(ddlDir(tier.next))
         val (nD, sdD) = statsFromObs(obs)
-        Pipelines.writeLongsMarker(fs, dpostDir(kd), statsMarker, Seq(nD, sdD))
-      } else {
-        if (maxDeltas > 0 && tier.oversized) earlyMajors.incrementAndGet()
-        vptr.advance(version + 1)
-        // fold WITHOUT shuffling the corpus-scale base (guide §2.4/§8:
-        // decide with the small rows, move the big rows once): resolve
-        // winners over the DELTA∪STAGED thin dl halves alone (delta-sized
-        // by construction), then anti-join the superseded doc set into
-        // the base as a broadcast under the tier byte-bound guard — the
-        // livePostings serving topology applied to the major. The old
-        // shape group-folded base ∪ deltas ∪ staged on doc_id — a full
-        // corpus-scale shuffle of the postings per major; now the base's
-        // only exchange is the term-clustered layout write it always
-        // paid. Tombstone winners still GC physically: the anti-join
-        // removes their base rows, dWin's dl >= 0 filter their tombstone
-        // rows, and the postings join on the winner tier finds none.
-        val dWin = (tier.versions.map(k =>
-            readLengths(ddlDir(k)).withColumn("_tier", lit(k + 1L))) :+
-          rdl.withColumn("_tier", lit(Long.MaxValue)))
-          .reduce(_ unionByName _)
-          .groupBy("doc_id")
-          .agg(max(struct(col("_tier"), col("dl"))).as("_w"))
-          .select(col("doc_id"), col("_w._tier").as("_tier"),
-            col("_w.dl").as("dl"))
+        Pipelines.writeLongsMarker(fs, dpostDir(tier.next), statsMarker, Seq(nD, sdD))
+      } { (tier, v) =>
         val stagedDlBytes = graft.VersionedDirs.committedBytes(fs, dlStaging)
-        val guardOk = !tier.oversized &&
-          stagedDlBytes <= maxDeltaBroadcastBytes
-        if (!guardOk) deltaFallbacks.incrementAndGet()
-        def hinted(df: DataFrame): DataFrame =
-          if (guardOk) broadcast(df) else df
-        val dPost = (tier.versions.map(k =>
-            readPostings(dpostDir(k)).withColumn("_tier", lit(k + 1L))) :+
-          rpost.withColumn("_tier", lit(Long.MaxValue)))
-          .reduce(_ unionByName _)
-          .join(hinted(dWin.select(col("doc_id"), col("_tier"))),
-            Seq("doc_id", "_tier"))
-          .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-        val dIds = dWin.select(col("doc_id"))
-        val newPost = readPostings(postDir(version))
-          .join(hinted(dIds), Seq("doc_id"), "left_anti")
-          .unionByName(dPost)
-        val newDl = readLengths(dlDir(version))
-          .join(hinted(dIds), Seq("doc_id"), "left_anti")
-          .unionByName(dWin.filter(col("dl") >= 0)
-            .select(col("doc_id"), col("dl")))
-        val obs = org.apache.spark.sql.Observation()
-        observeDlStats(newDl, obs).write.mode("overwrite").parquet(dlDir(version + 1))
-        val (nM, sdM) = statsFromObs(obs)
-        newPost.repartition(col("term")).sortWithinPartitions("term")
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", Pipelines.BaseFileRecords)
-          .parquet(postDir(version + 1))
-        Pipelines.writeLongsMarker(fs, postDir(version + 1), statsMarker,
-          Seq(nM, sdM))
-        val newFloor = tier.versions.lastOption.map(_ + 1).getOrElse(deltaFloor)
-        Pipelines.writeIntMarker(fs, postDir(version + 1), floorMarker, newFloor)
-        publishSnap(version + 1, newFloor)
-        Pipelines.retireVersionsBelow(fs, indexRoot, dpostPrefix, deltaSweepFloor)
-        Pipelines.retireVersionsBelow(fs, indexRoot, ddlPrefix, deltaSweepFloor)
-        Pipelines.retireVersionsExcept(fs, indexRoot, "post_v", baseKeepSet)
-        Pipelines.retireVersionsExcept(fs, indexRoot, "dl_v", baseKeepSet)
+        foldBase(tier, Some((rpost, rdl)),
+          guardOk = !tier.oversized && stagedDlBytes <= maxDeltaBroadcastBytes,
+          postDir(v), dlDir(v))
+        store.commit(v, tier.next)
       }
-      flushes.incrementAndGet()
-      lastFlushMs = (System.nanoTime() - t0) / 1000000L
       fs.delete(stagingDl, true)
       fs.delete(stagingPost, true)
     } else {
@@ -613,118 +393,65 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     }
   }
 
-  /** SHADOW MAJOR compaction — the flush-path major's O(base) rewrite
-    * run OFF the root lock (the ANN index's
-    * [[MaintainedAnnIndex.compactBase]] twin): snapshot the live delta
-    * tier, fold base ∪ tier to shadow post/dl relations (tombstone
-    * winners GC'd, stats recomputed exactly — all off-lock) while
-    * ingest/flush/search proceed; flush defers its majors to minor
-    * deltas for the duration (`shadow_deferred_majors`), keeping the
-    * snapshot immutable. The swap holds the lock for O(1) metadata:
-    * two renames (dl half first; the floor marker written LAST into the
-    * post half is the commit point, so a crash between them leaves the
-    * old version serving) + floor advance + grace sweep. Rows ingested
-    * mid-build live in deltas above the snapshot tier or in staging and
-    * stay live across the swap. Staging is NOT folded here — that's the
-    * flush boundary's job, unchanged. Returns false without folding on
-    * an empty tier or when another compaction holds the flag (busy —
-    * the maintenance-cadence caller's stand-down signal). */
-  def compactBase(onPrepared: () => Unit = () => ()): Boolean = {
-    if (!majorInFlight.compareAndSet(false, true)) false
-    else
-      try compactBaseImpl(onPrepared)
-      finally majorInFlight.set(false)
-  }
-
-  /** Unattended compaction decision — see
-    * [[MaintainedAnnIndex.maybeCompact]] (same contract, same
-    * deployment shape: high `maxDeltas`, sweep on the maintenance
-    * cadence, byte-bound early major as the backstop). */
-  def maybeCompact(maxTier: Int): Boolean =
-    listDeltaTier().versions.size >= maxTier && compactBase()
-
-  private def compactBaseImpl(onPrepared: () => Unit): Boolean = {
-    renewWriter("compactBase")
-    requireSeeded("compactBase")
-    val (v0, tierD) = Pipelines.rootLock(indexRoot).synchronized {
-      (version, listDeltaTier())
-    }
-    val tier0 = tierD.versions
-    if (tier0.isEmpty) return false
-    val shadowPost = s"$indexRoot/post_shadow"
-    val shadowDl = s"$indexRoot/dl_shadow"
-    fs.delete(new org.apache.hadoop.fs.Path(shadowPost), true)
-    fs.delete(new org.apache.hadoop.fs.Path(shadowDl), true)
-    // ---- PREPARE (no lock): the flush major's fold, minus staging — in
-    // the same no-base-shuffle topology (see flush's major branch): the
-    // delta tier resolves alone, its doc set anti-joins the base as a
-    // broadcast under the byte-bound guard; the base's only exchange is
-    // the term-clustered layout write.
-    val dWin = tier0.map(k =>
-        readLengths(ddlDir(k)).withColumn("_tier", lit(k + 1L)))
+  /** Write the base that folds `tier` (and, at a flush, the resolved
+    * `staged` postings and lengths) into the current base, WITHOUT
+    * shuffling the corpus-scale base (guide §2.4/§8: decide with the
+    * small rows, move the big rows once): winners resolve over the
+    * delta∪staged thin dl halves alone, and the superseded doc set
+    * anti-joins the base as a broadcast under the byte-bound guard; the
+    * base's only exchange is the term-clustered layout write. Tombstone
+    * winners GC physically: the anti-join removes their base rows, the
+    * dl >= 0 filter their tombstone rows, and the postings join on the
+    * winner tier finds none. The exact stats ride the dl write via
+    * observe() and land as the post half's stats marker. */
+  private def foldBase(tier: DeltaTier, staged: Option[(DataFrame, DataFrame)],
+                       guardOk: Boolean, postOut: String, dlOut: String): Unit = {
+    val dWin = (tier.versions.map(k =>
+        readLengths(ddlDir(k)).withColumn("_tier", lit(k + 1L))) ++
+      staged.map(_._2.withColumn("_tier", lit(Long.MaxValue))))
       .reduce(_ unionByName _)
       .groupBy("doc_id")
       .agg(max(struct(col("_tier"), col("dl"))).as("_w"))
       .select(col("doc_id"), col("_w._tier").as("_tier"), col("_w.dl").as("dl"))
-    if (tierD.oversized) deltaFallbacks.incrementAndGet()
+    if (!guardOk) store.deltaFallbacks.incrementAndGet()
     def hinted(df: DataFrame): DataFrame =
-      if (tierD.oversized) df else broadcast(df)
-    val dPost = tier0.map(k =>
-        readPostings(dpostDir(k)).withColumn("_tier", lit(k + 1L)))
+      if (guardOk) broadcast(df) else df
+    val dPost = (tier.versions.map(k =>
+        readPostings(dpostDir(k)).withColumn("_tier", lit(k + 1L))) ++
+      staged.map(_._1.withColumn("_tier", lit(Long.MaxValue))))
       .reduce(_ unionByName _)
       .join(hinted(dWin.select(col("doc_id"), col("_tier"))),
         Seq("doc_id", "_tier"))
       .select(col("term"), col("doc_id"), col("tf"), col("dl"))
     val dIds = dWin.select(col("doc_id"))
-    readPostings(postDir(v0))
-      .join(hinted(dIds), Seq("doc_id"), "left_anti")
-      .unionByName(dPost)
-      .repartition(col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", Pipelines.BaseFileRecords)
-      .parquet(shadowPost)
-    // the exact stats recompute happens off-lock too, riding the shadow
-    // dl WRITE via observe(); the marker rides the shadow post dir
-    // through the rename
     val obs = org.apache.spark.sql.Observation()
     observeDlStats(
-      readLengths(dlDir(v0))
+      readLengths(dlDir(version))
         .join(hinted(dIds), Seq("doc_id"), "left_anti")
         .unionByName(dWin.filter(col("dl") >= 0)
           .select(col("doc_id"), col("dl"))), obs)
-      .write.mode("overwrite").parquet(shadowDl)
-    val (nS, sdS) = statsFromObs(obs)
-    Pipelines.writeLongsMarker(fs, shadowPost, statsMarker, Seq(nS, sdS))
-    onPrepared()
-    // ---- SWAP (lock; O(1) metadata) ----------------------------------
-    Pipelines.rootLock(indexRoot).synchronized {
-      renewWriter("compactBase")
-      assert(version == v0,
-        s"base version moved under an in-flight shadow major at $indexRoot")
-      vptr.advance(version + 1)
-      // clear uncommitted remnants of a previously torn swap (version+1
-      // cannot be committed — discovery would have resumed it)
-      fs.delete(new org.apache.hadoop.fs.Path(dlDir(version + 1)), true)
-      fs.delete(new org.apache.hadoop.fs.Path(postDir(version + 1)), true)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(shadowDl),
-          new org.apache.hadoop.fs.Path(dlDir(version + 1))))
-        throw new IllegalStateException(
-          s"shadow major swap failed: cannot rename $shadowDl to ${dlDir(version + 1)}")
-      if (!fs.rename(new org.apache.hadoop.fs.Path(shadowPost),
-          new org.apache.hadoop.fs.Path(postDir(version + 1))))
-        throw new IllegalStateException(
-          s"shadow major swap failed: cannot rename $shadowPost to ${postDir(version + 1)}")
-      val newFloor = tier0.last + 1
-      // floor marker LAST — the commit point
-      Pipelines.writeIntMarker(fs, postDir(version + 1), floorMarker, newFloor)
-      publishSnap(version + 1, newFloor)
-      Pipelines.retireVersionsBelow(fs, indexRoot, dpostPrefix, deltaSweepFloor)
-      Pipelines.retireVersionsBelow(fs, indexRoot, ddlPrefix, deltaSweepFloor)
-      Pipelines.retireVersionsExcept(fs, indexRoot, "post_v", baseKeepSet)
-      Pipelines.retireVersionsExcept(fs, indexRoot, "dl_v", baseKeepSet)
-    }
-    true
+      .write.mode("overwrite").parquet(dlOut)
+    val (n, sd) = statsFromObs(obs)
+    writeBasePostings(
+      readPostings(postDir(version))
+        .join(hinted(dIds), Seq("doc_id"), "left_anti")
+        .unionByName(dPost), postOut)
+    Pipelines.writeLongsMarker(fs, postOut, statsMarker, Seq(n, sd))
   }
+
+  /** SHADOW MAJOR compaction ([[TieredStore.shadowMajor]]): the flush
+    * major's fold, minus staging, written to the shadow post/dl relations
+    * off the root lock, then swapped in. */
+  def compactBase(onPrepared: () => Unit = () => ()): Boolean =
+    store.shadowMajor(onPrepared) { (_, tier) =>
+      requireSeeded("compactBase")
+      foldBase(tier, None, guardOk = !tier.oversized,
+        store.shadowDir("post_v"), store.shadowDir("dl_v"))
+    }
+
+  /** Run [[compactBase]] when the live tier holds at least `maxTier`
+    * deltas ([[TieredStore.maybeCompact]]). */
+  def maybeCompact(maxTier: Int): Boolean = store.maybeCompact(maxTier)(compactBase())
 
   // ---- search ----
 
@@ -733,8 +460,6 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     * plus each delta's postings where that delta is the doc's newest tier.
     * The winner/tombstone relation is delta-sized (thin dl halves) and
     * broadcast under the byte-bound guard. */
-  private def livePostings(terms: Seq[String], tier: DeltaTier): DataFrame =
-    livePostings(terms, tier, version)
   private def livePostings(terms: Seq[String], tier: DeltaTier, v: Int): DataFrame = {
     // empty terms = the whole index (the inverted-index consumer); a
     // non-empty list prunes every scan at the source
@@ -749,7 +474,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
         .reduce(_ unionByName _)
         .groupBy("doc_id").agg(max(col("_tier")).as("_tier"))
       val hinted =
-        if (tier.oversized) { deltaFallbacks.incrementAndGet(); dWinners }
+        if (tier.oversized) { store.deltaFallbacks.incrementAndGet(); dWinners }
         else broadcast(dWinners)
       val deltaPost = tier.versions.map(k =>
           pruned(readPostings(dpostDir(k)))
@@ -768,10 +493,10 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     * Tombstone-resolved exactly like [[search]], so it reflects the same
     * logical corpus. */
   def invertedIndex(): DataFrame = {
-    val sn = captureSnap()
+    val sn = store.captureSnap()
     requireSeeded("invertedIndex", sn.v)
     graft.functions.Search.invertedIndexOfTf(
-      livePostings(Nil, listDeltaTier(sn.floor), sn.v)
+      livePostings(Nil, store.listDeltaTier(sn.floor), sn.v)
         .select(col("term"), col("doc_id"), col("tf")))
   }
 
@@ -782,10 +507,10 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     * parity on append-only corpora — see the class doc for the bounded
     * stats staleness updates introduce between majors). */
   def search(terms: Seq[String], k: Int): DataFrame = {
-    val sn = captureSnap()
+    val sn = store.captureSnap()
     require(terms.nonEmpty, "search needs at least one query term")
     requireSeeded("search", sn.v)
-    val tier = listDeltaTier(sn.floor)
+    val tier = store.listDeltaTier(sn.floor)
     val p = livePostings(terms, tier, sn.v)
     val (nDocs, sumDl) = liveStats(tier, sn.v)
     val avgdl = sumDl.toDouble / nDocs
@@ -861,7 +586,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     * exactly, pass it; the public [[searchMany]] self-checks. */
   private[streaming] def rankMany(queries: DataFrame, k: Int,
                                   knownTerms: Option[Seq[String]]): DataFrame = {
-    val sn = captureSnap()
+    val sn = store.captureSnap()
     requireSeeded("searchMany", sn.v)
     import org.apache.spark.sql.expressions.Window
     val qt = queries.select(col("query_id"),
@@ -878,7 +603,7 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
         "empty or every terms array is — the single-query hybrid entry " +
         "points (searchRrf/searchRrfAdc) require exactly ONE query row " +
         "with non-empty terms")
-    val tier = listDeltaTier(sn.floor)
+    val tier = store.listDeltaTier(sn.floor)
     val (nDocs, sumDl) = liveStats(tier, sn.v)
     val avgdl = sumDl.toDouble / nDocs
     val hits = livePostings(terms, tier, sn.v)

@@ -1,9 +1,8 @@
 package graft.streaming
 
-/** The maintained indexes' current-version pointer SEAM (the
-  * [[Pipelines.MaintainedDedupIndex]] Scaladoc's concession made concrete:
-  * "a production deployment would put the version pointer in a
-  * transactional catalog"). The index resolves its version through this
+/** The maintained indexes' current-version pointer SEAM ("a production
+  * deployment would put the version pointer in a transactional catalog").
+  * The [[TieredStore]] under each index resolves its version through this
   * trait, so the single-writer lease is no longer the only thing standing
   * between two drivers and a split-brain index — an atomic pointer impl
   * makes the version bump itself single-winner.
@@ -26,17 +25,16 @@ trait VersionPointer {
     * torn claim under a LIVE rival would mean the lease failed first). */
   def reconcile(): Unit = ()
 
-  /** Install the owning index's version-commitment predicate, so
-    * [[current]]/[[reconcile]] judge a claimed version by the INDEX's
-    * commit point, not the generic has-committed-data layout rule. The
-    * two can differ: the ANN index commits a codes version only once its
-    * `_graft_delta_floor` marker exists, and the near-dup index only once
-    * BOTH halves of the sig/tg pair hold data — a crash inside that
-    * window leaves a directory the layout rule calls committed but the
-    * index will never serve. Without this binding, reconcile() keeps the
-    * crashed writer's claim marker forever and every later advance() by
-    * the restarted writer (a fresh ownerId) dies as a foreign claim —
-    * the maintainer wedges permanently. Indexes call this at
+  /** Install the owning store's commit predicate ([[TieredStore]]: every
+    * base relation holds committed data AND the floor marker, written
+    * last, exists on the primary relation), so [[current]]/[[reconcile]]
+    * judge a claimed version by it, not by the generic has-committed-data
+    * layout rule. The two differ exactly in a crash window: data landed,
+    * marker not yet — a directory the layout rule calls committed but
+    * the index will never serve. Without this binding, reconcile() keeps
+    * the crashed writer's claim marker forever and every later advance()
+    * by the restarted writer (a fresh ownerId) dies as a foreign claim —
+    * the maintainer wedges permanently. The store calls this at
     * construction, before the pointer's first use. */
   def bindCommitted(committed: Int => Boolean): Unit = ()
 }
@@ -86,11 +84,9 @@ final class AtomicFileVersionPointer(fs: org.apache.hadoop.fs.FileSystem,
   private val markerPrefix = "_vptr_"
   private def marker(v: Int) = new org.apache.hadoop.fs.Path(root, s"$markerPrefix$v")
 
-  // the owning index's commit point (see VersionPointer.bindCommitted);
-  // until bound, fall back to the generic layout rule — correct for the
-  // dedup index (whose commit point IS has-committed-data) but too loose
-  // for indexes with a marker-gated commit (ANN floor marker, near-dup
-  // pair completeness), which is exactly why they bind
+  // the owning store's commit point (see VersionPointer.bindCommitted);
+  // until bound, the generic layout rule, which is too loose for the
+  // marker-gated commit — which is exactly why the store binds
   @volatile private var committedP: Int => Boolean =
     v => graft.VersionedDirs.hasCommittedData(fs, s"$root/$prefix$v")
   override def bindCommitted(committed: Int => Boolean): Unit =

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   *    multi-file write into `index_v<N+1>` is invisible to cross-process
   *    readers until the marker lands, so a reader can never resolve a
   *    partially-written base (and read floor 0 with it).
-  *  - The near-dup pair's tg half publishes via SHADOW WRITE + RENAME on
-  *    the flush-path major and the seed (the shadow-compact path's
-  *    discipline): the pair commit point ("both halves hold data") can
-  *    never observe a partially-written shingle relation.
+  *  - The near-dup pair follows the same rule (every pillar's, from the
+  *    TieredStore): sig and tg written, then the floor marker on the sig
+  *    half last, so a reader never observes a partially-written shingle
+  *    relation.
   *  - BM25's additive corpus stats resolve delta-superseded base docs at
   *    serve time (tombstones AND updates), so served scores equal the
   *    batch recompute in EVERY window — x101 pins the delete-before-major
@@ -75,35 +75,35 @@ class RoundNineteenSpec extends SparkSpec {
     writer.close()
   }
 
-  // ----------------------- near-dup pillar: pair commit via tg rename
+  // ------------- near-dup pillar: the one commit rule (sig-half marker)
 
-  test("near-dup flush-path major publishes the tg half by rename; a crash before it leaves the old pair serving") {
-    val sparkS = spark
-    import sparkS.implicits._
+  test("near-dup pair commits on its sig-half floor marker: no marker, or a marker without the tg half, keeps the old pair serving") {
     val root = tmp("r19_neardup_commit")
     val writer = new Pipelines.MaintainedNearDupIndex(spark, root, flushEvery = 1)
     writer.initIndex(docs.filter(col("doc_id") < 50))
-    // drive one real flush-path major and assert the rename mechanics:
-    // no shadow remnant, complete pair at v1
+    // one real flush-path major: both halves written, marker last on sig_v1
     writer.screenBatch(docs.filter(col("doc_id") >= 50 && col("doc_id") < 60), 0)(_ => ())
     assert(writer.stats("version") == 1L)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$root/tg_flush_shadow")),
-      "the major must consume its tg shadow via rename")
-    assert(VersionedDirs.hasCommittedData(
-      new org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration), s"$root/tg_v1"))
+    assert(java.nio.file.Files.exists(marker(s"$root/sig_v1")))
     writer.close()
-    // simulate the crash window the rename leaves: sig_v2 committed with
-    // its floor marker, tg half still parked in the shadow — the pair is
-    // uncommitted, so a reader (and a restarted writer) serve v1
+    def servesV1(window: String): Unit = {
+      val reader = Pipelines.openNearDupReader(spark, root)
+      assert(reader.stats("version") == 1L, s"$window must stay invisible to a reader")
+      val reopened = new Pipelines.MaintainedNearDupIndex(spark, root, flushEvery = 1)
+      assert(reopened.stats("version") == 1L,
+        s"$window must stay invisible to a reopened writer")
+      reopened.close()
+    }
+    // crash window of a major: both halves of v2 landed, the marker not
     copyDir(s"$root/sig_v1", s"$root/sig_v2")
-    copyDir(s"$root/tg_v1", s"$root/tg_flush_shadow")
-    val reader = Pipelines.openNearDupReader(spark, root)
-    assert(reader.stats("version") == 1L,
-      "a sig-half-only publish must stay invisible until the tg rename")
-    val reopened = new Pipelines.MaintainedNearDupIndex(spark, root, flushEvery = 1)
-    assert(reopened.stats("version") == 1L)
-    reopened.close()
+    java.nio.file.Files.delete(marker(s"$root/sig_v2"))
+    copyDir(s"$root/tg_v1", s"$root/tg_v2")
+    servesV1("a pair without its floor marker")
+    // a marked sig half whose tg half is missing
+    java.nio.file.Files.write(marker(s"$root/sig_v2"), "0".getBytes)
+    java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/tg_v2"))
+      .sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+    servesV1("a marked sig half without its tg half")
   }
 
   // --------------- text pillar: serve-time-exact additive corpus stats

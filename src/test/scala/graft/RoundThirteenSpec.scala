@@ -183,6 +183,33 @@ class RoundThirteenSpec extends SparkSpec {
 
   // ---- delete tombstones: the takedown operation, per maintained index --
 
+  /** Each maintained pillar's `stats` key set, written out literally: the
+    * contract the services' reporter gauges (`indexGauges`) and the
+    * benchmark read. The four delete tests below check their pillar
+    * against it. */
+  private val StatsKeys: Map[String, Set[String]] = Map(
+    "dedup" -> Set("version", "staged_batches", "flushes", "last_flush_ms",
+      "pinned_versions", "delta_versions", "delta_bytes", "delta_fallbacks",
+      "early_majors", "shadow_deferred_majors", "n_deleted"),
+    "near-dup" -> Set("version", "staged_batches", "flushes", "last_flush_ms",
+      "delta_versions", "delta_bytes", "delta_fallbacks", "early_majors",
+      "shadow_deferred_majors", "n_deleted"),
+    "text" -> Set("version", "staged_batches", "flushes", "last_flush_ms",
+      "delta_versions", "delta_bytes", "delta_fallbacks", "early_majors",
+      "shadow_deferred_majors", "n_deleted", "n_docs", "sum_dl"),
+    "ann" -> Set("version", "model_version", "staged_batches", "flushes",
+      "last_flush_ms", "delta_versions", "delta_bytes", "delta_fallbacks",
+      "staging_fallbacks", "early_majors", "stale_staged_discarded",
+      "drift_retrains", "retrain_failures", "retrain_catchup",
+      "shadow_deferred_majors", "n_deleted", "boosted_serves",
+      "base_assign_sim_micro", "window_assign_sim_micro", "drift_micro"))
+
+  private def assertStatsKeys(pillar: String, stats: Map[String, Long]): Unit = {
+    val want = StatsKeys(pillar)
+    assert(stats.keySet == want, s"$pillar stats keys: missing " +
+      s"${want -- stats.keySet}, unexpected ${stats.keySet -- want}")
+  }
+
   private def docsDf(rows: (Long, String)*) = {
     val sparkS = spark
     import sparkS.implicits._
@@ -227,6 +254,7 @@ class RoundThirteenSpec extends SparkSpec {
     assert(dlBase.filter(col("dl") < 0).count() == 0L,
       "no dl tombstone may survive the major")
     assert(dlBase.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
+    assertStatsKeys("text", idx.stats)
     idx.close()
   }
 
@@ -254,6 +282,7 @@ class RoundThirteenSpec extends SparkSpec {
     assert(ids2.size == 49 && ids2.contains(5L) && !ids2.contains(100L))
     assert(ann.currentCodes.filter(col("cell") < 0).count() == 0L,
       "no tombstone row may survive the major")
+    assertStatsKeys("ann", ann.stats)
     ann.close()
   }
 
@@ -295,6 +324,7 @@ class RoundThirteenSpec extends SparkSpec {
     m.finalizeBatch(decide(30L, "fpA", "new", None), 5)(df => got = df.collect())
     assert(got.head.getString(2) == "new")
     assert(m.currentIndex.filter(col("fp") === "fpA").head().getLong(1) == 30L)
+    assertStatsKeys("dedup", m.stats)
     m.close()
   }
 
@@ -337,6 +367,7 @@ class RoundThirteenSpec extends SparkSpec {
     assert(sigIds == Set(51L, 60L) && tgIds == Set(51L, 60L))
     assert(spark.read.parquet(s"$root/sig_v${n.stats("version")}")
       .filter(col("band") < 0).count() == 0L, "no tombstone row may survive the major")
+    assertStatsKeys("near-dup", n.stats)
     n.close()
   }
 

@@ -830,17 +830,21 @@ class StreamingSpec extends SparkSpec {
     assert(rows.count() == 4, "retried batch 0 must replace, not append")
     assert(rows.filter(col("batch_id") === 0).count() == 3)
     assert(rows.filter(col("batch_id") === 1).count() == 1)
-    // exactly-once end to end through the pipeline runner
+    // exactly-once end to end through a checkpointed keyed stream
     val src = Files.createTempDirectory("idem_src").toString
     (0 until 50).map(i => s"""{"id":{"k":$i},"type":"insert","table":"t","data":{}}""")
       .toDF("value").coalesce(1).write.mode("overwrite").parquet(src)
     val pOut = Files.createTempDirectory("idem_p").toString
     val ckpt = Files.createTempDirectory("idem_ck").toString
-    def run(): Unit = Pipelines.runDmlPipelineExactlyOnce(
-      sparkS.readStream.schema("value STRING").parquet(src),
-      pOut, ckpt, Trigger.AvailableNow())
+    def run(): Unit = Pipelines.dmlTransform(
+        sparkS.readStream.schema("value STRING").parquet(src))
+      .writeStream.option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        Pipelines.idempotentBatchWriter(pOut)(b.select(col("key"), col("value")), id) }
+      .start().awaitTermination()
     run(); run() // second run: checkpoint says nothing new; output unchanged
-    assert(sparkS.read.parquet(s"$pOut/main").count() == 50)
+    assert(sparkS.read.parquet(pOut).count() == 50)
   }
 
   test("x35 streaming twin: bloom bits merged across micro-batches equal the batch filter") {
