@@ -24,10 +24,11 @@ import org.apache.spark.sql.functions._
   *    index memory-resident. Each ingest batch is assigned + encoded
   *    against the STORED model (map-only — the x59 classify shape: the
   *    corpus-scale side is never touched per batch) and staged; the
-  *    flush boundary folds staging into a delta version (`dcodes_v<k>`,
-  *    O(staged) I/O) or, every (maxDeltas+1)-th flush, a MAJOR
-  *    compaction into codes M+1 — the same LSM shape, floor-marker
-  *    grace GC included, as the dedup indexes.
+  *    flush boundary folds staging ∪ the closing batch's in-memory codes
+  *    into a delta version (`dcodes_v<k>`, O(window) I/O) or, every
+  *    (maxDeltas+1)-th flush, a MAJOR compaction into codes M+1 — the
+  *    same LSM shape, floor-marker grace GC included, as the dedup
+  *    indexes.
   *  - **Centroid-drift gauge.** Every ingest batch's mean
   *    cosine-to-assigned-centroid accumulates into a per-flush-window
   *    gauge; `drift_micro` = (training baseline − last window), in 1e-6
@@ -85,7 +86,6 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   import graft.functions.{Ivf, Ivfadc, Similarity}
   import TieredStore.DeltaTier
 
-  require(flushEvery >= 1, "flushEvery must be >= 1")
   private def modelDir(v: Int) = s"$indexRoot/model_v$v"
   private def codesDir(v: Int) = s"$indexRoot/codes_v$v"
   /** Cell-clustered BASE layout: hash-repartition by cell, sort within
@@ -138,6 +138,11 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   private def readCodes(dir: String): DataFrame =
     s.read.schema("vec_id BIGINT, cell INT, codes ARRAY<INT>").parquet(dir)
   private def stagingDir = s"$indexRoot/codes_staging"
+  // staged rows carry their model and batch stamps; a legacy unstamped
+  // file reads them as null, which [[stampStaged]] resolves
+  private def readStaging(): DataFrame =
+    s.read.schema("vec_id BIGINT, cell INT, codes ARRAY<INT>, " +
+      "_graft_model_v INT, _graft_batch BIGINT").parquet(stagingDir)
   private val simMarker = "_graft_assign_sim"
   private def dcodesDir(kd: Int) = s"$indexRoot/dcodes_v$kd"
   private def fs: org.apache.hadoop.fs.FileSystem = store.fs
@@ -146,7 +151,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   // a codes version's floor marker lands after its `_graft_model` marker
   private val store = new TieredStore(s, indexRoot, "ANN", "MaintainedAnnIndex",
     basePrefixes = Seq("codes_v"), deltaPrefixes = Seq("dcodes_v"),
-    maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
+    flushEvery, maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
     readOnly)
   private def version = store.version
   // the shadow build target shared by retrain and compaction: never
@@ -183,21 +188,19 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   private val retrainErrorLimiter =
     new graft.metrics.Observability.RateLimiter(60000L)
 
-  /** Normalize a raw staging read to the stamped shape: rows staged
-    * before the stamp columns shipped can only be current-model (the
-    * stamp and the discard logic arrived together). Two legacy shapes
-    * exist — a staging dir with NO stamp column, and a MIXED dir
-    * (pre-upgrade files + post-upgrade appends) where pre-upgrade rows
-    * read the stamp as NULL — and coalesce treats both as current-model
+  /** Normalize a staging read ([[readStaging]]) to the stamped shape:
+    * rows staged before the stamp columns shipped can only be
+    * current-model (the stamp and the discard logic arrived together).
+    * Under the declared read schema their stamps read NULL — whether the
+    * whole dir predates the stamps or pre-upgrade files sit beside
+    * post-upgrade appends — and coalesce treats them as current-model
     * instead of silently dropping them. ONE implementation, shared by
     * [[flush]]'s discard filter and the admission screen's staged
     * visibility, so the two paths can never diverge on which staged
     * rows are live. */
   private def stampStaged(raw: DataFrame): DataFrame =
-    Seq("_graft_model_v" -> modelVersion.toLong, "_graft_batch" -> 0L)
-      .foldLeft(raw) { case (df, (c, d)) =>
-        if (df.columns.contains(c)) df.withColumn(c, coalesce(col(c), lit(d)))
-        else df.withColumn(c, lit(d)) }
+    raw.withColumn("_graft_model_v", coalesce(col("_graft_model_v"), lit(modelVersion.toLong)))
+      .withColumn("_graft_batch", coalesce(col("_graft_batch"), lit(0L)))
 
   /** A serve snapshot ([[TieredStore.captureSnap]]) with the model version
     * bound to its codes: taken under the store's monitor, which every
@@ -269,8 +272,9 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   }
 
   private def loadModelUncached(use: Int): Ivfadc.Model = {
-    val rows = s.read.parquet(modelDir(use))
-      .select(col("kind"), col("i"), col("j"), col("vec").cast("array<double>"))
+    val rows = s.read.schema("kind STRING, i INT, j INT, vec ARRAY<DOUBLE>")
+      .parquet(modelDir(use))
+      .select(col("kind"), col("i"), col("j"), col("vec"))
       .collect()
     val cent = rows.filter(_.getString(0) == "cent")
       .map(r => r.getInt(1) -> r.getSeq[Double](3).toArray)
@@ -434,7 +438,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   private def resolvedSinceBuild(tier: Seq[Int]): Option[DataFrame] = {
     val stagedLive: Option[DataFrame] =
       if (Pipelines.stagedHasData(fs, stagingDir))
-        Some(stampStaged(s.read.parquet(stagingDir))
+        Some(stampStaged(readStaging())
           .filter(col("_graft_model_v") === lit(modelVersion.toLong))
           .withColumn("_tier", lit(Long.MaxValue))
           .withColumnRenamed("_graft_batch", "_b")
@@ -592,7 +596,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
         // then clear staging (the old-model rows it still holds were
         // superseded by the re-encode / re-stage above)
         if (nCatch + nTomb > 0) {
-          Pipelines.sizedForWrite(resolveNewest(stampStaged(s.read.parquet(stagingDir))
+          Pipelines.sizedForWrite(resolveNewest(stampStaged(readStaging())
               .filter(col("_graft_model_v") === lit(modelVersion.toLong))
               .withColumn("_tier", lit(Long.MaxValue))
               .withColumnRenamed("_graft_batch", "_b")
@@ -741,7 +745,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     val served = currentCodes
     if (!Pipelines.stagedHasData(fs, stagingDir)) served
     else {
-      val live = stampStaged(s.read.parquet(stagingDir))
+      val live = stampStaged(readStaging())
         .filter(col("_graft_model_v") === lit(modelVersion.toLong))
         .withColumn("_tier", lit(Long.MaxValue))
         .withColumnRenamed("_graft_batch", "_b")
@@ -856,41 +860,41 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
   /** Ingest one batch `(vec_id, embedding)`: assign + PQ-encode against
     * the STORED model (map-only — the corpus-scale code store is never
     * read, let alone shuffled), hand the encoded rows to `sink`,
-    * accumulate the drift window, stage, and compact on the flush
-    * boundary. Synchronized with [[flush]] for the same
+    * accumulate the drift window, and stage the codes — or, on the batch
+    * that closes the flush window, fold them from memory with whatever
+    * is staged ([[flush]]). Synchronized with [[flush]] for the same
     * list-then-delete race the dedup indexes lock against. */
   def ingestBatch(batch: DataFrame, batchId: Long)
                  (sink: DataFrame => Unit): Unit = Pipelines.rootLock(indexRoot).synchronized {
     store.renewWriter("ingestBatch")
     val model = loadModel()
     // one map pass computes codes AND the drift-window similarity; the
-    // similarity aggregate rides the staging WRITE job via observe(), so
-    // the old join-back-to-the-batch aggregation job is gone entirely
+    // row count and the similarity sum ride ONE aggregate over the
+    // persisted codes, so no join back to the batch and no second job
     val encodedS = Ivfadc.encodeWithSim(batch, model).persist()
     val encoded = encodedS.select(col("vec_id"), col("cell"), col("codes"))
     try {
-      if (encodedS.count() > 0) {
+      val agg = encodedS.agg(count(lit(1)), coalesce(sum(col("_simq")), lit(0L))).head()
+      val n = agg.getLong(0)
+      if (n > 0) {
         sink(encoded)
-        // staged rows carry the MODEL they were encoded under and their
-        // batch id: the model stamp lets flush() discard rows a crashed
-        // retrain left behind (codes under the old codebook folded into a
-        // new-model base are silently wrong ADC distances — the exact
-        // failure the binding marker exists to prevent), and the batch
-        // stamp makes within-window re-ingests of a vec_id resolve
-        // deterministically (latest batch wins) instead of arbitrarily
-        val obs = org.apache.spark.sql.Observation()
-        observeSim(encodedS, obs)
-          .withColumn("_graft_model_v", lit(modelVersion))
-          .withColumn("_graft_batch", lit(batchId))
-          .write.mode("append").parquet(stagingDir)
-        val (simSum, simN) = obsSim(obs)
-        windowSimSum.addAndGet(simSum)
-        windowSimN.addAndGet(simN)
-        store.stagedBatches.incrementAndGet()
+        windowSimSum.addAndGet(agg.getLong(1))
+        windowSimN.addAndGet(n)
       }
-      if ((batchId + 1) % flushEvery == 0) flush()
+      // rows carry the MODEL they were encoded under and their batch id:
+      // the model stamp lets flush() discard staged rows a crashed retrain
+      // left behind (codes under the old codebook folded into a new-model
+      // base are silently wrong ADC distances — the exact failure the
+      // binding marker exists to prevent), and the batch stamp makes
+      // within-window re-ingests of a vec_id resolve deterministically
+      // (latest batch wins) instead of arbitrarily
+      store.write(batchId, Option.when(n > 0)(encoded
+        .withColumn("_graft_model_v", lit(modelVersion))
+        .withColumn("_graft_batch", lit(batchId))))(stage)(flush)
     } finally encodedS.unpersist()
   }
+
+  private def stage(rows: DataFrame): Unit = rows.write.mode("append").parquet(stagingDir)
 
   /** DELETE vectors (the takedown/curation operation): stage one
     * tombstone code row (`cell = -1` — real cells are ≥ 0 — with empty
@@ -905,7 +909,8 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     * argument — honor deletes there by removing the vectors from the
     * corpus of record. Within one batch id, a delete and an ingest of
     * the same vec_id resolve ingest-wins — issue deletes under their own
-    * batch id. */
+    * batch id. A delete that closes its flush window folds its
+    * tombstones from memory ([[flush]]). */
   def deleteVectors(ids: DataFrame, batchId: Long): Unit = Pipelines.rootLock(indexRoot).synchronized {
     store.renewWriter("deleteVectors")
     val tomb = ids.select(col("vec_id"), lit(-1).as("cell"),
@@ -914,67 +919,68 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
       .persist()
     try {
       val n = tomb.count()
-      if (n > 0) {
-        tomb.write.mode("append").parquet(stagingDir)
-        store.nDeleted.addAndGet(n)
-        store.stagedBatches.incrementAndGet()
-      }
-      if ((batchId + 1) % flushEvery == 0) flush()
+      store.write(batchId, Option.when(n > 0)(tomb))(stage)(flush)
+      store.nDeleted.addAndGet(n)
     } finally tomb.unpersist()
   }
 
-  /** Fold staged codes ([[TieredStore.flushWindow]]): a MINOR delta
-    * write (O(staged)) or a MAJOR compaction into codes N+1 (replayed
-    * staging dedups on vec_id — codes are deterministic under a fixed
-    * model, so replays are idempotent). Records the window's drift
-    * gauge. */
-  def flush(): Unit = Pipelines.rootLock(indexRoot).synchronized {
+  /** Fold one flush window — staging ∪ `pending`, the model- and
+    * batch-stamped code rows of the write that closes the window, already
+    * materialized — into the stored codes ([[TieredStore.flushWindow]]):
+    * a MINOR delta write (O(window)) or a MAJOR compaction into codes N+1
+    * (replayed rows dedup on vec_id — codes are deterministic under a
+    * fixed model, so replays are idempotent). Records the window's drift
+    * gauge. `flush()` folds staging alone. */
+  def flush(pending: Option[DataFrame] = None): Unit = Pipelines.rootLock(indexRoot).synchronized {
     store.renewWriter("flush")
     val staging = new org.apache.hadoop.fs.Path(stagingDir)
-    if (Pipelines.stagedHasData(fs, stagingDir)) {
-      val stagedStamped = stampStaged(s.read.parquet(stagingDir))
-      // DISCARD rows encoded under a superseded model: a crash between a
-      // retrain's commit (its floor marker) and its staging delete leaves
-      // them behind, and folding old-codebook codes into a base bound to
-      // the NEW model would serve silently wrong ADC distances — the
-      // failure mode the binding marker exists to prevent. Nothing is
-      // lost: the retrain re-encoded its full corpus, those vectors
-      // included, under the new model. Stale and live counts come from
-      // ONE staging pass (the steady-state flush path shouldn't pay
-      // extra scans for a crash-only case).
-      val cnt = stagedStamped.agg(
-        coalesce(sum(when(col("_graft_model_v") =!= lit(modelVersion.toLong),
-          1L).otherwise(0L)), lit(0L)),
-        coalesce(sum(when(col("_graft_model_v") === lit(modelVersion.toLong),
-          1L).otherwise(0L)), lit(0L))).head()
-      val (stale, live) = (cnt.getLong(0), cnt.getLong(1))
-      if (stale > 0) staleStagedDiscarded.addAndGet(stale)
-      val staged = stagedStamped
+    val onDisk =
+      if (!Pipelines.stagedHasData(fs, stagingDir)) None
+      else {
+        val stagedStamped = stampStaged(readStaging())
+        // DISCARD rows encoded under a superseded model: a crash between a
+        // retrain's commit (its floor marker) and its staging delete leaves
+        // them behind, and folding old-codebook codes into a base bound to
+        // the NEW model would serve silently wrong ADC distances — the
+        // failure mode the binding marker exists to prevent. Nothing is
+        // lost: the retrain re-encoded its full corpus, those vectors
+        // included, under the new model. Stale and live counts come from
+        // ONE staging pass, run only when staging is on disk (rows in
+        // memory were encoded under the current model by this writer).
+        val cnt = stagedStamped.agg(
+          coalesce(sum(when(col("_graft_model_v") =!= lit(modelVersion.toLong),
+            1L).otherwise(0L)), lit(0L)),
+          coalesce(sum(when(col("_graft_model_v") === lit(modelVersion.toLong),
+            1L).otherwise(0L)), lit(0L))).head()
+        val (stale, live) = (cnt.getLong(0), cnt.getLong(1))
+        if (stale > 0) staleStagedDiscarded.addAndGet(stale)
+        Option.when(live > 0)(stagedStamped)
+      }
+    (onDisk.toSeq ++ pending).reduceOption(_ unionByName _).foreach { stamped =>
+      val staged = stamped
         .filter(col("_graft_model_v") === lit(modelVersion.toLong))
         .drop("_graft_model_v")
         .withColumnRenamed("_graft_batch", "_b")
         .withColumn("_tier", lit(Long.MaxValue))
-      if (live > 0) {
-        // while a retrain builds, the store defers majors: a major would
-        // fold mid-build rows into an old-model base the swap is about to
-        // replace, making them unattributable to the catch-up re-encode
-        store.flushWindow { tier =>
-          Pipelines.sizedForWrite(resolveNewest(staged), codeFiles)
-            .write.mode("overwrite").parquet(dcodesDir(tier.next))
-        } { (tier, v) =>
-          val stagedBytes = graft.VersionedDirs.committedBytes(fs, stagingDir)
-          foldBase(tier, Some(staged),
-            guardOk = !tier.oversized && stagedBytes <= maxDeltaBroadcastBytes, codesDir(v))
-          store.commit(v, tier.next)
-        }
-        val n = windowSimN.getAndSet(0)
-        val sumq = windowSimSum.getAndSet(0)
-        if (n > 0) lastWindowSimMicro = sumq / n
+      // while a retrain builds, the store defers majors: a major would
+      // fold mid-build rows into an old-model base the swap is about to
+      // replace, making them unattributable to the catch-up re-encode
+      store.flushWindow { tier =>
+        Pipelines.sizedForWrite(resolveNewest(staged), codeFiles)
+          .write.mode("overwrite").parquet(dcodesDir(tier.next))
+      } { (tier, v) =>
+        val stagedBytes = graft.VersionedDirs.committedBytes(fs, stagingDir) +
+          pending.fold(BigInt(0))(Pipelines.estimatedBytes)
+        foldBase(tier, Some(staged),
+          guardOk = !tier.oversized && stagedBytes <= maxDeltaBroadcastBytes, codesDir(v))
+        store.commit(v, tier.next)
       }
-      fs.delete(staging, true)
-    } else if (fs.exists(staging)) {
-      fs.delete(staging, true) // _temporary-only remnant of a killed append
+      val n = windowSimN.getAndSet(0)
+      val sumq = windowSimSum.getAndSet(0)
+      if (n > 0) lastWindowSimMicro = sumq / n
     }
+    // folded, or a _temporary-only remnant of a killed append
+    if (fs.exists(staging)) fs.delete(staging, true)
   }
 
   /** Resolve one row per vec_id from tier-tagged code rows: highest

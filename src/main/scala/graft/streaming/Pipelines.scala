@@ -102,13 +102,26 @@ object Pipelines {
     readLongsMarker(fs, dir, name).collect {
       case Seq(v) if v.isValidInt => v.toInt }
 
+  private[graft] val DeltaWriteTargetEnv = "SPARK_GRAFT_DELTA_WRITE_TARGET_BYTES"
+
   /** Per-task byte target for delta/flush-window writes (estimated plan
     * bytes, not output parquet bytes — Catalyst's in-memory estimate runs
     * ~2-4× the compressed file size). Overridable for deployments whose
-    * flush windows or storage profile differ. */
-  private[graft] val DeltaWriteTargetBytes: Long =
-    sys.env.get("SPARK_GRAFT_DELTA_WRITE_TARGET_BYTES").map(_.toLong)
-      .getOrElse(256L * 1024 * 1024)
+    * flush windows or storage profile differ. Lazy, so a bad value fails
+    * at the first sized write with its own message, not inside this
+    * object's initializer. */
+  private[graft] lazy val DeltaWriteTargetBytes: Long =
+    parseWriteTargetBytes(sys.env.get(DeltaWriteTargetEnv))
+
+  /** [[DeltaWriteTargetBytes]] from its env value: 256 MiB when unset; a
+    * value that is not a positive whole byte count fails, naming the
+    * variable (zero would divide by zero in [[sizedForWrite]]). */
+  private[graft] def parseWriteTargetBytes(raw: Option[String]): Long = raw match {
+    case None => 256L * 1024 * 1024
+    case Some(v) => v.trim.toLongOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"$DeltaWriteTargetEnv must be a positive whole number of bytes, got '$v'"))
+  }
 
   /** Size a delta/flush-window relation for its write: below one
     * [[DeltaWriteTargetBytes]] of estimated plan size, the historical
@@ -119,7 +132,8 @@ object Pipelines {
     * through ONE task (guide §6 file sizing / §2.5 stragglers). The
     * estimate is Catalyst's `stats.sizeInBytes` over the optimized plan —
     * no job; for these delta-sized relations (projections/folds of
-    * just-written parquet) it is file-size-derived. A join-inflated or
+    * staged parquet, or of a batch's materialized in-memory rows) it is
+    * file- or cache-size-derived. A join-inflated or
     * unknown estimate is capped so a bad guess degrades to at most 64
     * write tasks, never thousands of files. `minParts` raises the floor
     * for layouts whose readers want a minimum split count (the ANN code
@@ -127,14 +141,16 @@ object Pipelines {
   private[graft] def sizedForWrite(df: org.apache.spark.sql.DataFrame,
                                    minParts: Int = 1)
       : org.apache.spark.sql.DataFrame = {
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val est = estimatedBytes(df)
     val parts = ((est / DeltaWriteTargetBytes).min(BigInt(63)).toInt + 1).max(minParts)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_WRITE_SIZING"))
-      // scalastyle:off println
-      println(s"[sizedForWrite] est=$est parts=$parts")
-      // scalastyle:on println
     if (parts <= 1) df.coalesce(1) else df.repartition(parts)
   }
+
+  /** Catalyst's size estimate of `df`, no job: what [[sizedForWrite]]
+    * sizes by, and what a flush adds to its committed staging bytes for
+    * the window's in-memory rows before the broadcast-bound check. */
+  private[streaming] def estimatedBytes(df: org.apache.spark.sql.DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Long-vector marker (one value per line) — the single marker codec:
     * the delta-tier floor / model-binding stamps ride the one-value Int
@@ -927,10 +943,13 @@ object Pipelines {
     *    never race a rewrite. (A production deployment would put the
     *    version pointer in a transactional catalog; the single-writer
     *    pointer here is the same shape.)
-    *  - **Staging.** Every micro-batch appends its accepted (`new`) fps to
-    *    `indexRoot/staging` — small per-trigger files, compacted into the
-    *    next index version every `flushEvery` batches, so the index dir
-    *    doesn't accrete one file per trigger.
+    *  - **Staging.** A micro-batch inside an open flush window appends its
+    *    accepted (`new`) fps to `indexRoot/staging` — small per-trigger
+    *    files, compacted into the next index version every `flushEvery`
+    *    batches, so the index dir doesn't accrete one file per trigger.
+    *    The batch that closes the window folds its accepted fps straight
+    *    from memory with whatever is staged ([[flush]]); at
+    *    `flushEvery = 1` nothing is ever staged.
     *  - **Delta tier (`maxDeltas > 0`).** At corpus scale a full base
     *    rewrite per flush window is the dominant I/O bill; in delta mode
     *    a flush writes the window's acceptances as a flush-sized DELTA
@@ -971,13 +990,21 @@ object Pipelines {
                                    keepVersions: Int = 2,
                                    readOnly: Boolean = false) {
     import TieredStore.DeltaTier
-    require(flushEvery >= 1, "flushEvery must be >= 1")
     private def bucketed = fpBuckets > 0
     // catalog-safe, root-derived table family (unsigned hex — no '-')
     private val tableSuffix = java.lang.Integer.toHexString(indexRoot.hashCode)
     private def idxTable(v: Int) = s"graft_mdix_${tableSuffix}_v$v"
     private def indexDir(v: Int) = s"$indexRoot/index_v$v"
     private def stagingDir = s"$indexRoot/staging"
+    // every relation is read with the schema its writer produces: parquet
+    // schema inference is one Spark job per read (ids read widened to
+    // bigint when a layout was written from int ids)
+    private def readFps(dir: String): DataFrame =
+      s.read.schema("fp STRING, corpus_id BIGINT").parquet(dir)
+    private def readIdFps(dir: String): DataFrame =
+      s.read.schema("doc_id BIGINT, fp STRING").parquet(dir)
+    private def readStaging(): DataFrame =
+      s.read.schema("fp STRING, doc_id BIGINT").parquet(stagingDir)
     private def fs: org.apache.hadoop.fs.FileSystem = store.fs
     // ---- versions (the TieredStore): base `index_v<N>` with its
     // `ids_v<N>` sidecar, delta tier `delta_v<k>`. With maxDeltas = 0
@@ -997,7 +1024,7 @@ object Pipelines {
     // the coalesce precedence absorb both exactly.
     private val store = new TieredStore(s, indexRoot, "dedup", "MaintainedDedupIndex",
       basePrefixes = Seq("index_v"), deltaPrefixes = Seq("delta_v"),
-      maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
+      flushEvery, maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
       readOnly, sidecarPrefixes = Seq("ids_v"),
       unregister = v => if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${idxTable(v)}"))
     private def version = store.version
@@ -1007,7 +1034,7 @@ object Pipelines {
       * no-op on it). None when the tier is empty. */
     private def deltaRelation(tier: DeltaTier): Option[DataFrame] =
       if (tier.isEmpty) None
-      else Some(tier.versions.map(k => s.read.parquet(deltaDir(k)))
+      else Some(tier.versions.map(k => readFps(deltaDir(k)))
         .reduce(_ unionByName _)
         .groupBy(col("fp")).agg(min(col("corpus_id")).as("corpus_id")))
     // THIS instance's classify pin references (one entry per classify
@@ -1076,7 +1103,7 @@ object Pipelines {
     private def sidecarDir(v: Int) = s"$indexRoot/ids_v$v"
     private def writeSidecar(v: Int): Unit = writeSidecar(indexDir(v), sidecarDir(v))
     private def writeSidecar(base: String, out: String): Unit =
-      s.read.parquet(base)
+      readFps(base)
         .select(col("corpus_id").as("doc_id"), col("fp"))
         .repartition(col("doc_id")).sortWithinPartitions("doc_id")
         .write.mode("overwrite")
@@ -1084,7 +1111,7 @@ object Pipelines {
         .parquet(out)
     private def sidecarAt(v: Int): Option[DataFrame] =
       if (graft.VersionedDirs.hasCommittedData(fs, sidecarDir(v)))
-        Some(s.read.parquet(sidecarDir(v)))
+        Some(readIdFps(sidecarDir(v)))
       else None
 
     /** Re-register a bucketed version in THIS session's catalog when
@@ -1114,7 +1141,7 @@ object Pipelines {
     private def currentIndexRaw(tier: DeltaTier, v: Int): DataFrame =
       foldedIndexRaw(tier, None, v)
 
-    /** Min-fold base ∪ delta tier ∪ (optionally) staging WITHOUT
+    /** Min-fold base ∪ delta tier ∪ (optionally) a flush window WITHOUT
       * shuffling the corpus-scale base (guide §2.4/§8: decide with the
       * small rows): the delta∪staged side min-folds alone (delta-sized
       * by construction), then its fp set anti-joins the base as a
@@ -1127,7 +1154,7 @@ object Pipelines {
       * (`delta_fallbacks`), Spark plans shuffle joins, results identical.
       * Tombstones (`corpus_id = -1`) win the min exactly as before. */
     private def foldedIndexRaw(tier: DeltaTier, staged: Option[DataFrame],
-                               v: Int): DataFrame = {
+                               v: Int, stagedBytes: BigInt = 0): DataFrame = {
       val deltaSide0 = (deltaRelation(tier).toSeq ++
         staged.map(_.select(col("fp"), col("doc_id").as("corpus_id"))).toSeq)
         .reduceOption(_ unionByName _)
@@ -1135,8 +1162,8 @@ object Pipelines {
         case None => indexAt(v)
         case Some(d0) =>
           val d = d0.groupBy(col("fp")).agg(min(col("corpus_id")).as("corpus_id"))
-          val oversized = tier.oversized || (staged.isDefined &&
-            graft.VersionedDirs.committedBytes(fs, stagingDir) > maxDeltaBroadcastBytes)
+          val oversized = tier.oversized ||
+            (staged.isDefined && stagedBytes > maxDeltaBroadcastBytes)
           if (oversized) store.deltaFallbacks.incrementAndGet()
           def hinted(df: DataFrame): DataFrame =
             if (oversized) df else broadcast(df)
@@ -1155,7 +1182,7 @@ object Pipelines {
 
     private def indexAt(v: Int): DataFrame =
       if (bucketed) { ensureIdxTable(v); s.table(idxTable(v)) }
-      else s.read.parquet(indexDir(v))
+      else readFps(indexDir(v))
 
     /** Lifecycle gauges ([[TieredStore.stats]]) plus `pinned_versions`,
       * the live classify pins. Wire through
@@ -1179,20 +1206,20 @@ object Pipelines {
       * copies arriving in that window each classify "new" (admit-
       * rather-than-block, the conservative direction for a takedown) and
       * the first post-major copy becomes the durable keeper. `fps` is
-      * `(fp)`; `n_deleted` counts staged tombstones. */
+      * `(fp)`; `n_deleted` counts written tombstones. A delete that closes
+      * its flush window folds its tombstones from memory ([[flush]]); one
+      * inside an open window stages them. */
     def deleteFps(fps: DataFrame, batchId: Long): Unit = rootLock(indexRoot).synchronized {
       store.renewWriter("deleteFps")
       val tomb = fps.select(col("fp"), lit(-1L).as("doc_id")).persist()
       try {
         val n = tomb.count()
-        if (n > 0) {
-          tomb.write.mode("append").parquet(stagingDir)
-          store.nDeleted.addAndGet(n)
-          store.stagedBatches.incrementAndGet()
-        }
-        if ((batchId + 1) % flushEvery == 0) flush()
+        store.write(batchId, Option.when(n > 0)(tomb))(stage)(flush)
+        store.nDeleted.addAndGet(n)
       } finally tomb.unpersist()
     }
+
+    private def stage(rows: DataFrame): Unit = rows.write.mode("append").parquet(stagingDir)
 
     /** DELETE by doc id (the control-topic takedown carrier form — the
       * CCD holds only an id, but this index is keyed by content
@@ -1228,8 +1255,7 @@ object Pipelines {
       val tier = store.listDeltaTier()
       val staged =
         if (Pipelines.stagedHasData(fs, stagingDir))
-          Some(s.read.parquet(stagingDir)
-            .select(col("fp"), col("doc_id").as("corpus_id")))
+          Some(readStaging().select(col("fp"), col("doc_id").as("corpus_id")))
         else None
       // the window-sized relations (delta tier + staging), tombstones
       // included: an existing tombstone must win its fp's fold so a
@@ -1400,11 +1426,14 @@ object Pipelines {
       * CURRENT stored index (an fp the index knows is `dup_of_corpus`
       * regardless of what the — possibly expired and re-seeded — state
       * said; the index carries the original keeper, so `dup_of` is
-      * stable), hand the finalized decisions to `sink`, stage this batch's
-      * accepted fps, and compact staging into a new index version on the
-      * flush boundary. The decisions are materialized (persist + count)
-      * before any directory mutates, and unpersisted before returning —
-      * `sink` must consume them eagerly.
+      * stable), hand the finalized decisions to `sink`, then either stage
+      * this batch's accepted fps (an open flush window) or, when the batch
+      * closes its window, fold them from memory with whatever is staged
+      * into the next index version ([[flush]]) — no staging write and
+      * read-back. The decisions are materialized (persist, plus one
+      * aggregate that counts rows and acceptances) before any directory
+      * mutates, and unpersisted before returning — `sink` must consume
+      * them eagerly.
       *
       * Mutators (`finalizeBatch`, `flush`, and `classify`'s pin+plan) are
       * `synchronized`: a flush racing another caller's staging append
@@ -1418,67 +1447,67 @@ object Pipelines {
       store.renewWriter("finalizeBatch")
       val out = finalizeJoined(batch.toDF()).persist()
       try {
-        // pin before staging writes shift the dirs under the plan; also the
-        // cheap path for the NO-DATA batches a processing-time-timeout query
-        // runs continuously (that is how timeouts fire without traffic —
-        // and why tests must poll the sink, not processAllAvailable, which
+        // materialize before a fold shifts the dirs under the plan, with
+        // the acceptance count in the same job; also the cheap path for
+        // the NO-DATA batches a processing-time-timeout query runs
+        // continuously (that is how timeouts fire without traffic — and
+        // why tests must poll the sink, not processAllAvailable, which
         // never quiesces under this timeout mode)
-        if (out.count() > 0) {
-          sink(out)
-          val accepted = out.filter(col("status") === "new")
-            .select(col("fp"), col("doc_id"))
-          // skip the append when nothing was accepted: an all-duplicate
-          // batch would otherwise stage a zero-row parquet part whose
-          // nonzero FOOTER bytes defeat any file-size flush guard,
-          // turning every flush boundary under pure-duplicate traffic
-          // into a full index read + byte-identical rewrite
-          if (!accepted.isEmpty) {
-            accepted.write.mode("append").parquet(stagingDir)
-            store.stagedBatches.incrementAndGet()
-          }
-        }
-        if ((batchId + 1) % flushEvery == 0) flush()
+        val counts = out.agg(count(lit(1)),
+          coalesce(sum(when(col("status") === "new", 1L).otherwise(0L)), lit(0L))).head()
+        if (counts.getLong(0) > 0) sink(out)
+        // nothing to write when nothing was accepted: an all-duplicate
+        // batch would otherwise stage a zero-row parquet part whose
+        // nonzero FOOTER bytes defeat any file-size flush guard, turning
+        // every flush boundary under pure-duplicate traffic into a full
+        // index read + byte-identical rewrite
+        val accepted = out.filter(col("status") === "new").select(col("fp"), col("doc_id"))
+        store.write(batchId, Option.when(counts.getLong(1) > 0)(accepted))(stage)(flush)
       } finally out.unpersist()
     }
 
-    /** Fold staged fps into the stored index ([[TieredStore.flushWindow]]):
-      * a MINOR flush writes one O(staged) delta; a MAJOR folds base +
-      * delta tier + staging into a NEW base version (the x59
+    /** Fold one flush window — committed staging ∪ `pending`, the
+      * `(fp, doc_id)` rows of the write that closes the window, already
+      * materialized — into the stored index ([[TieredStore.flushWindow]]):
+      * a MINOR flush writes one O(window) delta; a MAJOR folds base +
+      * delta tier + window into a NEW base version (the x59
       * maintained-index write) and the store retires every version outside
       * the reachable set — disk holds O(live readers) index copies even
-      * under a long-running stream. No-op when nothing is staged; a
+      * under a long-running stream. No-op when the window is empty; a
       * footer-less `_temporary`-only staging remnant (killed append) is
-      * dropped, not read. Synchronized — see [[finalizeBatch]]. */
-    def flush(): Unit = rootLock(indexRoot).synchronized {
+      * dropped, not read. `flush()` folds staging alone (the operator's
+      * explicit boundary). Synchronized — see [[finalizeBatch]]. */
+    def flush(pending: Option[DataFrame] = None): Unit = rootLock(indexRoot).synchronized {
       store.renewWriter("flush")
       val staging = new org.apache.hadoop.fs.Path(stagingDir)
-      if (Pipelines.stagedHasData(fs, stagingDir)) {
-        val staged = s.read.parquet(stagingDir)
-        if (!staged.isEmpty) // committed zero-row parts only otherwise
-          store.flushWindow { tier =>
-            sizedForWrite(staged.groupBy(col("fp")).agg(min(col("doc_id")).as("corpus_id")))
-              .write.mode("overwrite").parquet(deltaDir(tier.next))
-          } { (tier, v) =>
-            // fold over the RAW tier (tombstones still winning their min
-            // groups — a staged re-accept of a deleted fp must not beat
-            // the epoch's tombstone), then drop the deleted fps from the
-            // compacted base: the delete's GC moment. The fold rides the
-            // no-base-shuffle topology ([[foldedIndexRaw]]).
-            writeIndex(foldedIndexRaw(tier, Some(staged), version)
-              .filter(col("corpus_id") >= 0), v)
-            store.commit(v, tier.next)
-            // sidecar AFTER the commit point: the takedown resolve
-            // tolerates a missing sidecar (base-scan fallback), and writing
-            // it first would stall readers on version N for its duration
-            writeSidecar(v)
-          }
-        fs.delete(staging, true)
-      } else if (fs.exists(staging)) {
-        // crash remnant: only _temporary/ left by a killed append — no
-        // readable footer, so reading would throw; the engine's checkpoint
-        // replay re-stages the batch
-        fs.delete(staging, true)
+      val onDisk =
+        if (!Pipelines.stagedHasData(fs, stagingDir)) None
+        else Some(readStaging()).filterNot(_.isEmpty) // committed zero-row parts only otherwise
+      (onDisk.toSeq ++ pending).reduceOption(_ unionByName _).foreach { staged =>
+        store.flushWindow { tier =>
+          sizedForWrite(staged.groupBy(col("fp")).agg(min(col("doc_id")).as("corpus_id")))
+            .write.mode("overwrite").parquet(deltaDir(tier.next))
+        } { (tier, v) =>
+          // fold over the RAW tier (tombstones still winning their min
+          // groups — a staged re-accept of a deleted fp must not beat
+          // the epoch's tombstone), then drop the deleted fps from the
+          // compacted base: the delete's GC moment. The fold rides the
+          // no-base-shuffle topology ([[foldedIndexRaw]]).
+          val stagedBytes = graft.VersionedDirs.committedBytes(fs, stagingDir) +
+            pending.fold(BigInt(0))(Pipelines.estimatedBytes)
+          writeIndex(foldedIndexRaw(tier, Some(staged), version, stagedBytes)
+            .filter(col("corpus_id") >= 0), v)
+          store.commit(v, tier.next)
+          // sidecar AFTER the commit point: the takedown resolve
+          // tolerates a missing sidecar (base-scan fallback), and writing
+          // it first would stall readers on version N for its duration
+          writeSidecar(v)
+        }
       }
+      // folded, or a crash remnant (only _temporary/ left by a killed
+      // append — no readable footer, so reading would throw; the engine's
+      // checkpoint replay re-stages the batch)
+      if (fs.exists(staging)) fs.delete(staging, true)
     }
 
     /** SHADOW MAJOR compaction ([[TieredStore.shadowMajor]]) — the flush
@@ -1765,7 +1794,8 @@ object Pipelines {
     *  - **Admission + flush.** Docs with no verified match are ACCEPTED:
     *    their signatures and shingle sets stage per batch and compact
     *    into version N+1 every `flushEvery` batches (distinct-folded, so
-    *    replayed batches are idempotent). No keyed state at all — unlike
+    *    replayed batches are idempotent); the batch that closes a window
+    *    folds its own rows from memory instead of staging them. No keyed state at all — unlike
     *    exact dedup there is no first-wins race to arbitrate mid-window;
     *    in-batch near-dup pairs are (deliberately, like the batch x62) a
     *    separate backfill concern.
@@ -1796,7 +1826,6 @@ object Pipelines {
                                      keepVersions: Int = 2,
                                      readOnly: Boolean = false) {
     import TieredStore.DeltaTier
-    require(flushEvery >= 1, "flushEvery must be >= 1")
     private def bucketed = sigBuckets > 0
     // catalog-safe, root-derived table family (unsigned hex — no '-')
     private val tableSuffix = java.lang.Integer.toHexString(indexRoot.hashCode)
@@ -1805,6 +1834,12 @@ object Pipelines {
     private def tgDir(v: Int) = s"$indexRoot/tg_v$v"
     private def sigStaging = s"$indexRoot/sig_staging"
     private def tgStaging = s"$indexRoot/tg_staging"
+    // both halves, in every tier and in staging, are read with the schema
+    // their writers produce (no per-read schema-inference job)
+    private def readSigs(dir: String): DataFrame =
+      s.read.schema("band INT, min_hash STRING, doc_id BIGINT").parquet(dir)
+    private def readShingles(dir: String): DataFrame =
+      s.read.schema("doc_id BIGINT, tg ARRAY<STRING>").parquet(dir)
     private def fs: org.apache.hadoop.fs.FileSystem = store.fs
     // ---- versions (the TieredStore): base pair `sig_v<N>`/`tg_v<N>`
     // (markers on the sig half), delta pairs `dsig_v<k>`/`dtg_v<k>`. A
@@ -1829,7 +1864,7 @@ object Pipelines {
     // self-healing.
     private val store = new TieredStore(s, indexRoot, "near-dup", "MaintainedNearDupIndex",
       basePrefixes = Seq("sig_v", "tg_v"), deltaPrefixes = Seq("dsig_v", "dtg_v"),
-      maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
+      flushEvery, maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
       readOnly,
       unregister = v => if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${sigTable(v)}"))
     private def version = store.version
@@ -1842,7 +1877,7 @@ object Pipelines {
       * empty (the base never holds tombstones — majors GC them). */
     private def deletedIds(tier: DeltaTier): Option[DataFrame] =
       if (tier.isEmpty) None
-      else Some(tier.versions.map(k => s.read.parquet(dsigDir(k)))
+      else Some(tier.versions.map(k => readSigs(dsigDir(k)))
         .reduce(_ unionByName _)
         .filter(col("band") === -1).select(col("doc_id")).distinct())
     private def notDeleted(df: DataFrame, tier: DeltaTier,
@@ -1863,7 +1898,7 @@ object Pipelines {
                                 hint: DataFrame => DataFrame): Option[DataFrame] =
       if (tier.isEmpty) None
       else Some(notDeleted(
-        tier.versions.map(k => s.read.parquet(dsigDir(k)))
+        tier.versions.map(k => readSigs(dsigDir(k)))
           .reduce(_ unionByName _)
           .filter(col("band") >= 0)
           .dropDuplicates("band", "min_hash", "doc_id"), tier, hint))
@@ -1873,7 +1908,7 @@ object Pipelines {
                               hint: DataFrame => DataFrame): Option[DataFrame] =
       if (tier.isEmpty) None
       else Some(notDeleted(
-        tier.versions.map(k => s.read.parquet(dtgDir(k)))
+        tier.versions.map(k => readShingles(dtgDir(k)))
           .reduce(_ unionByName _)
           .filter(col("tg").isNotNull) // tombstone shingle rows are null-tg
           .dropDuplicates("doc_id"), tier, hint))
@@ -1893,23 +1928,29 @@ object Pipelines {
       * compaction drops its rows from both stored relations physically.
       * Same visibility cadence as acceptances: a delete is served from
       * the flush boundary, not mid-window. `ids` is `(doc_id)`;
-      * `n_deleted` counts staged tombstones. */
+      * `n_deleted` counts written tombstones. A delete that closes its
+      * flush window folds its tombstone pairs from memory ([[flush]]). */
     def deleteDocs(ids: DataFrame, batchId: Long): Unit = rootLock(indexRoot).synchronized {
       store.renewWriter("deleteDocs")
       val tomb = ids.select(col("doc_id")).persist()
       try {
         val n = tomb.count()
-        if (n > 0) {
-          tomb.select(col("doc_id"),
-              lit(null).cast("array<string>").as("tg"))
-            .write.mode("append").parquet(tgStaging)
-          tomb.select(lit(-1).as("band"), lit("").as("min_hash"), col("doc_id"))
-            .write.mode("append").parquet(sigStaging)
-          store.nDeleted.addAndGet(n)
-          store.stagedBatches.incrementAndGet()
-        }
-        if ((batchId + 1) % flushEvery == 0) flush()
+        val pair = (tomb.select(lit(-1).as("band"), lit("").as("min_hash"), col("doc_id")),
+          tomb.select(col("doc_id"), lit(null).cast("array<string>").as("tg")))
+        store.write(batchId, Option.when(n > 0)(pair))(stage)(flush)
+        store.nDeleted.addAndGet(n)
       } finally tomb.unpersist()
+    }
+
+    /** Append one write's (signature, shingle) rows to staging — shingles
+      * BEFORE signatures: a crash between the two appends then leaves
+      * orphan shingle rows (inert — a doc with shingles but no
+      * signatures can never become a candidate) instead of orphan
+      * signatures (whose verifies would find no common shingles and
+      * silently admit real near-dups). */
+    private def stage(pair: (DataFrame, DataFrame)): Unit = {
+      pair._2.write.mode("append").parquet(tgStaging)
+      pair._1.write.mode("append").parquet(sigStaging)
     }
 
     /** Release the writer lease (maintainer shutdown). The instance must
@@ -1966,9 +2007,9 @@ object Pipelines {
     private[graft] def baseSignatures: DataFrame = baseSignatures(version)
     private def baseSignatures(v: Int): DataFrame =
       if (bucketed) { ensureSigTable(v); s.table(sigTable(v)) }
-      else s.read.parquet(sigDir(v))
+      else readSigs(sigDir(v))
     private def baseShingles: DataFrame = baseShingles(version)
-    private def baseShingles(v: Int): DataFrame = s.read.parquet(tgDir(v))
+    private def baseShingles(v: Int): DataFrame = readShingles(tgDir(v))
 
     /** The current LOGICAL index: base plus the delta tier, deleted docs
       * excluded from both. */
@@ -2120,7 +2161,9 @@ object Pipelines {
 
     /** Screen one micro-batch `(doc_id, text)` against the current stored
       * index; hand the per-doc match summary to `sink`; stage accepted
-      * docs and compact on the flush boundary. Synchronized with [[flush]]
+      * docs, or — on the batch that closes the flush window — fold them
+      * from the persisted shingle and signature relations with whatever
+      * is staged ([[flush]]). Synchronized with [[flush]]
       * — a flush racing this method's staging appends could delete rows
       * the append just committed (see MaintainedDedupIndex.finalizeBatch);
       * across processes the index is single-writer by contract. */
@@ -2152,29 +2195,20 @@ object Pipelines {
         .orderBy(col("batch_id"))
         .persist()
       try {
-        if (out.count() > 0) {
-          sink(out)
-          val accepted = out.filter(col("n_matches") === 0)
-            .select(col("batch_id").as("doc_id"))
-          // skip both appends when nothing was accepted (an all-duplicate
-          // batch's zero-row parquet part would defeat the flush no-op
-          // guard — see MaintainedDedupIndex.finalizeBatch). Shingles
-          // stage BEFORE signatures: a crash between the two appends then
-          // leaves orphan shingle rows (inert — a doc with shingles but
-          // no signatures can never become a candidate) instead of orphan
-          // signatures (whose verifies would find no common shingles and
-          // silently admit real near-dups).
-          if (!accepted.isEmpty) {
-            tg.join(accepted, "doc_id")
-              .select(col("doc_id"), col("tg"))
-              .write.mode("append").parquet(tgStaging)
-            sig.join(accepted, "doc_id")
-              .select(col("band"), col("min_hash"), col("doc_id"))
-              .write.mode("append").parquet(sigStaging)
-            store.stagedBatches.incrementAndGet()
-          }
-        }
-        if ((batchId + 1) % flushEvery == 0) flush()
+        // rows and acceptances counted in ONE job over the persisted summary
+        val counts = out.agg(count(lit(1)),
+          coalesce(sum(when(col("n_matches") === 0, 1L).otherwise(0L)), lit(0L))).head()
+        if (counts.getLong(0) > 0) sink(out)
+        val accepted = out.filter(col("n_matches") === 0)
+          .select(col("batch_id").as("doc_id"))
+        // nothing to write when nothing was accepted (an all-duplicate
+        // batch's zero-row parquet part would defeat the flush no-op
+        // guard — see MaintainedDedupIndex.finalizeBatch). A doc with an
+        // empty shingle set has no signature rows, so the fold skips its
+        // shingle row like staging's complete-pair rule does.
+        val pair = (sig.join(accepted, "doc_id").select(col("band"), col("min_hash"), col("doc_id")),
+          tg.join(accepted, "doc_id").filter(size(col("tg")) > 0).select(col("doc_id"), col("tg")))
+        store.write(batchId, Option.when(counts.getLong(1) > 0)(pair))(stage)(flush)
       } finally { out.unpersist(); sig.unpersist(); tg.unpersist() }
     }
 
@@ -2210,82 +2244,76 @@ object Pipelines {
         .orderBy(col("batch_id"))
     }
 
-    /** Fold staged signatures + shingles ([[TieredStore.flushWindow]]):
-      * a MINOR delta pair, or a MAJOR base pair N+1 (sig half, tg half,
-      * then the commit). Distinct-folded for replay idempotency, and
-      * restricted to docs staged in BOTH relations: a crash between the
-      * two staging appends leaves one half of a batch, and folding a
-      * doc's signatures without its shingles would corrupt later
-      * verifies — the engine's checkpoint replays the interrupted batch,
-      * whose re-append completes the pair. A staging dir with no complete
-      * doc is dropped, not folded. No-op when nothing is staged. */
-    def flush(): Unit = rootLock(indexRoot).synchronized {
+    /** Fold one flush window — the staged docs in BOTH relations ∪
+      * `pending`, the (signature, shingle) rows of the write that closes
+      * the window, already materialized — into the stored index
+      * ([[TieredStore.flushWindow]]): a MINOR delta pair, or a MAJOR base
+      * pair N+1 (sig half, tg half, then the commit). Distinct-folded for
+      * replay idempotency. Staging is restricted to docs staged in both
+      * relations: a crash between the two staging appends leaves one half
+      * of a batch, and folding a doc's signatures without its shingles
+      * would corrupt later verifies — the engine's checkpoint replays the
+      * interrupted batch, whose re-append completes the pair. The
+      * in-memory pair of a screen holds only docs with signatures. A
+      * staging dir with no complete
+      * doc is dropped, not folded. No-op when the window is empty;
+      * `flush()` folds staging alone. */
+    def flush(pending: Option[(DataFrame, DataFrame)] = None): Unit = rootLock(indexRoot).synchronized {
       store.renewWriter("flush")
       val sp = new org.apache.hadoop.fs.Path(sigStaging)
       val tp = new org.apache.hadoop.fs.Path(tgStaging)
-      if (Pipelines.stagedHasData(fs, sigStaging) && Pipelines.stagedHasData(fs, tgStaging)) {
-        val sigStaged = s.read.parquet(sigStaging)
-        val tgStaged = s.read.parquet(tgStaging)
-        val complete = sigStaged.select("doc_id").distinct()
-          .join(tgStaged.select("doc_id").distinct(), "doc_id")
-          .persist()
-        try {
-          if (!complete.isEmpty)
+      val complete =
+        if (Pipelines.stagedHasData(fs, sigStaging) && Pipelines.stagedHasData(fs, tgStaging))
+          Some(readSigs(sigStaging).select("doc_id").distinct()
+            .join(readShingles(tgStaging).select("doc_id").distinct(), "doc_id")
+            .persist())
+        else None
+      try {
+        val onDisk = complete.filterNot(_.isEmpty).map(c =>
+          (readSigs(sigStaging).join(c, "doc_id").select(col("band"), col("min_hash"), col("doc_id")),
+            readShingles(tgStaging).join(c, "doc_id").select(col("doc_id"), col("tg"))))
+        (onDisk.toSeq ++ pending)
+          .reduceOption((a, b) => (a._1 unionByName b._1, a._2 unionByName b._2))
+          .foreach { case (sigStaged, tgStaged) =>
             store.flushWindow { tier =>
               // dtg BEFORE dsig (orphan asymmetry: see the store comment)
-              sizedForWrite(tgStaged.join(complete, "doc_id")
-                  .dropDuplicates("doc_id"))
+              sizedForWrite(tgStaged.dropDuplicates("doc_id"))
                 .write.mode("overwrite").parquet(dtgDir(tier.next))
-              sizedForWrite(sigStaged.join(complete, "doc_id")
-                  .select(col("band"), col("min_hash"), col("doc_id"))
-                  .dropDuplicates("band", "min_hash", "doc_id"))
+              sizedForWrite(sigStaged.dropDuplicates("band", "min_hash", "doc_id"))
                 .write.mode("overwrite").parquet(dsigDir(tier.next))
             } { (tier, v) =>
-              // staged tombstones delete at the fold: their docs leave
-              // both compacted relations (tier-level tombstones are
-              // already excluded by currentSignatures/currentShingles),
-              // and no tombstone row reaches the new base — the GC moment
-              val stagedDel = sigStaged.filter(col("band") === -1)
-                .select(col("doc_id")).distinct()
-              val dropDel = (df: DataFrame) =>
-                df.join(broadcast(stagedDel), Seq("doc_id"), "left_anti")
+              // every doc of the window leaves the served relations as one
+              // broadcast anti-join: a tombstoned doc's rows are gone (the
+              // delete's GC moment — tier-level tombstones are already
+              // excluded by currentSignatures/currentShingles, and no
+              // tombstone row reaches the new base), and an accepted doc's
+              // come back from the window side, which folds alone
+              // (window-sized dedup) — no corpus-wide dropDuplicates over
+              // base ∪ tier ∪ window (guide §2.4; identical-row invariant,
+              // see currentSignatures)
+              val windowDocs = sigStaged.select(col("doc_id")).distinct()
+              val dropWindow = (df: DataFrame) =>
+                df.join(broadcast(windowDocs), Seq("doc_id"), "left_anti")
                   .select(df.columns.map(col).toIndexedSeq: _*) // keep input order
-              // the staged side folds alone (staged-sized dedup) and its
-              // doc set anti-joins the served relation as a broadcast —
-              // no corpus-wide dropDuplicates over base ∪ tier ∪ staged
-              // (guide §2.4; identical-row invariant, see currentSignatures)
-              val stagedSigLive = sigStaged.filter(col("band") >= 0)
-                .join(complete, "doc_id")
-                .select(col("band"), col("min_hash"), col("doc_id"))
-                .dropDuplicates("band", "min_hash", "doc_id")
-              val stagedDocs = stagedSigLive.select(col("doc_id")).distinct()
-              val dropStaged = (df: DataFrame) =>
-                df.join(broadcast(stagedDocs), Seq("doc_id"), "left_anti")
-                  .select(df.columns.map(col).toIndexedSeq: _*)
               writeSignatures(
-                dropDel(dropStaged(currentSignatures(tier, version)))
-                  .unionByName(stagedSigLive),
+                dropWindow(currentSignatures(tier, version))
+                  .unionByName(sigStaged.filter(col("band") >= 0)
+                    .dropDuplicates("band", "min_hash", "doc_id")),
                 v)
-              val stagedTgLive = tgStaged.filter(col("tg").isNotNull)
-                .join(complete, "doc_id")
-                .dropDuplicates("doc_id")
-              dropDel(dropStaged(currentShingles(tier, version)))
-                .unionByName(stagedTgLive)
+              dropWindow(currentShingles(tier, version))
+                .unionByName(tgStaged.filter(col("tg").isNotNull).dropDuplicates("doc_id"))
                 .write.mode("overwrite").parquet(tgDir(v))
               store.commit(v, tier.next)
             }
-        } finally complete.unpersist()
-        fs.delete(sp, true)
-        fs.delete(tp, true)
-      } else if (fs.exists(sp) || fs.exists(tp)) {
-        // orphan half (crash between the two appends) or _temporary-only
-        // remnant of a killed write: neither is foldable — folding a doc's
-        // signatures without its shingles would corrupt later verifies,
-        // and a footer-less dir would make the read throw. Drop both; the
-        // engine's checkpoint replay re-stages the interrupted batch.
-        fs.delete(sp, true)
-        fs.delete(tp, true)
-      }
+          }
+      } finally complete.foreach(_.unpersist())
+      // folded, or not foldable: an orphan half (crash between the two
+      // appends) or a _temporary-only remnant of a killed write — folding
+      // a doc's signatures without its shingles would corrupt later
+      // verifies, and a footer-less dir would make the read throw. The
+      // engine's checkpoint replay re-stages the interrupted batch.
+      if (fs.exists(sp)) fs.delete(sp, true)
+      if (fs.exists(tp)) fs.delete(tp, true)
     }
 
     /** SHADOW MAJOR compaction for the signature/shingle pair

@@ -148,6 +148,16 @@ object Soak {
     }
   }
 
+  /** The distinct doc ids under an append-only service output dir; empty
+    * until its first file commits — reading the dir before it exists only
+    * logs a FileNotFoundException per poll. */
+  private def committedIds(s: SparkSession, dir: String): Set[Long] = {
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!graft.VersionedDirs.hasCommittedData(fs, dir)) Set.empty
+    else try s.read.parquet(dir).select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
+    catch { case scala.util.control.NonFatal(_) => Set.empty }
+  }
+
   private def deleteTree(p: String): Unit = {
     val f = java.nio.file.Paths.get(p)
     if (java.nio.file.Files.exists(f)) {
@@ -1213,10 +1223,7 @@ object Soak {
       outRoot, ckptRoot, trigger = Trigger.ProcessingTime("200 milliseconds"))
     var (system, control) = boot()
 
-    def decidedIdSet(): Set[Long] =
-      try s.read.parquet(decisionsDir).select(col("doc_id"))
-        .distinct().collect().map(_.getLong(0)).toSet
-      catch { case scala.util.control.NonFatal(_) => Set.empty }
+    def decidedIdSet(): Set[Long] = committedIds(s, decisionsDir)
     def await(what: String)(done: () => Boolean): Unit =
       if (!Service.pollUntil(done)) throw new IllegalStateException(
         s"assembled soak timed out awaiting $what (seed=$seed)\n  op log:\n  " +
@@ -1422,10 +1429,7 @@ object Soak {
       outRoot, ckptRoot, trigger = Trigger.ProcessingTime("200 milliseconds"))
     var (system, control) = boot()
 
-    def indexedIdSet(): Set[Long] =
-      try s.read.parquet(indexedDir).select(col("doc_id"))
-        .distinct().collect().map(_.getLong(0)).toSet
-      catch { case scala.util.control.NonFatal(_) => Set.empty }
+    def indexedIdSet(): Set[Long] = committedIds(s, indexedDir)
     def await(what: String)(done: () => Boolean): Unit =
       if (!Service.pollUntil(done)) throw new IllegalStateException(
         s"assembled retrieval soak timed out awaiting $what (seed=$seed)\n  op log:\n  " +

@@ -18,10 +18,11 @@ import org.apache.spark.sql.functions._
   *    recompute at majors). Each ingest batch tokenizes map-side and
   *    aggregates once on (term, doc_id) — batch-sized work, the
   *    corpus-scale relations are never read per batch. The flush
-  *    boundary folds staging into a delta pair (`dpost_v<k>`/`ddl_v<k>`,
-  *    flush-window sized) or, every (maxDeltas+1)-th flush, a MAJOR
-  *    compaction into version N+1 — the same LSM shape, floor-marker
-  *    grace GC included, as the other maintained indexes.
+  *    boundary folds staging ∪ the closing batch's in-memory rows into a
+  *    delta pair (`dpost_v<k>`/`ddl_v<k>`, flush-window sized) or, every
+  *    (maxDeltas+1)-th flush, a MAJOR compaction into version N+1 — the
+  *    same LSM shape, floor-marker grace GC included, as the other
+  *    maintained indexes.
   *  - **Additive corpus stats, EXACT in every window.** BM25's global
   *    stats (n_docs, sum_dl) come from the base version's marker (exact,
   *    recomputed at every major) plus a winner-deduped aggregate over
@@ -67,7 +68,6 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
                                 keepVersions: Int = 2,
                                 readOnly: Boolean = false) {
   import TieredStore.DeltaTier
-  require(flushEvery >= 1, "flushEvery must be >= 1")
 
   private def postDir(v: Int) = s"$indexRoot/post_v$v"
   private def dlDir(v: Int) = s"$indexRoot/dl_v$v"
@@ -83,12 +83,18 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     s.read.schema("doc_id BIGINT, dl BIGINT").parquet(dir)
   private def postStaging = s"$indexRoot/post_staging"
   private def dlStaging = s"$indexRoot/dl_staging"
+  // staging rows carry their batch stamp `_b`
+  private def readStagedPostings(): DataFrame =
+    s.read.schema("term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, _b BIGINT")
+      .parquet(postStaging)
+  private def readStagedLengths(): DataFrame =
+    s.read.schema("doc_id BIGINT, dl BIGINT, _b BIGINT").parquet(dlStaging)
   private val statsMarker = "_graft_stats"
   private def fs: org.apache.hadoop.fs.FileSystem = store.fs
 
   private val store = new TieredStore(s, indexRoot, "text", "MaintainedTextIndex",
     basePrefixes = Seq("post_v", "dl_v"), deltaPrefixes = Seq("ddl_v", "dpost_v"),
-    maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
+    flushEvery, maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
     readOnly,
     deltaCommitted = k => Pipelines.readLongsMarker(fs, dpostDir(k), statsMarker).nonEmpty)
   private def version = store.version
@@ -277,12 +283,14 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
       .option("maxRecordsPerFile", Pipelines.BaseFileRecords).parquet(dir)
 
   /** Ingest one batch `(doc_id, text)`: tokenize (batch-sized), hand the
-    * per-doc `(doc_id, dl)` summary to `sink`, stage both relations with
-    * the batch stamp (within-window re-ingests resolve latest-batch-wins
-    * at the flush), and fold on the flush boundary. Postings stage BEFORE
-    * lengths — a crash in between leaves orphan postings with no length
-    * winner, which the fold drops and the batch replay restores; the
-    * reverse order would index a doc with no terms. */
+    * per-doc `(doc_id, dl)` summary to `sink`, and take both relations,
+    * stamped with the batch id (within-window re-ingests resolve
+    * latest-batch-wins at the flush), either to staging (an open flush
+    * window) or — on the batch that closes the window — straight into
+    * the fold ([[flush]]), from the materialized token arrays. Postings
+    * stage BEFORE lengths — a crash in between leaves orphan postings
+    * with no length winner, which the fold drops and the batch replay
+    * restores; the reverse order would index a doc with no terms. */
   def ingestBatch(batch: DataFrame, batchId: Long)
                  (sink: DataFrame => Unit): Unit = Pipelines.rootLock(indexRoot).synchronized {
     store.renewWriter("ingestBatch")
@@ -290,15 +298,13 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     // tokenize() already materializes the token arrays (localCheckpoint),
     // so dl is a cheap projection of stored blocks — no extra persist
     val (post, dl) = tokenize(batch)
-    if (dl.count() > 0) {
-      sink(dl)
-      post.withColumn("_b", lit(batchId))
-        .write.mode("append").parquet(postStaging)
-      dl.withColumn("_b", lit(batchId))
-        .write.mode("append").parquet(dlStaging)
-      store.stagedBatches.incrementAndGet()
-    }
-    if ((batchId + 1) % flushEvery == 0) flush()
+    val n = dl.count()
+    if (n > 0) sink(dl)
+    store.write(batchId, Option.when(n > 0)(
+      (post.withColumn("_b", lit(batchId)), dl.withColumn("_b", lit(batchId))))) { w =>
+      w._1.write.mode("append").parquet(postStaging)
+      w._2.write.mode("append").parquet(dlStaging)
+    }(flush)
   }
 
   /** DELETE documents (the takedown/curation operation): stage one
@@ -310,10 +316,11 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     * the additive stats), a LATER re-ingest of the doc_id supersedes the
     * tombstone, and the next MAJOR compacts deleted docs away physically
     * (tombstone rows included) while recomputing the stats exactly.
-    * `ids` is `(doc_id)`; `n_deleted` counts staged tombstones. Within
+    * `ids` is `(doc_id)`; `n_deleted` counts written tombstones. Within
     * one batch id, a delete and an ingest of the same doc resolve
     * ingest-wins (dl ≥ 0 sorts above -1 at equal `_b`) — issue deletes
-    * under their own batch id. */
+    * under their own batch id. A delete that closes its flush window
+    * folds its tombstones from memory ([[flush]]). */
   def deleteDocs(ids: DataFrame, batchId: Long): Unit = Pipelines.rootLock(indexRoot).synchronized {
     store.renewWriter("deleteDocs")
     requireSeeded("deleteDocs")
@@ -321,76 +328,80 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
       lit(batchId).as("_b")).persist()
     try {
       val n = tomb.count()
-      if (n > 0) {
-        tomb.write.mode("append").parquet(dlStaging)
-        store.nDeleted.addAndGet(n)
-        store.stagedBatches.incrementAndGet()
-      }
-      if ((batchId + 1) % flushEvery == 0) flush()
+      store.write(batchId, Option.when(n > 0)((noPostings, tomb)))(w =>
+        w._2.write.mode("append").parquet(dlStaging))(flush)
+      store.nDeleted.addAndGet(n)
     } finally tomb.unpersist()
   }
 
-  /** Fold staging ([[TieredStore.flushWindow]]): a MINOR delta pair
-    * (O(staged)), or a MAJOR compaction into version N+1 —
-    * tombstone-resolving every doc to its newest tier and recomputing the
-    * corpus stats EXACTLY from the resolved lengths (the Lucene-merge
-    * moment where the additive stats heal — deleted docs drop out here).
-    * A dl-only staging dir is valid (a delete-only window stages no
-    * postings — every completed INGEST writes postings before lengths, so
-    * lengths-without-postings can only be tombstones plus completed
-    * batches' rows); the reverse orphan (postings only) is still a torn
-    * ingest and is dropped for the replay to restore. */
-  def flush(): Unit = Pipelines.rootLock(indexRoot).synchronized {
+  /** The postings half of a delete-only window: none. */
+  private def noPostings: DataFrame = {
+    import s.implicits._
+    Seq.empty[(String, Long, Long, Long, Long)].toDF("term", "doc_id", "tf", "dl", "_b")
+  }
+
+  /** Fold one flush window — staging ∪ `pending`, the (postings, lengths)
+    * rows of the write that closes the window, batch-stamped and already
+    * materialized — into the stored index ([[TieredStore.flushWindow]]):
+    * a MINOR delta pair (O(window)), or a MAJOR compaction into version
+    * N+1 — tombstone-resolving every doc to its newest tier and
+    * recomputing the corpus stats EXACTLY from the resolved lengths (the
+    * Lucene-merge moment where the additive stats heal — deleted docs
+    * drop out here). A dl-only staging dir is valid (a delete-only window
+    * stages no postings — every completed INGEST writes postings before
+    * lengths, so lengths-without-postings can only be tombstones plus
+    * completed batches' rows); the reverse orphan (postings only) is
+    * still a torn ingest and is dropped for the replay to restore.
+    * `flush()` folds staging alone. */
+  def flush(pending: Option[(DataFrame, DataFrame)] = None): Unit = Pipelines.rootLock(indexRoot).synchronized {
     store.renewWriter("flush")
     val stagingDl = new org.apache.hadoop.fs.Path(dlStaging)
     val stagingPost = new org.apache.hadoop.fs.Path(postStaging)
-    if (Pipelines.stagedHasData(fs, dlStaging)) {
-      // within-window resolution: the newest batch's length wins per doc,
-      // and only the winning batch's postings survive (a replayed append
-      // duplicates rows with identical values — dropDuplicates is exact)
-      val sdl = s.read.parquet(dlStaging)
-      val winners = sdl.groupBy("doc_id")
-        .agg(max(struct(col("_b"), col("dl"))).as("_w"))
-        .select(col("doc_id"), col("_w._b").as("_b"), col("_w.dl").as("dl"))
-      val rdl = winners.select(col("doc_id"), col("dl"))
-      val spost =
-        if (Pipelines.stagedHasData(fs, postStaging)) s.read.parquet(postStaging)
-        else { // delete-only window: no postings staged
-          import s.implicits._
-          Seq.empty[(String, Long, Long, Long, Long)]
-            .toDF("term", "doc_id", "tf", "dl", "_b")
+    val onDisk =
+      if (!Pipelines.stagedHasData(fs, dlStaging)) None
+      else Some((
+        if (Pipelines.stagedHasData(fs, postStaging)) readStagedPostings()
+        else noPostings, // delete-only window: no postings staged
+        readStagedLengths()))
+    (onDisk.toSeq ++ pending)
+      .reduceOption((a, b) => (a._1 unionByName b._1, a._2 unionByName b._2))
+      .foreach { case (spost, sdl) =>
+        // within-window resolution: the newest batch's length wins per doc,
+        // and only the winning batch's postings survive (a replayed append
+        // duplicates rows with identical values — dropDuplicates is exact)
+        val winners = sdl.groupBy("doc_id")
+          .agg(max(struct(col("_b"), col("dl"))).as("_w"))
+          .select(col("doc_id"), col("_w._b").as("_b"), col("_w.dl").as("dl"))
+        val rdl = winners.select(col("doc_id"), col("dl"))
+        val rpost = spost
+          .join(winners.select(col("doc_id"), col("_b")), Seq("doc_id", "_b"))
+          .select(col("term"), col("doc_id"), col("tf"), col("dl"))
+          .dropDuplicates("term", "doc_id")
+        store.flushWindow { tier =>
+          // post half first, then the dl half, then the stats marker that
+          // commits the pair — any crash prefix leaves an incomplete,
+          // invisible pair the next flush overwrites. The pair's stats ride
+          // the dl write via observe() (no read-back job).
+          Pipelines.sizedForWrite(rpost).write.mode("overwrite").parquet(dpostDir(tier.next))
+          val obs = org.apache.spark.sql.Observation()
+          Pipelines.sizedForWrite(observeDlStats(rdl, obs))
+            .write.mode("overwrite").parquet(ddlDir(tier.next))
+          val (nD, sdD) = statsFromObs(obs)
+          Pipelines.writeLongsMarker(fs, dpostDir(tier.next), statsMarker, Seq(nD, sdD))
+        } { (tier, v) =>
+          val stagedDlBytes = graft.VersionedDirs.committedBytes(fs, dlStaging) +
+            pending.fold(BigInt(0))(p => Pipelines.estimatedBytes(p._2))
+          foldBase(tier, Some((rpost, rdl)),
+            guardOk = !tier.oversized && stagedDlBytes <= maxDeltaBroadcastBytes,
+            postDir(v), dlDir(v))
+          store.commit(v, tier.next)
         }
-      val rpost = spost
-        .join(winners.select(col("doc_id"), col("_b")), Seq("doc_id", "_b"))
-        .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-        .dropDuplicates("term", "doc_id")
-      store.flushWindow { tier =>
-        // post half first, then the dl half, then the stats marker that
-        // commits the pair — any crash prefix leaves an incomplete,
-        // invisible pair the next flush overwrites. The pair's stats ride
-        // the dl write via observe() (no read-back job).
-        Pipelines.sizedForWrite(rpost).write.mode("overwrite").parquet(dpostDir(tier.next))
-        val obs = org.apache.spark.sql.Observation()
-        Pipelines.sizedForWrite(observeDlStats(rdl, obs))
-          .write.mode("overwrite").parquet(ddlDir(tier.next))
-        val (nD, sdD) = statsFromObs(obs)
-        Pipelines.writeLongsMarker(fs, dpostDir(tier.next), statsMarker, Seq(nD, sdD))
-      } { (tier, v) =>
-        val stagedDlBytes = graft.VersionedDirs.committedBytes(fs, dlStaging)
-        foldBase(tier, Some((rpost, rdl)),
-          guardOk = !tier.oversized && stagedDlBytes <= maxDeltaBroadcastBytes,
-          postDir(v), dlDir(v))
-        store.commit(v, tier.next)
       }
-      fs.delete(stagingDl, true)
-      fs.delete(stagingPost, true)
-    } else {
-      // an incomplete ingest (crash between the two staging appends, or a
-      // _temporary-only remnant): the batch never completed and will be
-      // replayed — clear whatever half exists
-      if (fs.exists(stagingDl)) fs.delete(stagingDl, true)
-      if (fs.exists(stagingPost)) fs.delete(stagingPost, true)
-    }
+    // folded, or an incomplete ingest (crash between the two staging
+    // appends, or a _temporary-only remnant): that batch never completed
+    // and will be replayed — clear whatever half exists
+    if (fs.exists(stagingDl)) fs.delete(stagingDl, true)
+    if (fs.exists(stagingPost)) fs.delete(stagingPost, true)
   }
 
   /** Write the base that folds `tier` (and, at a flush, the resolved

@@ -47,6 +47,15 @@ import org.apache.spark.sql.SparkSession
   *    [[Pipelines.WriterLease]] and clears torn pointer claims at
   *    construction; every mutation renews it. A read-only handle takes
   *    nothing and refuses every mutation.
+  *  - **Flush window.** A write under batch id b closes its window when
+  *    `(b + 1) % flushEvery == 0` ([[write]]). A write inside an open
+  *    window appends its rows to the pillar's staging; the write that
+  *    closes the window hands its rows, already materialized, straight to
+  *    the pillar's `flush(pending)`, which folds committed staging ∪
+  *    those rows in memory — no staging write and read-back. A batch
+  *    whose call has not returned is replayed from the stream's
+  *    checkpoint, so a crash before the commit point loses nothing the
+  *    staging copy would have saved.
   *  - **Flush and rebuild.** A flush window is MINOR (one delta) until
   *    `maxDeltas` deltas accumulate or the tier oversizes (an early
   *    major), else MAJOR (base N+1); while a shadow rebuild is in flight
@@ -55,7 +64,7 @@ import org.apache.spark.sql.SparkSession
   *    time; its swap moves each shadow into place and commits. */
 final class TieredStore(s: SparkSession, root: String, pillar: String, owner: String,
                         basePrefixes: Seq[String], deltaPrefixes: Seq[String],
-                        maxDeltas: Int, maxDeltaBroadcastBytes: Long,
+                        flushEvery: Int, maxDeltas: Int, maxDeltaBroadcastBytes: Long,
                         keepVersions: Int, pointer: Option[VersionPointer],
                         leaseTtlMs: Long, writerId: String, readOnly: Boolean,
                         sidecarPrefixes: Seq[String] = Nil,
@@ -63,6 +72,7 @@ final class TieredStore(s: SparkSession, root: String, pillar: String, owner: St
                         unregister: Int => Unit = _ => ()) {
   import TieredStore._
 
+  require(flushEvery >= 1, "flushEvery must be >= 1")
   require(maxDeltas >= 0, "maxDeltas must be >= 0")
   // keep >= 2: an in-flight lazy plan built just before a major still
   // reads the previous base version (the grace rule); raise it for
@@ -221,6 +231,18 @@ final class TieredStore(s: SparkSession, root: String, pillar: String, owner: St
     Pipelines.retireVersionsExcept(fs, root, primary, keep, onRetire = unregister)
     (basePrefixes.tail ++ sidecarPrefixes).foreach(p =>
       Pipelines.retireVersionsExcept(fs, root, p, keep))
+  }
+
+  /** One mutation's staging step, shared by every pillar's writes.
+    * `pending` is the write's rows (None when it has none). A write whose
+    * batch id closes its flush window calls `flush(pending)`, which folds
+    * committed staging ∪ `pending`; any other write appends `pending` to
+    * staging through `stage`. A write with rows counts in
+    * `staged_batches` either way. */
+  def write[P](batchId: Long, pending: Option[P])(stage: P => Unit)
+              (flush: Option[P] => Unit): Unit = {
+    if ((batchId + 1) % flushEvery == 0) flush(pending) else pending.foreach(stage)
+    if (pending.nonEmpty) stagedBatches.incrementAndGet()
   }
 
   /** One flush window's lifecycle: decide minor vs major on one tier

@@ -46,21 +46,12 @@ class RoundNineSpec extends SparkSpec {
   }
 
   test("x37b: the declared query is O(1) Spark jobs") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val rows = Bpe.x37bBpeMergesScaled(spark, sf0001).collect()
-      Thread.sleep(500) // let queued listener events drain
-      assert(rows.length > Bpe.MergeSteps)
-      // one word-count collect + the local-relation collect (AQE splits each
-      // into a few jobs); the 2-jobs-PER-MERGE distributed loop would need
-      // ~180 at this corpus's exhaustion point
-      assert(jobs.get() <= 8, s"${jobs.get()} jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (rows, jobs) = jobsIn("x37b")(Bpe.x37bBpeMergesScaled(spark, sf0001).collect())
+    assert(rows.length > Bpe.MergeSteps)
+    // one word-count collect + the local-relation collect (AQE splits each
+    // into a few jobs); the 2-jobs-PER-MERGE distributed loop would need
+    // ~180 at this corpus's exhaustion point
+    assert(jobs > 0 && jobs <= 8, s"$jobs jobs")
   }
 
   test("bpe_apply: native expression matches the chained-HOF fold and a JVM replay") {

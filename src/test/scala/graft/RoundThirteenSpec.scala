@@ -509,31 +509,15 @@ class RoundThirteenSpec extends SparkSpec {
       // plan guard on a warm call: the serve runs from one query_id
       // partitioning in at most 12 Spark jobs, and the maintained code
       // layout needs no per-search round-robin repartition
-      val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobGroups.add(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      val (warm, jobs) = jobsIn("serve-guard") {
+        val w = svc.searchBatch(qs.toDF("query_id", "terms", "text"))
+        w.collect()
+        w
       }
-      val sc = spark.sparkContext
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup("serve-guard", "warm searchBatch")
-        val warm = svc.searchBatch(qs.toDF("query_id", "terms", "text"))
-        warm.collect()
-        // a marker job: once the listener has seen it, every earlier job
-        // event has been delivered
-        sc.setJobGroup("serve-guard-end", "marker")
-        sc.parallelize(Seq(1), 1).count()
-        val deadline = System.currentTimeMillis() + 30000
-        while (!jobGroups.contains("serve-guard-end") && System.currentTimeMillis() < deadline)
-          Thread.sleep(10)
-        val jobs = jobGroups.asScala.count(_ == "serve-guard")
-        assert(jobs > 0 && jobs <= 12, s"a warm searchBatch ran $jobs Spark jobs (want <= 12)")
-        val plan = warm.queryExecution.executedPlan.toString
-        assert(!plan.contains("RoundRobinPartitioning"),
-          s"the serve plan must not round-robin the code scan:\n$plan")
-      } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+      assert(jobs > 0 && jobs <= 12, s"a warm searchBatch ran $jobs Spark jobs (want <= 12)")
+      val plan = warm.queryExecution.executedPlan.toString
+      assert(!plan.contains("RoundRobinPartitioning"),
+        s"the serve plan must not round-robin the code scan:\n$plan")
       // takedown doc 3: gone from BOTH pillars' serving from the flush
       assert(svc.search(Seq("term3"), "probe", kTop = 5)
         .collect().map(_.getLong(0)).contains(3L))

@@ -39,4 +39,15 @@ class SizedWriteSpec extends SparkSpec {
     val huge = sparkS.range(0, 1 << 20).crossJoin(sparkS.range(0, 1 << 20))
     assert(head(sizedForWrite(huge.toDF())) == ((64, true)))
   }
+
+  test("the byte-target env knob parses a positive count and names itself on a bad value") {
+    import graft.streaming.Pipelines.{DeltaWriteTargetEnv, parseWriteTargetBytes}
+    assert(parseWriteTargetBytes(None) == 256L * 1024 * 1024)
+    assert(parseWriteTargetBytes(Some(" 1048576 ")) == 1048576L)
+    for (bad <- Seq("0", "-5", "64MB", "", "1e9", "99999999999999999999")) {
+      val e = intercept[IllegalArgumentException](parseWriteTargetBytes(Some(bad)))
+      assert(e.getMessage.contains(DeltaWriteTargetEnv) && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+  }
 }

@@ -16,6 +16,49 @@ trait SparkSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  /** Run `body` with this thread's job group set to `group` and return
+    * its result with the number of Spark jobs started in that group
+    * ([[jobsDuring]]). */
+  def jobsIn[T](group: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val (out, jobs) = jobsDuring {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    (out, jobs.count(_.group == group))
+  }
+
+  /** Run `body` and return every Spark job started meanwhile, from any
+    * thread: its job group ("" outside any group — a stream tags its jobs
+    * with its run id) and the long call site of its first stage. A marker
+    * job in its own group drains the listener bus before the jobs are
+    * read: once the listener has seen the marker, it has seen every
+    * earlier job. */
+  def jobsDuring[T](body: => T): (T, Seq[SparkSpec.JobStart]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkSpec.JobStart]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(SparkSpec.JobStart(
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .getOrElse(""),
+          e.stageInfos.headOption.map(_.details).getOrElse("")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      val marker = s"jobs-marker-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(marker, "listener-bus marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      import scala.jdk.CollectionConverters._
+      def drained = seen.asScala.exists(_.group == marker)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!drained && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(drained, "the listener bus did not deliver the marker job")
+      (out, seen.asScala.toSeq.filterNot(_.group == marker))
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Recursive directory copy — the crash-simulation snapshot primitive
     * (snapshot staging/version dirs, crash, restore) shared by the
     * maintained-index specs. */
@@ -35,6 +78,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** One job start seen by [[SparkSpec.jobsDuring]]. */
+  final case class JobStart(group: String, callSite: String)
+
   lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")

@@ -194,15 +194,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("routed_jobs_ck").toString
     val in = MemoryStream[String]
     in.addData(dmlRows(20, 3))
-    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobGroups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    val sc = sparkS.sparkContext
-    sc.addSparkListener(listener)
-    try {
+    // the stream tags its jobs with its run id
+    val (q, started) = jobsDuring {
       val q = Pipelines.dmlTransform(in.toDF()).writeStream
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
@@ -211,19 +204,13 @@ class StreamingSpec extends SparkSpec {
         }
         .start()
       q.awaitTermination()
-      // the stream tags its jobs with its run id; a marker job drains the
-      // listener bus of every earlier job event
-      sc.setJobGroup("routed-jobs-end", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!jobGroups.contains("routed-jobs-end") && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      val jobs = jobGroups.asScala.count(_ == q.runId.toString)
-      assert(batches == 1 && jobs == 1, s"$batches keyed batch(es) ran $jobs Spark jobs (want 1 and 1)")
-      assert(sparkS.read.parquet(s"$out/main").count() == 20)
-      assert(sparkS.read.parquet(s"$out/dead_letter").count() == 3)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+      q
+    }
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    val jobs = started.count(_.group == q.runId.toString)
+    assert(batches == 1 && jobs == 1, s"$batches keyed batch(es) ran $jobs Spark jobs (want 1 and 1)")
+    assert(sparkS.read.parquet(s"$out/main").count() == 20)
+    assert(sparkS.read.parquet(s"$out/dead_letter").count() == 3)
   }
 
   test("routed sink: a failed batch leaves no new file and no _temporary") {
