@@ -763,7 +763,7 @@ object ScaleProbe {
     // ---- TAKEDOWN ID-RESOLVE at scale (round 16): the doc_id→fp SIDECAR
     // projection makes the exact-dedup id→fp resolve read O(request)
     // bytes (pushed In(doc_id) against the doc_id-clustered sidecar +
-    // pushed In(fp) against the fp-sorted base) instead of the r15
+    // pushed In(fp) against the base) instead of the r15
     // shape's two full base∪tier∪staged scans per request batch. Probe:
     // the SAME 100-id takedown request against a 100k-fp and a 1M-fp
     // base — resolve cost must be ~flat in base size; the bulk 10^5-id
@@ -779,7 +779,7 @@ object ScaleProbe {
         .select(concat(lit("fp"), col("id")).as("fp"), col("id").as("corpus_id"))
       for ((n, tag) <- Seq((100000L, "100k"), (1000000L, "1M"))) {
         val idx = new Pipelines.MaintainedDedupIndex(spark, s"$rroot/$tag",
-          ttlMs = 60000L, flushEvery = 1000000, fpBuckets = 16, maxDeltas = 8)
+          ttlMs = 60000L, flushEvery = 1000000, maxDeltas = 8)
         time(s"idresolve base build $tag (untimed context for the rows below)") {
           idx.initIndex(fpBase(n)); n
         }

@@ -217,10 +217,11 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     * (an in-flight or reader search pairs a pinned codes snapshot with
     * ITS model — retiring the model mid-plan breaks it), plus the
     * current. */
-  private def retireModels(): Unit =
-    Pipelines.retireVersionsExcept(fs, indexRoot, "model_v",
-      store.baseKeepSet.flatMap(v =>
-        Pipelines.readIntMarker(fs, codesDir(v), modelMarker)) + modelVersion)
+  private def retireModels(): Unit = {
+    val keep = store.baseKeepSet.flatMap(v =>
+      Pipelines.readIntMarker(fs, codesDir(v), modelMarker)) + modelVersion
+    Pipelines.retireVersions(fs, indexRoot, "model_v")(!keep(_))
+  }
 
   /** Release the writer lease (maintainer shutdown); no-op on a
     * read-only handle (it holds nothing). */
@@ -437,7 +438,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
 
   private def resolvedSinceBuild(tier: Seq[Int]): Option[DataFrame] = {
     val stagedLive: Option[DataFrame] =
-      if (Pipelines.stagedHasData(fs, stagingDir))
+      if (graft.VersionedDirs.hasCommittedData(fs, stagingDir))
         Some(stampStaged(readStaging())
           .filter(col("_graft_model_v") === lit(modelVersion.toLong))
           .withColumn("_tier", lit(Long.MaxValue))
@@ -743,7 +744,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     * excluded exactly as flush() discards them. */
   private def currentCodesWithStaged: DataFrame = {
     val served = currentCodes
-    if (!Pipelines.stagedHasData(fs, stagingDir)) served
+    if (!graft.VersionedDirs.hasCommittedData(fs, stagingDir)) served
     else {
       val live = stampStaged(readStaging())
         .filter(col("_graft_model_v") === lit(modelVersion.toLong))
@@ -935,7 +936,7 @@ final class MaintainedAnnIndex(s: SparkSession, indexRoot: String,
     store.renewWriter("flush")
     val staging = new org.apache.hadoop.fs.Path(stagingDir)
     val onDisk =
-      if (!Pipelines.stagedHasData(fs, stagingDir)) None
+      if (!graft.VersionedDirs.hasCommittedData(fs, stagingDir)) None
       else {
         val stagedStamped = stampStaged(readStaging())
         // DISCARD rows encoded under a superseded model: a crash between a

@@ -71,13 +71,12 @@ final class CurationService(s: SparkSession, exactRoot: String, nearRoot: String
                             minTokens: Int = graft.functions.Curation.MinTokens,
                             minJaccard: Double = 0.5,
                             ttlMs: Long = 60000L,
-                            fpBuckets: Int = 0, sigBuckets: Int = 0,
                             maxDeltas: Int = 0) {
 
   val exact = new Pipelines.MaintainedDedupIndex(s, exactRoot, ttlMs, flushEvery,
-    fpBuckets = fpBuckets, maxDeltas = maxDeltas)
+    maxDeltas = maxDeltas)
   val near = new Pipelines.MaintainedNearDupIndex(s, nearRoot, flushEvery,
-    minJaccard, sigBuckets = sigBuckets, maxDeltas = maxDeltas)
+    minJaccard, maxDeltas = maxDeltas)
 
   /** Both indexes' lifecycle gauges, keyed for the Observability
     * reporter's `indexGauges` surface. */
@@ -345,7 +344,7 @@ object CurationService {
 
   /** x100's takedown midpoint: admitted canonicals with doc_id below
     * this are taken down and re-admitted as clones. ONE place owns the
-    * integer arithmetic that the Spark side, X100Debug, and the DuckDB
+    * integer arithmetic that the Spark side and the DuckDB
     * oracle's `mid` CTE (x100OracleSql — `min + (max - min + 1) // 2`,
     * same floor division on positives) must agree on. */
   def takedownMid(lo: Long, hi: Long): Long = lo + (hi - lo + 1) / 2
@@ -462,13 +461,6 @@ object CurationService {
         Service.appendControlBatch(s, controlDir,
           Seq(Ccd("c", "inactive", qC, 1), Ccd("d", "active", qD, 0)))
         await(s"re-ingest of $nTaken originals")(() => decidedIds(qD) == nTaken)
-        if (sys.env.contains("SPARK_GRAFT_X100_DEBUG")) {
-          println(s"X100DBG nTaken=$nTaken perId=$perId")
-          println(s"X100DBG exact.stats=${svc.exact.stats}")
-          println(s"X100DBG near.stats=${svc.near.stats}")
-          Seq(qA, qC, qD).foreach(q => decisions(q).groupBy("status").count()
-            .collect().foreach(r => println(s"X100DBG $q status ${r.get(0)}=${r.get(1)}")))
-        }
       } finally { control.stop(); system.stop() }
 
       // ---- the final curated corpus, reduced from BOTH surfaces --------
@@ -482,9 +474,6 @@ object CurationService {
           Seq("doc_id"), "left_anti")
       val admitted = svc.near.currentSignatures.select(col("doc_id")).distinct()
       val finalIds = keptDecided.join(admitted, Seq("doc_id"))
-      if (sys.env.contains("SPARK_GRAFT_X100_DEBUG"))
-        println(s"X100DBG keptDecided=${keptDecided.count()} " +
-          s"admitted=${admitted.count()} final=${finalIds.count()}")
       // x71's kept-row projection on the FINAL ids: every kept doc is a
       // singleton-or-min canonical, so cluster_key = its own id; clone
       // rows resolve source/text through their original

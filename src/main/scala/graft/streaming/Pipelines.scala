@@ -37,55 +37,31 @@ object Pipelines {
     * bound are untouched, so fixture-scale layouts are unchanged. */
   val BaseFileRecords: String = 500000.toString
 
-  /** Delete every `<prefix><N>` dir whose N is not in `keep` — the
-    * maintained indexes' version GC. `keep` is the reachable set: the
-    * current version, the previous one (an in-flight batch plan may still
-    * read it), and any version a live classify stream pinned at query
-    * start. A keep-SET (not a floor) is what makes GC effective under a
-    * long-running stream: the pin stays fixed while versions advance, and
-    * a floor at the pin would retire nothing — one dead index copy per
-    * flush window. Listing-driven, so a crash-left gap doesn't turn into
-    * per-version existence probes forever. */
-  private[streaming] def retireVersionsExcept(fs: org.apache.hadoop.fs.FileSystem,
-                                              root: String, prefix: String,
-                                              keep: Set[Int],
-                                              onRetire: Int => Unit = _ => ()): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    if (fs.exists(p))
-      fs.listStatus(p).toSeq.filter(_.isDirectory)
-        .flatMap { st =>
-          val n = st.getPath.getName
-          if (n.startsWith(prefix))
-            n.drop(prefix.length).toIntOption.filterNot(keep.contains).map((st, _))
-          else None
-        }
-        .foreach { case (st, v) =>
-          // catalog entry (bucketed mode) drops before the directory goes
-          onRetire(v)
-          fs.delete(st.getPath, true)
-        }
-  }
-
-  /** Delete every `<prefix><N>` dir with N < `floor` — committed, TORN, or
-    * half-written alike (this is raw-listing-driven, not
-    * [[graft.VersionedDirs]] committed-only discovery, precisely so crash
-    * remnants below the floor cannot accrete forever). The maintained
-    * indexes' delta-tier GC: a major compaction advances the floor past
-    * the deltas it folded, and the NEXT major retires everything below the
-    * previous floor — a one-compaction-cycle grace window mirroring the
-    * keep-current-plus-previous rule for base versions, so a lazy plan
-    * built from `currentIndex`/`currentSignatures` just before a major
-    * still finds its delta files when evaluated. */
-  private[streaming] def retireVersionsBelow(fs: org.apache.hadoop.fs.FileSystem,
-                                             root: String, prefix: String,
-                                             floor: Int): Unit = {
+  /** Delete every `<prefix><N>` dir for which `drop(N)` holds — committed,
+    * TORN, or half-written alike: the maintained indexes' version GC.
+    * Raw-listing-driven, not [[graft.VersionedDirs]] committed-only
+    * discovery, so crash remnants cannot accrete forever and a crash-left
+    * gap doesn't turn into per-version existence probes.
+    *
+    * Base versions retire by a keep-SET (`!keep(_)`): the current
+    * version, the previous one (an in-flight batch plan may still read
+    * it), and any version a live classify stream pinned at query start. A
+    * floor at the pin would retire nothing under a long-running stream —
+    * one dead index copy per flush window. Delta versions retire below a
+    * floor (`_ < floor`): a major advances the floor past the deltas it
+    * folded and the NEXT major retires everything below the previous
+    * floor, a one-compaction-cycle grace window so a lazy plan built from
+    * `currentIndex`/`currentSignatures` just before a major still finds
+    * its delta files when evaluated. */
+  private[streaming] def retireVersions(fs: org.apache.hadoop.fs.FileSystem,
+                                        root: String, prefix: String)
+                                       (drop: Int => Boolean): Unit = {
     val p = new org.apache.hadoop.fs.Path(root)
     if (fs.exists(p))
       fs.listStatus(p).toSeq.filter(_.isDirectory)
         .filter { st =>
           val n = st.getPath.getName
-          n.startsWith(prefix) &&
-            n.drop(prefix.length).toIntOption.exists(_ < floor)
+          n.startsWith(prefix) && n.drop(prefix.length).toIntOption.exists(drop)
         }
         .foreach(st => fs.delete(st.getPath, true))
   }
@@ -202,55 +178,6 @@ object Pipelines {
 
   private[streaming] val log =
     org.slf4j.LoggerFactory.getLogger("graft.streaming.Pipelines")
-
-  /** Stamp the bucket count a bucketed index version was WRITTEN with into
-    * its directory (`_graft_buckets`). Restart re-registration must use
-    * this count, not the constructor's: bucket ids are encoded in the file
-    * names, and registering the layout under a different count silently
-    * misroutes co-partitioned joins. */
-  private[streaming] def writeBucketMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                           dir: String, n: Int): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_graft_buckets"), true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The stored bucket count of a bucketed layout, or a LOUD failure
-    * when the marker is missing: falling back to the constructor's count
-    * would re-create the silent-misroute hazard the marker exists to
-    * prevent (4-bucket files registered as 8 buckets route rows to
-    * hash%8 while the files hold hash%4 — missed matches, no error). A
-    * marker can only be missing after a crash between the table commit
-    * and the marker write, or external tampering; the error names the
-    * fix (re-stamp with the count the files were written with, or
-    * recompact). */
-  private[streaming] def requireBucketMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                             dir: String, configured: Int): Int =
-    readBucketMarker(fs, dir).getOrElse(throw new IllegalStateException(
-      s"bucketed index layout at $dir has no _graft_buckets marker; refusing " +
-        s"to register it with the configured count ($configured) — a mismatched " +
-        "registration silently misroutes co-partitioned joins. Re-stamp the " +
-        "marker with the count the files were written with, or recompact."))
-
-  private[streaming] def readBucketMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                          dir: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_graft_buckets")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        .trim.toIntOption
-      finally in.close()
-    }
-  }
-
-  /** True when `dir` holds at least one COMMITTED data file (a kill during
-    * a staging append can leave only `_temporary/` — no readable footer, so
-    * `spark.read.parquet` would throw; a committed zero-ROW part still has
-    * footer bytes, which is why callers additionally check `isEmpty` on the
-    * read relation before folding). */
-  private[streaming] def stagedHasData(fs: org.apache.hadoop.fs.FileSystem,
-                                       dir: String): Boolean =
-    graft.VersionedDirs.hasCommittedData(fs, dir)
 
   /** Cross-process single-writer lease over a maintained-index root. The
     * maintained indexes are single-writer BY CONTRACT (one maintainer per
@@ -955,10 +882,9 @@ object Pipelines {
     *    a flush writes the window's acceptances as a flush-sized DELTA
     *    version instead, and only every (maxDeltas+1)-th flush runs a
     *    MAJOR compaction folding base + deltas into base N+1 — the LSM
-    *    shape. The finalize join reads the base on its own bucketed
-    *    layout (no exchange) and the delta tier broadcast, so decisions
-    *    stay bit-identical to the fold-every-flush mode at a fraction of
-    *    the write amplification.
+    *    shape. The finalize join reads the base as stored and the delta
+    *    tier broadcast, so decisions stay bit-identical to the
+    *    fold-every-flush mode at a fraction of the write amplification.
     *  - **State TTL.** The first-wins keeper state uses
     *    `GroupStateTimeout.ProcessingTimeTimeout` with `ttlMs`: a key's
     *    state dies `ttlMs` after its last arrival. Live state is therefore
@@ -981,7 +907,6 @@ object Pipelines {
     * index, and replay parity with the batch x59 classification. */
   final class MaintainedDedupIndex(s: SparkSession, indexRoot: String,
                                    ttlMs: Long, flushEvery: Int,
-                                   fpBuckets: Int = 0,
                                    leaseTtlMs: Long = DefaultLeaseTtlMs,
                                    writerId: String = defaultOwnerId,
                                    maxDeltas: Int = 0,
@@ -990,10 +915,6 @@ object Pipelines {
                                    keepVersions: Int = 2,
                                    readOnly: Boolean = false) {
     import TieredStore.DeltaTier
-    private def bucketed = fpBuckets > 0
-    // catalog-safe, root-derived table family (unsigned hex — no '-')
-    private val tableSuffix = java.lang.Integer.toHexString(indexRoot.hashCode)
-    private def idxTable(v: Int) = s"graft_mdix_${tableSuffix}_v$v"
     private def indexDir(v: Int) = s"$indexRoot/index_v$v"
     private def stagingDir = s"$indexRoot/staging"
     // every relation is read with the schema its writer produces: parquet
@@ -1012,8 +933,8 @@ object Pipelines {
     // O(index) I/O per flush window, fine until the index is corpus-scale.
     // With maxDeltas > 0 a flush writes the staged acceptances as a
     // flush-window-sized DELTA (O(staged) I/O) until the tier is due a
-    // major. The per-batch finalize joins the base bucketed (no exchange)
-    // and the delta tier BROADCAST while it is under
+    // major. The per-batch finalize joins the base as stored and the
+    // delta tier BROADCAST while it is under
     // maxDeltaBroadcastBytes; past that bound the hint is DROPPED (loud
     // log + delta_fallbacks gauge) and the join falls back to shuffle.
     // Base and delta fps are disjoint in steady state (an fp present in
@@ -1025,8 +946,7 @@ object Pipelines {
     private val store = new TieredStore(s, indexRoot, "dedup", "MaintainedDedupIndex",
       basePrefixes = Seq("index_v"), deltaPrefixes = Seq("delta_v"),
       flushEvery, maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
-      readOnly, sidecarPrefixes = Seq("ids_v"),
-      unregister = v => if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${idxTable(v)}"))
+      readOnly, sidecarPrefixes = Seq("ids_v"))
     private def version = store.version
     private def deltaDir(k: Int) = s"$indexRoot/delta_v$k"
     /** The delta tier as one relation, min-folded per fp (replayed staging
@@ -1056,7 +976,7 @@ object Pipelines {
     def initIndex(idx: DataFrame): Unit = {
       store.renewWriter("initIndex")
       store.beginSeed()
-      writeIndex(idx.select(col("fp"), col("corpus_id")), 0)
+      idx.select(col("fp"), col("corpus_id")).write.mode("overwrite").parquet(indexDir(0))
       store.commit(0, 0)
       // sidecar after the commit point: a crash before it leaves a
       // committed version without one, which the takedown resolve heals
@@ -1064,27 +984,8 @@ object Pipelines {
       writeSidecar(0)
     }
 
-    /** Write an index version: plain parquet, or (bucketed mode) a
-      * path-pinned external table clustered on `fp` — the per-batch
-      * finalize join's key — so the INDEX side of that join reads
-      * pre-partitioned and only the batch-sized side shuffles (the index
-      * is corpus-scale; re-shuffling it per micro-batch is the cost this
-      * removes at 100 TB). The bucket count is stamped into the layout
-      * ([[Pipelines.writeBucketMarker]]) so a restart re-registers with
-      * the count the FILES were written with, never the constructor's. */
-    private def writeIndex(idx: DataFrame, v: Int): Unit =
-      if (bucketed) {
-        s.sql(s"DROP TABLE IF EXISTS ${idxTable(v)}")
-        fs.delete(new org.apache.hadoop.fs.Path(indexDir(v)), true)
-        idx.write.mode("overwrite")
-          .bucketBy(fpBuckets, "fp").sortBy("fp")
-          .option("path", indexDir(v))
-          .saveAsTable(idxTable(v))
-        Pipelines.writeBucketMarker(fs, indexDir(v), fpBuckets)
-      } else idx.write.mode("overwrite").parquet(indexDir(v))
-
     // ---- doc_id→fp SIDECAR: the takedown-resolve projection ----------
-    // The base is fp-bucketed (the finalize join's key), which cannot
+    // The base is keyed by fp (the finalize join's key), which cannot
     // prune a corpus_id predicate — so an id-keyed takedown resolve
     // against the base alone costs a full scan per request batch, the
     // costliest operation on the compliance path at a 10^10-row index.
@@ -1113,20 +1014,6 @@ object Pipelines {
       if (graft.VersionedDirs.hasCommittedData(fs, sidecarDir(v)))
         Some(readIdFps(sidecarDir(v)))
       else None
-
-    /** Re-register a bucketed version in THIS session's catalog when
-      * missing (restart path — see MaintainedNearDupIndex.ensureSigTable).
-      * Registers with the bucket count STORED in the layout: bucket ids
-      * ride the file names, so registering a 4-bucket layout as 8 buckets
-      * would silently misroute the join (rows land in partition hash%8
-      * while the files hold hash%4) — missed matches, no error. */
-    private def ensureIdxTable(v: Int): Unit =
-      if (!s.catalog.tableExists(idxTable(v))) {
-        val n = Pipelines.requireBucketMarker(fs, indexDir(v), fpBuckets)
-        s.sql(s"CREATE TABLE ${idxTable(v)} (fp STRING, corpus_id BIGINT) " +
-          s"USING PARQUET CLUSTERED BY (fp) SORTED BY (fp) " +
-          s"INTO $n BUCKETS LOCATION '${indexDir(v)}'")
-      }
 
     /** The current logical index, read fresh (new versions are new
       * directories, so no stale file-listing cache): the base version
@@ -1180,9 +1067,7 @@ object Pipelines {
       }
     }
 
-    private def indexAt(v: Int): DataFrame =
-      if (bucketed) { ensureIdxTable(v); s.table(idxTable(v)) }
-      else readFps(indexDir(v))
+    private def indexAt(v: Int): DataFrame = readFps(indexDir(v))
 
     /** Lifecycle gauges ([[TieredStore.stats]]) plus `pinned_versions`,
       * the live classify pins. Wire through
@@ -1244,8 +1129,8 @@ object Pipelines {
       * skips, so the read is O(request) bytes; a bulk (DataFrame-borne)
       * request semi-joins the sidecar in one narrow pass. The winner
       * fold is then restricted to candidate fps, with the base rows for
-      * those fps read fp-pruned against the fp-bucketed, fp-sorted base
-      * layout (driver-sized candidate sets push `In(fp, …)`). The delta
+      * those fps read through a pushed `In(fp, …)` filter (driver-sized
+      * candidate sets) or an fp semi-join (larger ones). The delta
       * tier and staging are flush-window sized by construction and scan
       * directly. A base version without a committed sidecar (crash
       * between the base commit and the sidecar write) falls back to the
@@ -1254,7 +1139,7 @@ object Pipelines {
       val idsOnly = ids.select(col("doc_id"))
       val tier = store.listDeltaTier()
       val staged =
-        if (Pipelines.stagedHasData(fs, stagingDir))
+        if (graft.VersionedDirs.hasCommittedData(fs, stagingDir))
           Some(readStaging().select(col("fp"), col("doc_id").as("corpus_id")))
         else None
       // the window-sized relations (delta tier + staging), tombstones
@@ -1263,7 +1148,7 @@ object Pipelines {
       val small = (deltaRelation(tier).toSeq ++ staged.toSeq)
         .reduceOption((a: DataFrame, b: DataFrame) => a unionByName b)
       // driver-sized requests resolve with PUSHED In filters (row-group
-      // skips on both clustered layouts); larger sets fall back to
+      // skips on the doc_id-clustered sidecar); larger sets fall back to
       // semi-joins — one narrow scan each, still no index fold
       val idsLocal: Option[Seq[Long]] = {
         val head = idsOnly.limit(MaxLocalResolveKeys + 1).collect()
@@ -1362,11 +1247,10 @@ object Pipelines {
     }
 
     /** The finalize join, each index tier in its cheapest shape: the BASE
-      * version joins on its own layout (bucketed mode: pre-partitioned,
-      * no exchange on the corpus-scale side), the delta tier joins
-      * BROADCAST while its on-disk size stays under
-      * `maxDeltaBroadcastBytes`. Past that bound the tier is no longer
-      * "executor-memory sized by construction" (a high-novelty phase
+      * version joins as stored, the delta tier joins BROADCAST while its
+      * on-disk size stays under `maxDeltaBroadcastBytes`. Past that bound
+      * the tier is no longer "executor-memory sized by construction" (a
+      * high-novelty phase
       * breaks the operating-point assumption) and the hint is DROPPED —
       * loud log + `delta_fallbacks` gauge, Spark falls back to a shuffle
       * join, decisions unchanged — until the early major compaction the
@@ -1481,7 +1365,7 @@ object Pipelines {
       store.renewWriter("flush")
       val staging = new org.apache.hadoop.fs.Path(stagingDir)
       val onDisk =
-        if (!Pipelines.stagedHasData(fs, stagingDir)) None
+        if (!graft.VersionedDirs.hasCommittedData(fs, stagingDir)) None
         else Some(readStaging()).filterNot(_.isEmpty) // committed zero-row parts only otherwise
       (onDisk.toSeq ++ pending).reduceOption(_ unionByName _).foreach { staged =>
         store.flushWindow { tier =>
@@ -1495,8 +1379,9 @@ object Pipelines {
           // no-base-shuffle topology ([[foldedIndexRaw]]).
           val stagedBytes = graft.VersionedDirs.committedBytes(fs, stagingDir) +
             pending.fold(BigInt(0))(Pipelines.estimatedBytes)
-          writeIndex(foldedIndexRaw(tier, Some(staged), version, stagedBytes)
-            .filter(col("corpus_id") >= 0), v)
+          foldedIndexRaw(tier, Some(staged), version, stagedBytes)
+            .filter(col("corpus_id") >= 0)
+            .write.mode("overwrite").parquet(indexDir(v))
           store.commit(v, tier.next)
           // sidecar AFTER the commit point: the takedown resolve
           // tolerates a missing sidecar (base-scan fallback), and writing
@@ -1518,26 +1403,12 @@ object Pipelines {
       * re-accept of a deleted fp staged mid-build counts as the first
       * post-epoch copy and becomes the durable keeper at its own flush
       * (under the blocking fold it would have waited one more major).
-      * Same admit-rather-than-block direction, one window earlier.
-      * Bucketed mode: the shadow is written as an external bucketed
-      * layout (bucket marker travels with the rename) and readers
-      * re-register it via the stored marker. */
+      * Same admit-rather-than-block direction, one window earlier. */
     def compactBase(onPrepared: () => Unit = () => ()): Boolean =
       store.shadowMajor(onPrepared) { (_, tier) =>
         val shadowDir = store.shadowDir("index_v")
-        val next = currentIndexRaw(tier, version).filter(col("corpus_id") >= 0)
-        if (bucketed) {
-          val shadowTable = s"graft_mdix_${tableSuffix}_shadow"
-          s.sql(s"DROP TABLE IF EXISTS $shadowTable")
-          next.write.mode("overwrite")
-            .bucketBy(fpBuckets, "fp").sortBy("fp")
-            .option("path", shadowDir)
-            .saveAsTable(shadowTable)
-          Pipelines.writeBucketMarker(fs, shadowDir, fpBuckets)
-          // external table: dropping the metadata keeps the files for the
-          // rename; the final version re-registers from the stored marker
-          s.sql(s"DROP TABLE IF EXISTS $shadowTable")
-        } else next.write.mode("overwrite").parquet(shadowDir)
+        currentIndexRaw(tier, version).filter(col("corpus_id") >= 0)
+          .write.mode("overwrite").parquet(shadowDir)
         // the sidecar is built off-lock too, so the new version's resolve
         // path is pruned from its first request
         writeSidecar(shadowDir, store.shadowDir("ids_v"))
@@ -1774,15 +1645,7 @@ object Pipelines {
     *    corpus minhash band signatures `(band, min_hash, doc_id)`,
     *    `tg_v<N>` the trigram shingle sets `(doc_id, tg)` the Jaccard
     *    verifier needs — the "persisted signature table" the batch x62's
-    *    Scaladoc names as the production index. With `sigBuckets > 0` the
-    *    signature versions are stored as BUCKETED tables on
-    *    (band, min_hash) — the 100 TB shape: the corpus side of each
-    *    batch's LSH screen (bucket-cap window + candidate join) reads
-    *    pre-partitioned and needs NO exchange; only the batch-sized side
-    *    shuffles (plan-pinned in StreamingSpec). Bucketed versions are
-    *    registered as path-pinned external tables; a fresh session
-    *    re-registers them from the stored layout (bucket ids ride the
-    *    file names), so restart keeps the co-partitioning.
+    *    Scaladoc names as the production index.
     *  - **Per-batch screen** ([[screenBatch]], run in foreachBatch so the
     *    index re-reads fresh each batch): batch docs → signatures +
     *    shingles (map-only) → LSH join against the capped corpus buckets
@@ -1817,7 +1680,6 @@ object Pipelines {
   final class MaintainedNearDupIndex(s: SparkSession, indexRoot: String,
                                      flushEvery: Int,
                                      minJaccard: Double = 0.5,
-                                     sigBuckets: Int = 0,
                                      leaseTtlMs: Long = DefaultLeaseTtlMs,
                                      writerId: String = defaultOwnerId,
                                      maxDeltas: Int = 0,
@@ -1826,10 +1688,6 @@ object Pipelines {
                                      keepVersions: Int = 2,
                                      readOnly: Boolean = false) {
     import TieredStore.DeltaTier
-    private def bucketed = sigBuckets > 0
-    // catalog-safe, root-derived table family (unsigned hex — no '-')
-    private val tableSuffix = java.lang.Integer.toHexString(indexRoot.hashCode)
-    private def sigTable(v: Int) = s"graft_mndix_${tableSuffix}_sig_v$v"
     private def sigDir(v: Int) = s"$indexRoot/sig_v$v"
     private def tgDir(v: Int) = s"$indexRoot/tg_v$v"
     private def sigStaging = s"$indexRoot/sig_staging"
@@ -1865,8 +1723,7 @@ object Pipelines {
     private val store = new TieredStore(s, indexRoot, "near-dup", "MaintainedNearDupIndex",
       basePrefixes = Seq("sig_v", "tg_v"), deltaPrefixes = Seq("dsig_v", "dtg_v"),
       flushEvery, maxDeltas, maxDeltaBroadcastBytes, keepVersions, pointer, leaseTtlMs, writerId,
-      readOnly,
-      unregister = v => if (bucketed) s.sql(s"DROP TABLE IF EXISTS ${sigTable(v)}"))
+      readOnly)
     private def version = store.version
     private def dsigDir(k: Int) = s"$indexRoot/dsig_v$k"
     private def dtgDir(k: Int) = s"$indexRoot/dtg_v$k"
@@ -1892,8 +1749,6 @@ object Pipelines {
       * rows and DELETED docs excluded (a doc accepted in one delta and
       * deleted in a later one must stop being a candidate). None when
       * the tier is empty. */
-    private def deltaSignatures(tier: DeltaTier): Option[DataFrame] =
-      deltaSignatures(tier, broadcast)
     private def deltaSignatures(tier: DeltaTier,
                                 hint: DataFrame => DataFrame): Option[DataFrame] =
       if (tier.isEmpty) None
@@ -1902,8 +1757,6 @@ object Pipelines {
           .reduce(_ unionByName _)
           .filter(col("band") >= 0)
           .dropDuplicates("band", "min_hash", "doc_id"), tier, hint))
-    private def deltaShingles(tier: DeltaTier): Option[DataFrame] =
-      deltaShingles(tier, broadcast)
     private def deltaShingles(tier: DeltaTier,
                               hint: DataFrame => DataFrame): Option[DataFrame] =
       if (tier.isEmpty) None
@@ -1963,52 +1816,19 @@ object Pipelines {
     def initIndex(corpus: DataFrame): Unit = {
       store.renewWriter("initIndex")
       store.beginSeed()
-      writeSignatures(graft.functions.Dedup.minhashSignatures(corpus)
-        .select(col("band"), col("min_hash"), col("doc_id")), 0)
+      graft.functions.Dedup.minhashSignatures(corpus)
+        .select(col("band"), col("min_hash"), col("doc_id"))
+        .write.mode("overwrite").parquet(sigDir(0))
       graft.functions.Dedup.shingleRelation(corpus)
         .write.mode("overwrite").parquet(tgDir(0))
       store.commit(0, 0)
     }
 
-    /** Write a signature version: plain parquet, or (bucketed mode) a
-      * path-pinned external table clustered on the LSH join key so every
-      * later screen reads it pre-partitioned. */
-    private def writeSignatures(sig: DataFrame, v: Int): Unit =
-      if (bucketed) {
-        s.sql(s"DROP TABLE IF EXISTS ${sigTable(v)}")
-        fs.delete(new org.apache.hadoop.fs.Path(sigDir(v)), true)
-        sig.write.mode("overwrite")
-          .bucketBy(sigBuckets, "band", "min_hash")
-          .sortBy("band", "min_hash")
-          .option("path", sigDir(v))
-          .saveAsTable(sigTable(v))
-        Pipelines.writeBucketMarker(fs, sigDir(v), sigBuckets)
-      } else sig.write.mode("overwrite").parquet(sigDir(v))
-
-    /** Re-register a bucketed version in THIS session's catalog when
-      * missing (restart path: the data + bucket-id file naming persist;
-      * the in-memory catalog entry does not). Registers with the bucket
-      * count STORED in the layout, never the constructor's — see
-      * MaintainedDedupIndex.ensureIdxTable for the silent-misroute
-      * hazard. */
-    private def ensureSigTable(v: Int): Unit =
-      if (!s.catalog.tableExists(sigTable(v))) {
-        val n = Pipelines.requireBucketMarker(fs, sigDir(v), sigBuckets)
-        s.sql(s"CREATE TABLE ${sigTable(v)} (band INT, min_hash STRING, doc_id BIGINT) " +
-          s"USING PARQUET CLUSTERED BY (band, min_hash) SORTED BY (band, min_hash) " +
-          s"INTO $n BUCKETS LOCATION '${sigDir(v)}'")
-      }
-
-    /** The BASE version's relations on their own storage layout (bucketed
-      * mode: pre-partitioned on the LSH key). The screen reads these
-      * directly so the corpus-scale side keeps its no-exchange property;
-      * external readers want [[currentSignatures]]/[[currentShingles]],
-      * which include the delta tier. */
-    private[graft] def baseSignatures: DataFrame = baseSignatures(version)
-    private def baseSignatures(v: Int): DataFrame =
-      if (bucketed) { ensureSigTable(v); s.table(sigTable(v)) }
-      else readSigs(sigDir(v))
-    private def baseShingles: DataFrame = baseShingles(version)
+    /** The BASE version's relations as stored. The screen reads these
+      * directly; external readers want
+      * [[currentSignatures]]/[[currentShingles]], which include the
+      * delta tier. */
+    private def baseSignatures(v: Int): DataFrame = readSigs(sigDir(v))
     private def baseShingles(v: Int): DataFrame = readShingles(tgDir(v))
 
     /** The current LOGICAL index: base plus the delta tier, deleted docs
@@ -2023,35 +1843,29 @@ object Pipelines {
     // invariant), so "dedup the union" equals "base minus delta-resident
     // docs, plus the delta rows" — and the delta doc set is
     // broadcast-sized by construction. The delta side stays the newer
-    // copy (LSM order), results unchanged.
+    // copy (LSM order), results unchanged. Every broadcast here, the
+    // delta side's tombstone anti-join included, rides the tier's guard:
+    // the flush and shadow majors fold through these methods, and an
+    // oversized tier is exactly what forces an early major.
     private def currentSignatures(tier: DeltaTier, v: Int): DataFrame =
-      deltaSignatures(tier) match {
-        case None => baseSignatures(v)
-        case Some(d) =>
-          val hint: DataFrame => DataFrame =
-            if (tier.oversized) identity else broadcast
-          val base = notDeleted(baseSignatures(v), tier, hint)
-          base.join(hint(d.select(col("doc_id")).distinct()),
-              Seq("doc_id"), "left_anti")
-            .select(base.columns.map(col).toIndexedSeq: _*)
-            .unionByName(d)
-      }
+      overlay(baseSignatures(v), tier)(deltaSignatures)
     def currentShingles: DataFrame = {
       val sn = store.captureSnap()
       currentShingles(store.listDeltaTier(sn.floor), sn.v)
     }
     private def currentShingles(tier: DeltaTier, v: Int): DataFrame =
-      deltaShingles(tier) match {
-        case None => baseShingles(v)
-        case Some(d) =>
-          val hint: DataFrame => DataFrame =
-            if (tier.oversized) identity else broadcast
-          val base = notDeleted(baseShingles(v), tier, hint)
-          base.join(hint(d.select(col("doc_id")).distinct()),
-              Seq("doc_id"), "left_anti")
-            .select(base.columns.map(col).toIndexedSeq: _*)
-            .unionByName(d)
+      overlay(baseShingles(v), tier)(deltaShingles)
+    private def overlay(stored: DataFrame, tier: DeltaTier)
+                       (delta: (DeltaTier, DataFrame => DataFrame) => Option[DataFrame])
+        : DataFrame = {
+      val hint: DataFrame => DataFrame = if (tier.oversized) identity else broadcast
+      delta(tier, hint).fold(stored) { d =>
+        val base = notDeleted(stored, tier, hint)
+        base.join(hint(d.select(col("doc_id")).distinct()), Seq("doc_id"), "left_anti")
+          .select(base.columns.map(col).toIndexedSeq: _*)
+          .unionByName(d)
       }
+    }
 
     /** The verify join's corpus shingle side: base ∪ delta WITHOUT the
       * doc_id dedup [[currentShingles]] applies — that dropDuplicates is
@@ -2074,9 +1888,8 @@ object Pipelines {
 
     /** LSH candidate generation for one batch's signatures against the
       * stored index, each tier in its cheapest shape — exposed for plan
-      * auditing. Base side: cap by the base-only bucket window (rides the
-      * stored bucket layout — no exchange on the corpus-scale side in
-      * bucketed mode). Delta tier: the cap verdict must count base AND
+      * auditing. Base side: cap by the base-only bucket window. Delta
+      * tier: the cap verdict must count base AND
       * delta members together to stay bit-identical to the folded index.
       * Only the delta-touched buckets (a broadcast-sized key set) can
       * change verdict, so: count base members ON those keys
@@ -2263,7 +2076,8 @@ object Pipelines {
       val sp = new org.apache.hadoop.fs.Path(sigStaging)
       val tp = new org.apache.hadoop.fs.Path(tgStaging)
       val complete =
-        if (Pipelines.stagedHasData(fs, sigStaging) && Pipelines.stagedHasData(fs, tgStaging))
+        if (graft.VersionedDirs.hasCommittedData(fs, sigStaging) &&
+            graft.VersionedDirs.hasCommittedData(fs, tgStaging))
           Some(readSigs(sigStaging).select("doc_id").distinct()
             .join(readShingles(tgStaging).select("doc_id").distinct(), "doc_id")
             .persist())
@@ -2295,11 +2109,10 @@ object Pipelines {
               val dropWindow = (df: DataFrame) =>
                 df.join(broadcast(windowDocs), Seq("doc_id"), "left_anti")
                   .select(df.columns.map(col).toIndexedSeq: _*) // keep input order
-              writeSignatures(
-                dropWindow(currentSignatures(tier, version))
-                  .unionByName(sigStaged.filter(col("band") >= 0)
-                    .dropDuplicates("band", "min_hash", "doc_id")),
-                v)
+              dropWindow(currentSignatures(tier, version))
+                .unionByName(sigStaged.filter(col("band") >= 0)
+                  .dropDuplicates("band", "min_hash", "doc_id"))
+                .write.mode("overwrite").parquet(sigDir(v))
               dropWindow(currentShingles(tier, version))
                 .unionByName(tgStaged.filter(col("tg").isNotNull).dropDuplicates("doc_id"))
                 .write.mode("overwrite").parquet(tgDir(v))
@@ -2321,22 +2134,10 @@ object Pipelines {
       * staging, written to the shadow pair off the root lock, then
       * swapped in. currentSignatures/currentShingles already resolve the
       * tier's tombstones (deleted docs out of both relations, tombstone
-      * rows excluded) and distinct-fold crash replays; the bucket marker
-      * (bucketed mode) rides the shadow sig dir through the rename. */
+      * rows excluded) and distinct-fold crash replays. */
     def compactBase(onPrepared: () => Unit = () => ()): Boolean =
       store.shadowMajor(onPrepared) { (v0, tier) =>
-        val shadowSig = store.shadowDir("sig_v")
-        if (bucketed) {
-          val shadowTable = s"graft_mndix_${tableSuffix}_sig_shadow"
-          s.sql(s"DROP TABLE IF EXISTS $shadowTable")
-          currentSignatures(tier, v0).write.mode("overwrite")
-            .bucketBy(sigBuckets, "band", "min_hash")
-            .sortBy("band", "min_hash")
-            .option("path", shadowSig)
-            .saveAsTable(shadowTable)
-          Pipelines.writeBucketMarker(fs, shadowSig, sigBuckets)
-          s.sql(s"DROP TABLE IF EXISTS $shadowTable") // files stay (external)
-        } else currentSignatures(tier, v0).write.mode("overwrite").parquet(shadowSig)
+        currentSignatures(tier, v0).write.mode("overwrite").parquet(store.shadowDir("sig_v"))
         currentShingles(tier, v0).write.mode("overwrite").parquet(store.shadowDir("tg_v"))
       }
 
@@ -2364,22 +2165,22 @@ object Pipelines {
     * a replica's pinned file listing still reads (failing that stream
     * mid-query — a loud re-plan, never wrong results). */
   def openDedupReader(s: SparkSession, indexRoot: String,
-                      ttlMs: Long = 60000L, fpBuckets: Int = 0,
+                      ttlMs: Long = 60000L,
                       maxDeltaBroadcastBytes: Long =
                         DefaultMaxDeltaBroadcastBytes): ReadOnlyDedupIndex =
     new ReadOnlyDedupIndex(new MaintainedDedupIndex(s, indexRoot,
-      ttlMs = ttlMs, flushEvery = 1, fpBuckets = fpBuckets,
+      ttlMs = ttlMs, flushEvery = 1,
       maxDeltaBroadcastBytes = maxDeltaBroadcastBytes, readOnly = true))
 
   /** Open a lease-free READ-ONLY handle over an existing near-dup index
     * root — [[openDedupReader]]'s near-dup twin, serving the pure
     * [[MaintainedNearDupIndex.screen]]. */
   def openNearDupReader(s: SparkSession, indexRoot: String,
-                        minJaccard: Double = 0.5, sigBuckets: Int = 0,
+                        minJaccard: Double = 0.5,
                         maxDeltaBroadcastBytes: Long =
                           DefaultMaxDeltaBroadcastBytes): ReadOnlyNearDupIndex =
     new ReadOnlyNearDupIndex(new MaintainedNearDupIndex(s, indexRoot,
-      flushEvery = 1, minJaccard = minJaccard, sigBuckets = sigBuckets,
+      flushEvery = 1, minJaccard = minJaccard,
       maxDeltaBroadcastBytes = maxDeltaBroadcastBytes, readOnly = true))
 
   /** x98 — the exact-dedup pillar served from a lease-free READ-ONLY

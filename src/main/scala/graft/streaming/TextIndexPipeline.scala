@@ -358,9 +358,9 @@ final class MaintainedTextIndex(s: SparkSession, indexRoot: String,
     val stagingDl = new org.apache.hadoop.fs.Path(dlStaging)
     val stagingPost = new org.apache.hadoop.fs.Path(postStaging)
     val onDisk =
-      if (!Pipelines.stagedHasData(fs, dlStaging)) None
+      if (!graft.VersionedDirs.hasCommittedData(fs, dlStaging)) None
       else Some((
-        if (Pipelines.stagedHasData(fs, postStaging)) readStagedPostings()
+        if (graft.VersionedDirs.hasCommittedData(fs, postStaging)) readStagedPostings()
         else noPostings, // delete-only window: no postings staged
         readStagedLengths()))
     (onDisk.toSeq ++ pending)

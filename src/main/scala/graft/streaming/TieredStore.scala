@@ -68,8 +68,7 @@ final class TieredStore(s: SparkSession, root: String, pillar: String, owner: St
                         keepVersions: Int, pointer: Option[VersionPointer],
                         leaseTtlMs: Long, writerId: String, readOnly: Boolean,
                         sidecarPrefixes: Seq[String] = Nil,
-                        deltaCommitted: Int => Boolean = _ => true,
-                        unregister: Int => Unit = _ => ()) {
+                        deltaCommitted: Int => Boolean = _ => true) {
   import TieredStore._
 
   require(flushEvery >= 1, "flushEvery must be >= 1")
@@ -226,11 +225,10 @@ final class TieredStore(s: SparkSession, root: String, pillar: String, owner: St
       currentFloor = floor
     }
     val sweep = deltaSweepFloor
-    deltaPrefixes.foreach(p => Pipelines.retireVersionsBelow(fs, root, p, sweep))
+    deltaPrefixes.foreach(p => Pipelines.retireVersions(fs, root, p)(_ < sweep))
     val keep = baseKeepSet
-    Pipelines.retireVersionsExcept(fs, root, primary, keep, onRetire = unregister)
-    (basePrefixes.tail ++ sidecarPrefixes).foreach(p =>
-      Pipelines.retireVersionsExcept(fs, root, p, keep))
+    (basePrefixes ++ sidecarPrefixes).foreach(p =>
+      Pipelines.retireVersions(fs, root, p)(!keep(_)))
   }
 
   /** One mutation's staging step, shared by every pillar's writes.
@@ -313,7 +311,6 @@ final class TieredStore(s: SparkSession, root: String, pillar: String, owner: St
     * in. Returns the new version. */
   def swapShadows(floor: Int, bind: => Unit = ()): Int = {
     val v = claimNext()
-    unregister(v)
     def moveIn(p: String): Unit = {
       val target = new Path(baseDir(p, v))
       fs.delete(target, true)

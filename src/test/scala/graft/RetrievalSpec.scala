@@ -40,10 +40,7 @@ class RetrievalSpec extends SparkSpec {
 
     def append(ids: Seq[Long]): Unit =
       docs(ids).coalesce(1).write.mode("append").parquet(s"$dataRoot/$queue")
-    def indexed(): Set[Long] =
-      try sparkS.read.parquet(indexedDir).select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      catch { case _: Exception => Set.empty }
+    def indexed(): Set[Long] = committedIds(indexedDir)
     def awaitIndexed(ids: Long*): Unit = {
       val deadline = System.currentTimeMillis() + 180000
       while (!ids.forall(indexed().contains) &&

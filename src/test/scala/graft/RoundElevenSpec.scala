@@ -142,6 +142,33 @@ class RoundElevenSpec extends SparkSpec {
     assert(cs == gs, "logical signature relations diverged")
   }
 
+  test("delta-tier broadcast guard (near-dup): the logical relations' tombstone anti-join drops its hint on an oversized tier") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val g = new Pipelines.MaintainedNearDupIndex(sparkS, tmp("mndix_guard_tomb"),
+      flushEvery = 1, maxDeltas = 4, maxDeltaBroadcastBytes = 1L)
+    g.initIndex(Seq((1L, "aa bb cc dd ee ff gg hh"),
+      (2L, "zz yy xx ww vv uu tt ss")).toDF("doc_id", "text"))
+    // the delete closes its window: its tombstone pair folds into delta 0,
+    // which the 1-byte bound makes oversized
+    g.deleteDocs(Seq(2L).toDF("doc_id"), 0)
+    assert(g.stats("version") == 0L && g.stats("delta_versions") == 1L)
+    // the flush and shadow majors fold through these relations, so the
+    // deleted-id set must not be force-broadcast either
+    val prev = sparkS.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    sparkS.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try
+      for ((name, df) <- Seq("signatures" -> g.currentSignatures,
+                             "shingles" -> g.currentShingles)) {
+        val p = df.queryExecution.executedPlan.toString
+        assert(!p.contains("BroadcastExchange"),
+          s"oversized tier's deleted-id set must not be broadcast ($name):\n$p")
+      }
+    finally sparkS.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert(g.currentSignatures.select("doc_id").distinct().as[Long].collect().toSet == Set(1L))
+    assert(g.stats("delta_fallbacks") == 0L, s"no screen ran: ${g.stats}")
+  }
+
   test("delta GC: folded deltas linger one compaction cycle, then are swept with torn remnants") {
     val sparkS = spark
     import sparkS.implicits._

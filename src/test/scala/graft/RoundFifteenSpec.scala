@@ -167,10 +167,7 @@ class RoundFifteenSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def append(ids: Seq[Long]): Unit =
       docs(ids).coalesce(1).write.mode("append").parquet(s"$dataRoot/$queue")
-    def indexed(): Set[Long] =
-      try sparkS.read.parquet(s"$outRoot/$queue/indexed")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      catch { case _: Exception => Set.empty }
+    def indexed(): Set[Long] = committedIds(s"$outRoot/$queue/indexed")
     def awaitIndexed(ids: Long*): Unit = {
       val deadline = System.currentTimeMillis() + 180000
       while (!ids.forall(indexed().contains) &&
@@ -272,10 +269,7 @@ class RoundFifteenSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def append(ids: Seq[Long]): Unit =
       docs(ids).coalesce(1).write.mode("append").parquet(s"$dataRoot/$queue")
-    def decided(): Set[Long] =
-      try sparkS.read.parquet(s"$outRoot/$queue/decisions")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      catch { case _: Exception => Set.empty }
+    def decided(): Set[Long] = committedIds(s"$outRoot/$queue/decisions")
     def awaitDecided(ids: Long*): Unit = {
       val deadline = System.currentTimeMillis() + 180000
       while (!ids.forall(decided().contains) &&
@@ -413,10 +407,7 @@ class RoundFifteenSpec extends SparkSpec {
       (i, s"alpha doc$i beta")).toDF("doc_id", "text")
     def append(ids: Seq[Long]): Unit =
       docs(ids).coalesce(1).write.mode("append").parquet(s"$dataRoot/$queue")
-    def indexed(): Set[Long] =
-      try sparkS.read.parquet(s"$outRoot/$queue/indexed")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      catch { case _: Exception => Set.empty }
+    def indexed(): Set[Long] = committedIds(s"$outRoot/$queue/indexed")
     // flushEvery=1 → every batch adds a delta; only the BACKGROUND sweep
     // can fold them (the in-loop sweep is disabled when the executor is on)
     val svc = new graft.streaming.RetrievalService(sparkS, s"$root/text", s"$root/ann",

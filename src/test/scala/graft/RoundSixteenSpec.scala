@@ -207,10 +207,7 @@ class RoundSixteenSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def append(ids: Seq[Long]): Unit =
       docs(ids).coalesce(1).write.mode("append").parquet(s"$dataRoot/$queue")
-    def indexed(): Set[Long] =
-      try sparkS.read.parquet(s"$outRoot/$queue/indexed")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      catch { case _: Exception => Set.empty }
+    def indexed(): Set[Long] = committedIds(s"$outRoot/$queue/indexed")
     def awaitIndexed(ids: Long*): Unit = {
       val deadline = System.currentTimeMillis() + 180000
       while (!ids.forall(indexed().contains) &&
@@ -298,10 +295,7 @@ class RoundSixteenSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def append(ids: Seq[Long]): Unit =
       docs(ids).coalesce(1).write.mode("append").parquet(s"$dataRoot/$queue")
-    def indexed(): Set[Long] =
-      try sparkS.read.parquet(s"$outRoot/$queue/indexed")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      catch { case _: Exception => Set.empty }
+    def indexed(): Set[Long] = committedIds(s"$outRoot/$queue/indexed")
     def awaitIndexed(ids: Long*): Unit = {
       val deadline = System.currentTimeMillis() + 180000
       while (!ids.forall(indexed().contains) &&

@@ -202,44 +202,6 @@ class RoundTenSpec extends SparkSpec {
     assert(st("last_flush_ms") >= 0L)
   }
 
-  test("bucketed fingerprint index: identical finalize decisions; index side joins without exchange") {
-    import graft.streaming.Pipelines
-    import org.apache.spark.sql.functions._
-    val sparkS = spark
-    import sparkS.implicits._
-    val rootP = java.nio.file.Files.createTempDirectory("mdix_pb").toString
-    val rootB = java.nio.file.Files.createTempDirectory("mdix_bb").toString
-    val idx = Seq(("fpA", 100L), ("fpB", 101L)).toDF("fp", "corpus_id")
-    val plain = new Pipelines.MaintainedDedupIndex(sparkS, rootP, ttlMs = 1000, flushEvery = 100)
-    plain.initIndex(idx)
-    val buck = new Pipelines.MaintainedDedupIndex(sparkS, rootB, ttlMs = 1000,
-      flushEvery = 100, fpBuckets = 4)
-    buck.initIndex(idx)
-    val decisions = Seq(
-      Pipelines.DedupDecision(1L, "fpA", "new", None), // index overrides to dup_of_corpus
-      Pipelines.DedupDecision(2L, "fpX", "new", None)).toDS()
-    var a: Seq[org.apache.spark.sql.Row] = null
-    var b: Seq[org.apache.spark.sql.Row] = null
-    plain.finalizeBatch(decisions, 0)(df => a = df.orderBy("doc_id").collect().toSeq)
-    buck.finalizeBatch(decisions, 0)(df => b = df.orderBy("doc_id").collect().toSeq)
-    assert(a == b, "bucketed storage must not change finalize decisions")
-    assert(a.exists(r => r.getLong(0) == 1L && r.getString(2) == "dup_of_corpus"))
-    // plan pin under a forced shuffle join (broadcast off): the bucketed
-    // index side reads pre-partitioned on fp — only the batch side
-    // shuffles. At 100 TB the index is corpus-scale; this is the exchange
-    // the bucketing removes from every micro-batch.
-    val prev = sparkS.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    sparkS.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val p = decisions.toDF()
-        .join(buck.currentIndex.withColumnRenamed("corpus_id", "idx_id"), Seq("fp"), "left")
-        .queryExecution.executedPlan.toString
-      assert(p.contains("Bucketed: true"), p)
-      assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
-        s"only the batch side may shuffle against the bucketed index:\n$p")
-    } finally sparkS.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("delta-tier index: minor flushes write deltas, major folds them; decisions match fold-every-flush") {
     import graft.streaming.Pipelines
     import org.apache.spark.sql.functions._
@@ -295,32 +257,6 @@ class RoundTenSpec extends SparkSpec {
       flushEvery = 1, maxDeltas = 2)
     assert(del2.stats("version") == 1L && del2.stats("delta_versions") == 1L)
     assert(del2.currentIndex.collect().map(r => r.getString(0) -> r.getLong(1)).toSet == ci)
-
-    // plan pin, bucketed base + delta tier, broadcast forced off: the base
-    // side reads its bucket layout (no exchange beyond the batch side's),
-    // the delta side is an explicit broadcast — at 100 TB neither flushes
-    // nor finalize ever shuffle or rewrite the corpus-scale side between
-    // major compactions
-    val rootB = java.nio.file.Files.createTempDirectory("mdix_deltab").toString
-    val buck = new Pipelines.MaintainedDedupIndex(sparkS, rootB, ttlMs = 1000,
-      flushEvery = 1, fpBuckets = 4, maxDeltas = 2)
-    buck.initIndex(idx)
-    buck.finalizeBatch(Seq(Pipelines.DedupDecision(1L, "fpB", "new", None)).toDS(), 0)(_ => ())
-    val prev = sparkS.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    sparkS.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val p = buck.finalizeJoined(
-        Seq(Pipelines.DedupDecision(9L, "fpB", "new", None)).toDS().toDF())
-        .queryExecution.executedPlan.toString
-      assert(p.contains("Bucketed: true"), p)
-      assert(p.contains("BroadcastHashJoin"), s"delta tier must join broadcast:\n$p")
-      // the only exchange outside the broadcast subtree is the batch
-      // side's (the delta min-fold shuffles INSIDE its broadcast build —
-      // a flush-window-sized relation, not the corpus)
-      val outsideBroadcast = p.split("BroadcastExchange")(0)
-      assert("Exchange hashpartitioning".r.findAllIn(outsideBroadcast).size == 1,
-        s"only the batch side may shuffle outside the delta broadcast:\n$p")
-    } finally sparkS.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("version GC under a live classify pin: keep the pin, retire unpinned intermediates") {
@@ -521,27 +457,6 @@ class RoundTenSpec extends SparkSpec {
     assert(v == 1, "save must heal the torn target and write there")
     assert(graft.functions.Sampling.loadDsirModel(sparkS, mroot)
       .head().getLong(1) == 9L)
-  }
-
-  test("missing bucket marker fails loudly instead of silently misrouting the join") {
-    import graft.streaming.Pipelines
-    val sparkS = spark
-    import sparkS.implicits._
-    val root = java.nio.file.Files.createTempDirectory("mdix_marker").toString
-    val b = new Pipelines.MaintainedDedupIndex(sparkS, root, ttlMs = 1000,
-      flushEvery = 1, fpBuckets = 4)
-    b.initIndex(Seq(("fpA", 100L)).toDF("fp", "corpus_id"))
-    // simulate the crash window between table commit and marker write,
-    // plus a redeploy that changed the configured bucket count
-    assert(new java.io.File(root, "index_v0/_graft_buckets").delete())
-    sparkS.catalog.listTables().collect().map(_.name)
-      .filter(_.startsWith("graft_mdix_")).foreach(t =>
-        sparkS.sql(s"DROP TABLE IF EXISTS $t"))
-    val b2 = new Pipelines.MaintainedDedupIndex(sparkS, root, ttlMs = 1000,
-      flushEvery = 1, fpBuckets = 8)
-    val e = intercept[IllegalStateException] { b2.currentIndex.count() }
-    assert(e.getMessage.contains("_graft_buckets"),
-      s"must refuse to guess the bucket count: ${e.getMessage}")
   }
 
   test("replay after an in-batch flush is idempotent: keepers never match themselves") {

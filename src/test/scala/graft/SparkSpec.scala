@@ -59,6 +59,18 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The `doc_id`s a service has written to output dir `dir`, empty until
+    * its first batch commits data there (the `Soak.committedIds` rule):
+    * a read of the not-yet-written dir would make Spark log a
+    * FileStreamSink WARN with a full stack trace on every poll. */
+  def committedIds(dir: String): Set[Long] = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!VersionedDirs.hasCommittedData(fs, dir)) Set.empty
+    else try spark.read.parquet(dir).select("doc_id").collect().map(_.getLong(0)).toSet
+    catch { case _: Exception => Set.empty }
+  }
+
   /** Recursive directory copy — the crash-simulation snapshot primitive
     * (snapshot staging/version dirs, crash, restore) shared by the
     * maintained-index specs. */

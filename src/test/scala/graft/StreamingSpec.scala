@@ -578,115 +578,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("bucketed signature index: identical decisions; corpus side of the screen needs no exchange") {
-    val sparkS = spark
-    import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(spark, sf0001).select("doc_id", "source", "text")
-    val corpus = docs.filter(!(col("source") <=> "src19")).select("doc_id", "text")
-    val batch = docs.filter(col("source") === "src19").select("doc_id", "text")
-    val rootP = Files.createTempDirectory("mndix_plain").toString
-    val rootB = Files.createTempDirectory("mndix_buck").toString
-    val plain = new Pipelines.MaintainedNearDupIndex(sparkS, rootP, flushEvery = 100)
-    plain.initIndex(corpus)
-    val buck = new Pipelines.MaintainedNearDupIndex(sparkS, rootB, flushEvery = 100,
-      sigBuckets = 4)
-    buck.initIndex(corpus)
-    var a: Seq[org.apache.spark.sql.Row] = null
-    var b: Seq[org.apache.spark.sql.Row] = null
-    plain.screenBatch(batch, 0)(df => a = df.collect().toSeq)
-    buck.screenBatch(batch, 0)(df => b = df.collect().toSeq)
-    assert(a == b, "bucketed storage must not change decisions")
-    // plan pin: the bucket-cap window runs on the bucketed scan's own
-    // partitioning — the corpus side of the screen never shuffles
-    val w = Window.partitionBy("band", "min_hash")
-    def cappedPlan(sig: org.apache.spark.sql.DataFrame) = sig
-      .withColumn("bn", count(lit(1)).over(w))
-      .filter(col("bn") <= graft.functions.Dedup.MaxBucket).drop("bn")
-      .queryExecution.executedPlan.toString
-    val pc = cappedPlan(buck.currentSignatures)
-    assert(pc.contains("Bucketed: true"), pc)
-    assert(!pc.contains("Exchange hashpartitioning"),
-      s"bucketed corpus side must not shuffle for the cap window:\n$pc")
-    // control: the same window over the plain parquet version shuffles
-    assert(cappedPlan(plain.currentSignatures).contains("Exchange hashpartitioning"))
-    // restart path: drop the catalog entries, build a fresh instance over
-    // the same root — it must re-register the external bucketed table and
-    // keep the no-shuffle plan (data + bucket-id file naming persist; the
-    // in-memory catalog does not)
-    sparkS.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_mndix_"))
-      .foreach(t => sparkS.sql(s"DROP TABLE IF EXISTS $t"))
-    val sigRows = buck.currentSignatures.collect().toSet
-    val buck2 = new Pipelines.MaintainedNearDupIndex(sparkS, rootB, flushEvery = 100,
-      sigBuckets = 4)
-    val pc2 = cappedPlan(buck2.currentSignatures)
-    assert(pc2.contains("Bucketed: true") && !pc2.contains("Exchange hashpartitioning"),
-      s"restart must re-register the bucketed table:\n$pc2")
-    assert(buck2.currentSignatures.collect().toSet == sigRows,
-      "re-registered table must serve the same rows")
-    // restart under a CHANGED constructor bucket count: registration must
-    // use the count stamped in the stored layout (bucket ids ride the file
-    // names — registering 4-bucket files as 8 buckets silently misroutes
-    // co-partitioned joins)
-    sparkS.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_mndix_"))
-      .foreach(t => sparkS.sql(s"DROP TABLE IF EXISTS $t"))
-    val buck3 = new Pipelines.MaintainedNearDupIndex(sparkS, rootB, flushEvery = 100,
-      sigBuckets = 8)
-    assert(buck3.currentSignatures.collect().toSet == sigRows)
-    // ---- delta + bucketed: decisions unchanged, corpus side still
-    // exchange-free. Hand a delta pair to BOTH roots (discovery is
-    // listing-based) and re-screen with a clone of the delta doc in the
-    // batch: plain and bucketed delta modes must agree row-for-row, and
-    // the clone must match the delta-resident copy.
-    val deltaDoc = {
-      import sparkS.implicits._
-      Seq((7777L, "d1 d2 d3 d4 d5")).toDF("doc_id", "text")
-    }
-    val dsig = graft.functions.Dedup.minhashSignatures(deltaDoc)
-      .select(col("band"), col("min_hash"), col("doc_id"))
-    for (r <- Seq(rootP, rootB)) {
-      dsig.write.parquet(s"$r/dsig_v0")
-      graft.functions.Dedup.shingleRelation(deltaDoc).write.parquet(s"$r/dtg_v0")
-    }
-    val plainD = new Pipelines.MaintainedNearDupIndex(sparkS, rootP, flushEvery = 100,
-      maxDeltas = 2)
-    val buckD = new Pipelines.MaintainedNearDupIndex(sparkS, rootB, flushEvery = 100,
-      sigBuckets = 4, maxDeltas = 2)
-    val batch2 = {
-      import sparkS.implicits._
-      batch.unionByName(Seq((8888L, "d1 d2 d3 d4 d5")).toDF("doc_id", "text"))
-    }
-    var a2: Seq[org.apache.spark.sql.Row] = null
-    var b2: Seq[org.apache.spark.sql.Row] = null
-    plainD.screenBatch(batch2, 1)(df => a2 = df.collect().toSeq)
-    buckD.screenBatch(batch2, 1)(df => b2 = df.collect().toSeq)
-    assert(a2 == b2, "bucketed + delta must not change decisions")
-    assert(a2.exists(r => r.getLong(0) == 8888L && r.getLong(1) >= 1L &&
-      !r.isNullAt(3) && r.getLong(3) == 7777L),
-      s"the clone must match the delta-resident copy: ${a2.filter(_.getLong(0) == 8888L)}")
-    // plan pin: the delta correction's base-member count (the only new
-    // corpus-side consumer) rides the bucket layout — semi-filtered scan
-    // + aggregate with NO exchange on the corpus-scale side
-    val pb = buckD.baseSignatures
-      .join(broadcast(dsig.select(col("band"), col("min_hash")).distinct()),
-        Seq("band", "min_hash"))
-      .groupBy(col("band"), col("min_hash")).agg(count(lit(1)).as("nb"))
-      .queryExecution.executedPlan.toString
-    assert(pb.contains("Bucketed: true"), pb)
-    // the corpus side (printed before the broadcast build of the tiny key
-    // set) must carry no exchange — the semi-filter and the aggregate both
-    // ride the stored bucket layout
-    assert(!pb.split("BroadcastExchange")(0).contains("Exchange hashpartitioning"),
-      s"the cap-correction count must not shuffle the corpus side:\n$pb")
-    val tbl = sparkS.catalog.listTables().collect()
-      .map(_.name).find(_.startsWith("graft_mndix_")).get
-    val numBuckets = sparkS.sql(s"DESCRIBE EXTENDED $tbl").collect()
-      .find(r => r.getString(0) == "Num Buckets").map(_.getString(1))
-    assert(numBuckets.contains("4"),
-      s"re-registration must use the STORED bucket count, got $numBuckets")
-  }
-
   test("custom stateful sessionizer (flatMapGroupsWithState) matches batch session logic (D19)") {
     val sparkS = spark
     import sparkS.implicits._
